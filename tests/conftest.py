@@ -29,15 +29,19 @@ SLOW_NODE_PATTERNS = (
     "tests/test_drift_incr.py",
     "tests/test_pii_incr.py",
     "tests/test_streaming.py",
-    # DuckDB-oracle-dominated parametrized compares (test_queries +
-    # test_entry_contract)
-    "[q_doc_bpe_encode]",
-    "[q_doc_bpe_merges]",
     # individual >20s stragglers (calm full-run durations)
-    "[q_doc_ndcg]",
-    "[q_doc_nb_classifier]",
     "test_expectation_checks_count_violations",
     "test_hamming_tie_breaks_on_neighbor_id",
+) + tuple(
+    # DuckDB-oracle-dominated parametrized compares (bpe) and >20 s
+    # stragglers (ndcg, nb_classifier); anchored to the oracle tests,
+    # so test_scale_lint still runs for these queries
+    f"{test}[{name}]"
+    for test in (
+        "test_queries.py::test_query_matches_oracle",
+        "test_entry_contract.py::test_oracle_runs_in_driver_duckdb",
+    )
+    for name in ("q_doc_bpe_encode", "q_doc_bpe_merges", "q_doc_ndcg", "q_doc_nb_classifier")
 )
 
 

@@ -1,10 +1,12 @@
 """pgoutput binary decoder golden tests (tier-1 analog of
 test/walex/decoder/decoder_test.exs:22-226: hand-built frames → exact
 expected structures, covering NULL cells, unchanged-TOAST cells and
-every replica-identity variant), plus the two-pass Spark pipeline
+every replica-identity variant), plus the Spark decode pipeline
 end-to-end."""
 
+import random
 import struct
+from datetime import timedelta
 
 import pytest
 
@@ -113,7 +115,7 @@ def test_decode_utf8_and_quotes():
     assert m["new"] == ['{"k": "véλ"}', "x,y\\z"]
 
 
-# -- two-pass Spark pipeline ---------------------------------------------
+# -- Spark decode pipeline ---------------------------------------------
 
 
 @pytest.fixture()
@@ -180,27 +182,137 @@ def test_decode_envelope_feeds_transforms(spark, frames):
     assert row.lsn == "0/3E8"
 
 
-def test_stamp_transactions_block_parallel_equivalence(spark, frames):
-    """The two-pass block prefix scan must stamp identically at any
-    block size: block_size=2 forces BEGINs and their changes into
-    different blocks (cross-block carry) and several empty-carry
-    blocks; compare against the single-block degenerate case."""
-    from walex_spark.sources.pgoutput import (
-        collect_registry, decode_frames, stamp_transactions,
-    )
+def _random_stream(seed: int) -> tuple[list[tuple[int, bytes]], tuple[int, int]]:
+    """A seeded pgoutput stream with every stamping edge: changes
+    before the first BEGIN, one long transaction (it spans several
+    range partitions), BEGINs while a transaction is open, changes
+    outside any transaction, TRUNCATE fan-out over a known, an unknown
+    and a known relation, changes of an unknown relation, LSNs past
+    2^32, sparse frame_idx and an unterminated tail. Also returns the
+    long transaction's first and last frame_idx."""
+    rng = random.Random(seed)
+    todo = (("id", 23, True), ("done", 16, False))
 
-    registry = collect_registry(frames)
-    decoded = decode_frames(frames, registry).cache()
-    key = ["op", "table", "xid", "lsn_lo", "change_idx"]
-    single = sorted(
-        (tuple(r[k] for k in key) for r in stamp_transactions(decoded, block_size=1 << 16).collect())
-    )
-    for bs in (1, 2, 3):
-        multi = sorted(
-            (tuple(r[k] for k in key) for r in stamp_transactions(decoded, block_size=bs).collect())
-        )
-        assert multi == single, f"block_size={bs} diverged"
-    assert single  # non-vacuous
+    def change(rel_id):
+        cells = (str(rng.randrange(100)), rng.choice(("a", None, UNCHANGED_TOAST)))
+        return rng.choice((
+            lambda: encode_insert(rel_id, cells),
+            lambda: encode_update(rel_id, cells),
+            lambda: encode_update(rel_id, cells, old=cells),
+            lambda: encode_update(rel_id, cells, key=(cells[0], None)),
+            lambda: encode_delete(rel_id, key=(cells[0], None)),
+            lambda: encode_delete(rel_id, old=cells),
+        ))()
+
+    def changes(k):
+        return [
+            encode_truncate((1, 99, 2)) if rng.random() < 0.1
+            else change(rng.choice((1, 2, 2, 99)))
+            for _ in range(k)
+        ]
+
+    payloads = [frame_relation(1, "user"), frame_relation(2, "todo", todo)]
+    payloads += changes(rng.randint(1, 3))  # before the first BEGIN
+    long_txn = rng.randrange(6)
+    for t in range(8):
+        lsn = ((t + 1) << 33) | rng.randrange(1 << 32)
+        ts = PG_EPOCH_US_2024 + t * 1_000_000
+        if t == long_txn:
+            long_at = len(payloads)
+        payloads.append(encode_begin(lsn, ts, 900 + t))
+        payloads += changes(40 if t == long_txn else rng.randint(0, 5))
+        if t == long_txn or rng.random() < 0.75:  # else the next BEGIN discards it
+            payloads.append(encode_commit(lsn, ts))
+            if rng.random() < 0.3:
+                payloads += changes(1)  # outside any transaction
+    payloads.append(encode_begin(1 << 40, PG_EPOCH_US_2024, 999))
+    payloads += changes(3)  # unterminated tail
+    idx = 0
+    stream = []
+    for p in payloads:
+        idx += rng.randint(1, 4)
+        stream.append((idx, p))
+    return stream, (stream[long_at][0], stream[long_at + 41][0])
+
+
+def _sequential_stamp(stream) -> list[tuple]:
+    """The reference's transaction loop (publisher.ex:57-77) over
+    decode_message, one frame at a time."""
+    from datetime import datetime
+
+    relations, out, txn, held = {}, [], None, []
+    for _, buf in stream:
+        m = decode_message(buf)
+        if m["op"] == "RELATION":
+            relations[m["relation_id"]] = m
+        elif m["op"] in ("BEGIN", "COMMIT"):
+            if m["op"] == "COMMIT" and txn is not None:
+                out += held
+            txn = m if m["op"] == "BEGIN" else None
+            held = []
+        elif txn is not None:
+            ids = m["relation_ids"] if m["op"] == "TRUNCATE" else [m["relation_id"]]
+            for rid in ids:
+                rel = relations.get(rid)
+                if rel is None:
+                    continue
+                names = [c["name"] for c in rel["columns"]]
+
+                def rec(cells):
+                    return None if cells is None else tuple(sorted(zip(names, cells)))
+
+                held.append((
+                    m["op"], rel["name"], txn["xid"], txn["final_lsn"],
+                    (txn["commit_ts"] - datetime(1970, 1, 1)) // timedelta(microseconds=1),
+                    len(held), rec(m.get("new")), rec(m.get("old")), rec(m.get("key")),
+                ))
+    return out
+
+
+def test_decode_envelope_partitioning_equivalence(spark):
+    """The ordered pass stamps exactly like a sequential walk, however
+    the frames arrive partitioned and however the range partitions cut
+    the transactions: each seeded stream is shuffled into 1, 2, 3 and
+    8 input partitions and decoded with 3-row Arrow batches, so held
+    transactions cross batches as well as partitions."""
+    from pyspark.sql import functions as F
+
+    from walex_spark.sources.pgoutput import collect_registry, decode_frames
+
+    def rec(c):
+        return F.when(F.col(c).isNotNull(), F.array_sort(F.map_entries(c)))
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        for seed in range(2):
+            stream, (lo, hi) = _random_stream(seed)
+            expected = sorted(_sequential_stamp(stream), key=repr)
+            shuffled = stream[:]
+            random.Random(seed).shuffle(shuffled)
+            for parts in (1, 2, 3, 8):
+                frames = spark.createDataFrame(
+                    shuffled, "frame_idx long, payload binary"
+                ).repartition(parts)
+                got = decode_envelope(frames).select(
+                    "op", "table", "xid",
+                    (F.col("lsn_hi") * (1 << 32) + F.col("lsn_lo")).alias("lsn"),
+                    F.unix_micros("commit_ts").alias("ts"), "change_idx",
+                    rec("record"), rec("old_record"), rec("key_record"),
+                ).collect()
+                got = sorted(
+                    (tuple(tuple(map(tuple, v)) if isinstance(v, list) else v for v in r)
+                     for r in got),
+                    key=repr,
+                )
+                assert got == expected, f"seed {seed}, {parts} input partitions"
+            # the long transaction really spans 3+ range partitions
+            decoded = decode_frames(frames, collect_registry(frames))
+            spans = decoded.filter(F.col("frame_idx").between(lo, hi)).select("part").distinct()
+            assert spans.count() >= min(3, spark.sparkContext.defaultParallelism)
+    finally:
+        spark.conf.set(conf, old)
 
 
 def test_arity_mismatch_fails_loud(spark):

@@ -170,19 +170,30 @@ def test_ann_ivf_candidate_join_is_equi(reports):
     assert r.broadcast_exchanges >= 1
 
 
-def test_pgoutput_stamp_isolates_serial_window(reports):
-    """The txn-stamp carry-forward over the full frame metadata must be
-    PARTITIONED (by frame-idx block): a 100 TB WAL backfill would
-    serialize on an unpartitioned Window.orderBy. The only serial
-    window allowed is the per-block carry over the metadata-sized
-    block table. Wide record maps rejoin via an equi-join."""
+def test_pgoutput_stamp_is_a_broadcast_carry(reports):
+    """Transaction stamping has no window and no shuffle: the decoded
+    rows meet the per-partition carry (one row per partition) in a
+    broadcast equi-join on the partition id."""
     r = reports("q_cdc_pgoutput_decode")
-    assert r.nested_loop_joins == 0
     tree = r.text.split("\n\n", 1)[0]
-    assert "Window" in tree
-    # the block-partitioned window is present in the detail section:
-    # its partition spec names __blk
-    assert "__blk" in r.text
+    assert "Window" not in r.text
+    assert r.nested_loop_joins == 0
+    assert "BroadcastHashJoin" in tree and r.broadcast_exchanges == 1
+    assert r.shuffle_exchanges == 0
+
+
+def test_pgoutput_decode_single_range_exchange(spark):
+    """decode_frames' only exchange range-partitions the frames on
+    frame_idx, so each partition's ordered walk sees one contiguous
+    stretch of the stream."""
+    from walex_spark.sources.pgoutput import decode_frames, encode_begin
+
+    frames = spark.createDataFrame(
+        [(0, encode_begin(1, 0, 7))], "frame_idx long, payload binary"
+    )
+    r = audit(decode_frames(frames, {}))
+    assert r.shuffle_exchanges == 1
+    assert re.search(r"rangepartitioning\(frame_idx#\d+L ASC", r.text)
 
 
 def test_scd2_single_shuffle(reports):

@@ -150,9 +150,6 @@ GLOBAL_WINDOW_OK = {
     "q_doc_vocab_topk",
     "q_doc_heavy_hitters",
     "q_doc_bpe_merges",      # metadata argmax per round
-    # the per-block boundary carry: a serial window over the
-    # metadata-sized block table, pinned separately in test_plans.py
-    "q_cdc_pgoutput_decode",
     # fractional-rank window over the |sources|-row apportionment
     # table (a bounded dimension by definition — see the operator)
     "q_doc_token_budget",

@@ -232,6 +232,13 @@ def lsn_column(hi_col: str = "lsn_hi", lo_col: str = "lsn_lo") -> Column:
     ).alias("lsn")
 
 
+def pk_column(key_cols: list[str], record_col: str = "record") -> Column:
+    """Null-safe primary key: the ``key_cols`` cells of the record (the
+    old record for a DELETE), NUL-joined, a missing cell as ''."""
+    rec = F.coalesce(F.col(record_col), F.col("old_record"))
+    return F.concat_ws("\x00", *[F.coalesce(rec.getItem(k), F.lit("")) for k in key_cols])
+
+
 def lsn_string(hi_col: str = "lsn_hi", lo_col: str = "lsn_lo") -> Column:
     """"HEX/HEX" formatting (event.ex:170-175)."""
     return F.concat(
@@ -357,17 +364,7 @@ def resolve_unchanged_toast(
     from walex_spark.model import UNCHANGED_TOAST
 
     keyed = df.withColumn("__lsn", lsn_column()).withColumn(
-        "__pk",
-        F.concat_ws(
-            "\x00",
-            *[
-                F.coalesce(
-                    F.coalesce(F.col(record_col), F.col("old_record")).getItem(k),
-                    F.lit(""),
-                )
-                for k in key_cols
-            ],
-        ),
+        "__pk", pk_column(key_cols, record_col)
     )
     w = (
         Window.partitionBy("table", "__pk")
@@ -430,17 +427,7 @@ def materialize_table_state(
     ``key_cols`` index into the record map (e.g. ["id"]).
     """
     keyed = df.withColumn("__lsn", lsn_column()).withColumn(
-        "__pk",
-        F.concat_ws(
-            "\x00",
-            *[
-                F.coalesce(
-                    F.coalesce(F.col(record_col), F.col("old_record")).getItem(k),
-                    F.lit(""),
-                )
-                for k in key_cols
-            ],
-        ),
+        "__pk", pk_column(key_cols, record_col)
     )
     ord_ = F.struct(F.col("__lsn").alias("l"), F.col("change_idx").alias("c"))
     trunc_pts = (

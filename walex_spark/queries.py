@@ -1739,26 +1739,24 @@ def q_cdc_toast_resolve(spark, sf_dir):
 )
 def q_cdc_pgoutput_decode(spark, sf_dir):
     """R1 at the wire level: events → binary pgoutput frames (one txn per
-    event: Begin/Insert-or-Update-or-Delete/Commit) → two-pass decode
-    (broadcast relation registry + Arrow-batched mapInPandas + serial
-    txn-stamp window) → canonical envelope. The oracle predicts the
-    decoded rows straight from the source table, so the whole binary
-    round trip is value-checked (decoder golden tests cover the
-    per-message layouts: tests/test_pgoutput.py)."""
+    event: Begin/Insert-or-Update-or-Delete/Commit) → decode (broadcast
+    relation registry + one ordered decode-and-stamp walk per range
+    partition + per-partition carry) → canonical envelope. The oracle
+    predicts the decoded rows straight from the source table, so the
+    whole binary round trip is value-checked (decoder golden tests
+    cover the per-message layouts: tests/test_pgoutput.py)."""
     from walex_spark.sources import pgoutput as P
 
     # shuffle-before-fan-out (the partition_by_doc discipline): the
     # events parquet is a single-writer export that scans as ONE
-    # partition, which would run the whole Python encode AND the
-    # downstream frame decode serially in one task. One narrow
+    # partition, which would run the whole Python encode serially in
+    # one task (the decode range-partitions on its own). One narrow
     # exchange of (event_id, user_id, event_type) buys full-cluster
-    # parallelism for both mapInPandas passes. The decoded frame is
-    # plan-stabilized inside decode_envelope (lazy localCheckpoint), so
-    # the stamping fan-out downstream cannot replicate this repartition
-    # subtree per consumer in the physical plan (with decoded.cache()
-    # the pre-AQE plan printed the child once per cache reference — a
-    # cache-state-dependent count that broke the pinned exchange
-    # budget, and the double Python decode cost real time).
+    # parallelism for the encode pass. The decoded rows are
+    # materialized once inside stamp_transactions (a local checkpoint
+    # filled by its collect of the per-partition summary rows), so the
+    # returned plan scans that checkpoint: the encode and decode
+    # subtrees, with their exchanges, run exactly once.
     n_part = spark.sparkContext.defaultParallelism
     ev = (
         _events(spark, sf_dir)
@@ -1797,8 +1795,7 @@ def q_cdc_pgoutput_decode(spark, sf_dir):
     )
     # registry pass runs over just the (single-row) Relation frame — the
     # synthesized data stream is then encoded exactly once, feeding the
-    # decode pass directly (decode_envelope caches the decoded rows for
-    # the stamping double-read)
+    # decode pass directly
     reg = P.collect_registry(rel)
     env = P.decode_envelope(rel.unionByName(frames), registry=reg)
     return env.select(

@@ -8,18 +8,25 @@ Truncate 'T', with TupleData cells 'n' (NULL) / 'u' (unchanged TOAST) /
 't' (text). Parity surface: lib/walex/decoder/decoder.ex:67-239 (same
 protocol, independent implementation).
 
-Spark-first decomposition — the reference decodes in one serial process;
-here the work splits into the natural parallel/serial parts:
+Spark-first decomposition — the reference decodes and assembles in one
+ordered pass (publisher.ex:57-77); here that pass runs once per range
+partition of the stream, and only its boundaries are serial:
 
-  1. ``decode_frames``  — mapInPandas over the binary payload column:
-     embarrassingly parallel, Arrow-batched, no state. Relation/Type
-     registry entries are collected FIRST from the (tiny) 'R'/'Y'
-     frames and broadcast into the decode closure — the "slowly-
-     changing broadcast state" form of publisher.ex:79-95's registry.
-  2. ``stamp_transactions`` — BEGIN/COMMIT bracketing becomes a
-     carry-forward window over the frame order. WAL is inherently
-     serial (SURVEY.md §7.4), so this single metadata window runs on
-     one partition; everything downstream repartitions freely.
+  1. ``collect_registry`` — Relation/Type entries, collected FIRST from
+     the (tiny) 'R'/'Y' frames and broadcast into the decode closure —
+     the "slowly-changing broadcast state" form of publisher.ex:79-95.
+  2. ``decode_frames`` — one range exchange on frame_idx, then an
+     Arrow-batched walk over each partition in frame order: each tag
+     is parsed by its one parser (the same ones ``decode_message``
+     uses), and each change is stamped with its transaction's xid,
+     commit_ts, lsn and change_idx as it goes. Changes of transactions
+     that never commit are dropped; one summary row per partition
+     records the transaction open at its end.
+  3. ``stamp_transactions`` — a driver-side prefix scan over those
+     summary rows (metadata-sized) finishes the rows a partition could
+     not: the head rows that continue the previous partition's open
+     transaction, and the tail rows whose COMMIT is in a later one. It
+     applies as a broadcast join on the partition id.
 
 Unknown relation ids are dropped, matching publisher.ex:124-126.
 """
@@ -31,7 +38,7 @@ from bisect import bisect_right
 from datetime import datetime, timedelta, timezone
 from typing import Any, Iterator
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -72,6 +79,127 @@ def _tuple_data(buf: bytes, pos: int) -> tuple[list[str | None], int]:
     return cells, pos
 
 
+# -- per-tag parsers -------------------------------------------------------
+# One function per message tag, each returning decode_message's dict;
+# decode_frames calls the same functions on its hot loop.
+
+
+def _begin(buf: bytes) -> dict[str, Any]:
+    final_lsn, ts, xid = struct.unpack_from(">QQI", buf, 1)
+    return {"op": "BEGIN", "final_lsn": final_lsn, "commit_ts": _pg_ts(ts), "xid": xid}
+
+
+def _commit(buf: bytes) -> dict[str, Any]:
+    _flags, commit_lsn, end_lsn, ts = struct.unpack_from(">BQQQ", buf, 1)
+    return {
+        "op": "COMMIT",
+        "commit_lsn": commit_lsn,
+        "end_lsn": end_lsn,
+        "commit_ts": _pg_ts(ts),
+    }
+
+
+def _origin(buf: bytes) -> dict[str, Any]:
+    (origin_lsn,) = struct.unpack_from(">Q", buf, 1)
+    name, _ = _cstring(buf, 9)
+    return {"op": "ORIGIN", "origin_lsn": origin_lsn, "origin_name": name}
+
+
+def _relation(buf: bytes) -> dict[str, Any]:
+    (rel_id,) = struct.unpack_from(">I", buf, 1)
+    pos = 5
+    namespace, pos = _cstring(buf, pos)
+    name, pos = _cstring(buf, pos)
+    replica_identity = buf[pos : pos + 1].decode()
+    pos += 1
+    (ncols,) = struct.unpack_from(">H", buf, pos)
+    pos += 2
+    cols = []
+    for _ in range(ncols):
+        flags = buf[pos]
+        pos += 1
+        cname, pos = _cstring(buf, pos)
+        type_oid, type_mod = struct.unpack_from(">Ii", buf, pos)
+        pos += 8
+        cols.append(
+            {
+                "name": cname,
+                "type": OID_TO_NAME.get(type_oid, str(type_oid)),
+                "is_key": bool(flags & 1),
+                "type_modifier": type_mod,
+            }
+        )
+    return {
+        "op": "RELATION",
+        "relation_id": rel_id,
+        "namespace": namespace or "pg_catalog",
+        "name": name,
+        "replica_identity": {"d": "default", "n": "nothing", "f": "all_columns", "i": "index"}[
+            replica_identity
+        ],
+        "columns": cols,
+    }
+
+
+def _type(buf: bytes) -> dict[str, Any]:
+    (type_id,) = struct.unpack_from(">I", buf, 1)
+    namespace, pos = _cstring(buf, 5)
+    name, _ = _cstring(buf, pos)
+    return {"op": "TYPE", "type_id": type_id, "namespace": namespace, "name": name}
+
+
+def _expect_new(buf: bytes, pos: int) -> None:
+    if buf[pos : pos + 1] != b"N":
+        raise ValueError(f"pgoutput {buf[0:1]!r} frame: expected 'N' tuple at byte {pos}")
+
+
+def _insert(buf: bytes) -> dict[str, Any]:
+    (rel_id,) = struct.unpack_from(">I", buf, 1)
+    _expect_new(buf, 5)
+    return {"op": "INSERT", "relation_id": rel_id, "new": _tuple_data(buf, 6)[0]}
+
+
+def _update(buf: bytes) -> dict[str, Any]:
+    (rel_id,) = struct.unpack_from(">I", buf, 1)
+    pos = 5
+    old = key = None
+    marker = buf[5:6]
+    if marker in (b"K", b"O"):
+        cells, pos = _tuple_data(buf, 6)
+        if marker == b"K":
+            key = cells
+        else:
+            old = cells
+    _expect_new(buf, pos)
+    new, _ = _tuple_data(buf, pos + 1)
+    return {"op": "UPDATE", "relation_id": rel_id, "new": new, "old": old, "key": key}
+
+
+def _delete(buf: bytes) -> dict[str, Any]:
+    (rel_id,) = struct.unpack_from(">I", buf, 1)
+    cells, _ = _tuple_data(buf, 6)
+    key = buf[5:6] == b"K"
+    return {
+        "op": "DELETE",
+        "relation_id": rel_id,
+        "old": None if key else cells,
+        "key": cells if key else None,
+    }
+
+
+def _truncate(buf: bytes) -> dict[str, Any]:
+    nrel, options = struct.unpack_from(">IB", buf, 1)
+    ids = struct.unpack_from(f">{nrel}I", buf, 6)
+    return {"op": "TRUNCATE", "relation_ids": list(ids), "options": options}
+
+
+_PARSERS = {
+    b"B": _begin, b"C": _commit, b"O": _origin, b"R": _relation, b"Y": _type,
+    b"I": _insert, b"U": _update, b"D": _delete, b"T": _truncate,
+}
+_CHANGES = {b"I", b"U", b"D", b"T"}  # tags whose frames become change rows
+
+
 def decode_message(buf: bytes) -> dict[str, Any]:
     """One pgoutput frame → a plain dict (tag-dependent fields).
 
@@ -79,97 +207,10 @@ def decode_message(buf: bytes) -> dict[str, Any]:
     PostgreSQL protocol docs, lenient only in that unknown tags return
     {'op': 'UNSUPPORTED'} like the reference's Unsupported struct.
     """
-    tag = buf[0:1]
-    if tag == b"B":
-        final_lsn, ts, xid = struct.unpack_from(">QQI", buf, 1)
-        return {"op": "BEGIN", "final_lsn": final_lsn, "commit_ts": _pg_ts(ts), "xid": xid}
-    if tag == b"C":
-        _flags, commit_lsn, end_lsn, ts = struct.unpack_from(">BQQQ", buf, 1)
-        return {
-            "op": "COMMIT",
-            "commit_lsn": commit_lsn,
-            "end_lsn": end_lsn,
-            "commit_ts": _pg_ts(ts),
-        }
-    if tag == b"O":
-        (origin_lsn,) = struct.unpack_from(">Q", buf, 1)
-        name, _ = _cstring(buf, 9)
-        return {"op": "ORIGIN", "origin_lsn": origin_lsn, "origin_name": name}
-    if tag == b"R":
-        (rel_id,) = struct.unpack_from(">I", buf, 1)
-        pos = 5
-        namespace, pos = _cstring(buf, pos)
-        name, pos = _cstring(buf, pos)
-        replica_identity = buf[pos : pos + 1].decode()
-        pos += 1
-        (ncols,) = struct.unpack_from(">H", buf, pos)
-        pos += 2
-        cols = []
-        for _ in range(ncols):
-            flags = buf[pos]
-            pos += 1
-            cname, pos = _cstring(buf, pos)
-            type_oid, type_mod = struct.unpack_from(">Ii", buf, pos)
-            pos += 8
-            cols.append(
-                {
-                    "name": cname,
-                    "type": OID_TO_NAME.get(type_oid, str(type_oid)),
-                    "is_key": bool(flags & 1),
-                    "type_modifier": type_mod,
-                }
-            )
-        return {
-            "op": "RELATION",
-            "relation_id": rel_id,
-            "namespace": namespace or "pg_catalog",
-            "name": name,
-            "replica_identity": {"d": "default", "n": "nothing", "f": "all_columns", "i": "index"}[
-                replica_identity
-            ],
-            "columns": cols,
-        }
-    if tag == b"Y":
-        (type_id,) = struct.unpack_from(">I", buf, 1)
-        pos = 5
-        namespace, pos = _cstring(buf, pos)
-        name, _ = _cstring(buf, pos)
-        return {"op": "TYPE", "type_id": type_id, "namespace": namespace, "name": name}
-    if tag == b"I":
-        (rel_id,) = struct.unpack_from(">I", buf, 1)
-        assert buf[5:6] == b"N"
-        cells, _ = _tuple_data(buf, 6)
-        return {"op": "INSERT", "relation_id": rel_id, "new": cells}
-    if tag == b"U":
-        (rel_id,) = struct.unpack_from(">I", buf, 1)
-        pos = 5
-        old = key = None
-        marker = buf[pos : pos + 1]
-        if marker in (b"K", b"O"):
-            cells, pos = _tuple_data(buf, pos + 1)
-            if marker == b"K":
-                key = cells
-            else:
-                old = cells
-            marker = buf[pos : pos + 1]
-        assert marker == b"N"
-        new, _ = _tuple_data(buf, pos + 1)
-        return {"op": "UPDATE", "relation_id": rel_id, "new": new, "old": old, "key": key}
-    if tag == b"D":
-        (rel_id,) = struct.unpack_from(">I", buf, 1)
-        marker = buf[5:6]
-        cells, _ = _tuple_data(buf, 6)
-        out = {"op": "DELETE", "relation_id": rel_id, "old": None, "key": None}
-        if marker == b"K":
-            out["key"] = cells
-        else:
-            out["old"] = cells
-        return out
-    if tag == b"T":
-        nrel, options = struct.unpack_from(">IB", buf, 1)
-        ids = struct.unpack_from(f">{nrel}I", buf, 6)
-        return {"op": "TRUNCATE", "relation_ids": list(ids), "options": options}
-    return {"op": "UNSUPPORTED", "tag": tag.decode("latin1")}
+    parse = _PARSERS.get(buf[0:1])
+    if parse is None:
+        return {"op": "UNSUPPORTED", "tag": buf[0:1].decode("latin1")}
+    return parse(buf)
 
 
 # -- frame encoders ---------------------------------------------------------
@@ -303,6 +344,9 @@ def registry_lookup(registry: dict, rel_id: int, frame_idx: int) -> dict | None:
     return versions[pos] if pos >= 0 else None
 
 
+# decode_frames' row kinds (column ``kind``); see decode_frames
+_HEAD, _DONE, _TAIL, _END = 0, 1, 2, 3
+
 _DECODED_SCHEMA = T.StructType(
     [
         T.StructField("frame_idx", T.LongType()),
@@ -329,6 +373,8 @@ _DECODED_SCHEMA = T.StructType(
         T.StructField("commit_ts", T.TimestampType()),
         T.StructField("lsn", T.LongType()),
         T.StructField("xid", T.LongType()),
+        T.StructField("change_idx", T.IntegerType()),
+        T.StructField("kind", T.IntegerType()),
     ]
 )
 
@@ -339,15 +385,36 @@ def decode_frames(
     payload_col: str = "payload",
     idx_col: str = "frame_idx",
 ) -> DataFrame:
-    """Pass 2: parallel decode of all frames against the broadcast
-    registry (Arrow-batched mapInPandas; no shuffle). Emits BEGIN/COMMIT
-    marker rows (consumed by stamp_transactions) and data rows with
-    positionally-zipped record maps (data_tuple_to_map,
-    publisher.ex:247-279). Each frame resolves the relation version in
-    effect at ITS stream position (registry_lookup) — a mid-stream
-    schema change never re-decodes earlier frames against the newer
-    schema. Unknown / not-yet-announced relations are skipped
-    (publisher.ex:124-126)."""
+    """Pass 2: decode and stamp the frames in one ordered walk per
+    partition, against the broadcast registry.
+
+    The one exchange range-partitions the frames on ``idx_col``; each
+    partition is sorted, so it holds one contiguous stretch of the
+    stream. The walk is the reference's transaction loop
+    (publisher.ex:57-77): BEGIN opens a transaction, each change is
+    stamped with its xid, commit_ts, lsn and change_idx, and COMMIT
+    makes the changes final. A BEGIN while a transaction is open
+    discards it; a change outside any transaction is dropped. Only the
+    open transaction's changes are held across Arrow batches. Cells zip
+    against the relation version in effect at the change's own position
+    (registry_lookup, publisher.ex:247-279); changes of unknown
+    relations are skipped (publisher.ex:124-126).
+
+    The walk does not know the transaction open where its partition
+    starts, so ``kind`` says how far a row is stamped:
+
+      - ``_HEAD``: a change before the partition's first BEGIN/COMMIT.
+        It continues the incoming transaction: xid, commit_ts and lsn
+        are null and change_idx counts from 0 in this partition.
+      - ``_DONE``: a change whose transaction committed here.
+      - ``_TAIL``: a change of the transaction open at the end; it
+        stands if that transaction commits in a later partition.
+      - ``_END``: one row per partition, its state at the end. ``op``
+        is what ended the incoming transaction ("BEGIN", "COMMIT", or
+        null if nothing did); xid, commit_ts and lsn are the open local
+        transaction and change_idx the open transaction's change count.
+
+    stamp_transactions finishes the HEAD and TAIL rows from the END rows."""
 
     def zip_cells(rel: dict, cells: list | None):
         if cells is None:
@@ -365,230 +432,142 @@ def decode_frames(
             )
         return {c["name"]: v for c, v in zip(cols, cells)}
 
-    def decode_part(batches: Iterator) -> Iterator:
-        # Columnar accumulation: 12 parallel lists instead of a dict per
-        # row — pd.DataFrame(list-of-dicts) was the hot spot (~2× the
-        # whole decode). BEGIN/COMMIT (the bulk of a txn-per-row stream)
-        # parse inline without the decode_message dict, and commit_ts
-        # stays integer µs until one vectorized to_datetime at the end.
+    names = [f.name for f in _DECODED_SCHEMA.fields]
+    ts_pos = names.index("commit_ts")
+
+    def to_pandas(rows: list[tuple], kinds: list[int]):
+        # Columnar: one transpose of the row tuples, not a dict per row.
+        # Object dtype on every nullable column: equal-length nested
+        # lists would collapse into a 2-D ndarray, and all-None columns
+        # would infer float64 NaN; both break Arrow conversion.
         import pandas as pd
-        import struct as _s
 
-        names = [f.name for f in _DECODED_SCHEMA.fields]
+        cols = [pd.Series(c, dtype="object") for c in zip(*rows)] or [
+            pd.Series([], dtype="object") for _ in range(len(names) - 1)
+        ]
+        cols[ts_pos] = pd.to_datetime(cols[ts_pos])
+        return pd.DataFrame(dict(zip(names, cols + [pd.Series(kinds, dtype="int32")])))
+
+    def decode_part(batches: Iterator) -> Iterator:
+        incoming = (None, None, None)  # the transaction open at the partition's start
+        txn = incoming  # (commit_ts, lsn, xid) of the open transaction, or None
+        n = 0  # changes of txn so far
+        head_end = None  # "BEGIN" / "COMMIT": what ended the incoming transaction
+        held: list[tuple] = []  # txn's changes, not final until its COMMIT
         for pdf in batches:
-            c_idx: list = []
-            c_sub: list = []
-            c_op: list = []
-            c_schema: list = []
-            c_table: list = []
-            c_cols: list = []
-            c_rec: list = []
-            c_old: list = []
-            c_key: list = []
-            c_ts: list = []
-            c_lsn: list = []
-            c_xid: list = []
-            for idx, payload in zip(
-                pdf[idx_col].to_numpy(), pdf[payload_col].to_numpy()
-            ):
+            out: list[tuple] = []
+            kinds: list[int] = []
+            for idx, payload in zip(pdf[idx_col].to_numpy(), pdf[payload_col].to_numpy()):
                 buf = bytes(payload)
-                tag = buf[0]
-                if tag == 66:  # 'B'
-                    final_lsn, ts, xid = _s.unpack_from(">QQI", buf, 1)
-                    c_idx.append(idx); c_sub.append(0); c_op.append("BEGIN")
-                    c_schema.append(None); c_table.append(None); c_cols.append(None)
-                    c_rec.append(None); c_old.append(None); c_key.append(None)
-                    c_ts.append(ts); c_lsn.append(final_lsn); c_xid.append(xid)
+                tag = buf[0:1]
+                if tag == b"B" or tag == b"C":
+                    if txn is incoming:
+                        head_end = "BEGIN" if tag == b"B" else "COMMIT"
+                    if tag == b"C" and txn is not None:
+                        out += held
+                        kinds += [_HEAD if txn is incoming else _DONE] * len(held)
+                    held, txn, n = [], None, 0
+                    if tag == b"B":
+                        m = _begin(buf)
+                        txn = (m["commit_ts"], m["final_lsn"], m["xid"])
                     continue
-                if tag == 67:  # 'C'
-                    _flags, commit_lsn, _end, ts = _s.unpack_from(">BQQQ", buf, 1)
-                    c_idx.append(idx); c_sub.append(0); c_op.append("COMMIT")
-                    c_schema.append(None); c_table.append(None); c_cols.append(None)
-                    c_rec.append(None); c_old.append(None); c_key.append(None)
-                    c_ts.append(ts); c_lsn.append(commit_lsn); c_xid.append(None)
+                if txn is None or tag not in _CHANGES:
                     continue
-                # 'I' and the N-only 'U' form (the overwhelmingly common
-                # data frames) parse inline; every other shape falls
-                # through to the golden-tested decode_message dispatch
-                if tag == 73 and buf[5] == 78:  # 'I' — rel_id, 'N', tuple
-                    (rel_id,) = _s.unpack_from(">I", buf, 1)
+                m = _PARSERS[tag](buf)
+                if tag == b"T":  # one row per relation, at its sub_idx
+                    targets = enumerate(m["relation_ids"])
+                else:
+                    targets = ((0, m["relation_id"]),)
+                for sub, rel_id in targets:
                     rel = registry_lookup(registry, rel_id, idx)
                     if rel is None:
                         continue
-                    cells, _ = _tuple_data(buf, 6)
-                    c_idx.append(idx); c_sub.append(0); c_op.append("INSERT")
-                    c_schema.append(rel["namespace"]); c_table.append(rel["name"])
-                    c_cols.append(rel["columns"])
-                    c_rec.append(zip_cells(rel, cells))
-                    c_old.append(None); c_key.append(None)
-                    c_ts.append(None); c_lsn.append(None); c_xid.append(None)
-                    continue
-                if tag == 85 and buf[5] == 78:  # 'U' without old/key tuple
-                    (rel_id,) = _s.unpack_from(">I", buf, 1)
-                    rel = registry_lookup(registry, rel_id, idx)
-                    if rel is None:
-                        continue
-                    cells, _ = _tuple_data(buf, 6)
-                    c_idx.append(idx); c_sub.append(0); c_op.append("UPDATE")
-                    c_schema.append(rel["namespace"]); c_table.append(rel["name"])
-                    c_cols.append(rel["columns"])
-                    c_rec.append(zip_cells(rel, cells))
-                    c_old.append(None); c_key.append(None)
-                    c_ts.append(None); c_lsn.append(None); c_xid.append(None)
-                    continue
-                msg = decode_message(buf)
-                op = msg["op"]
-                if op in ("UPDATE", "DELETE"):
-                    rel = registry_lookup(registry, msg["relation_id"], idx)
-                    if rel is None:
-                        continue
-                    c_idx.append(idx); c_sub.append(0); c_op.append(op)
-                    c_schema.append(rel["namespace"]); c_table.append(rel["name"])
-                    c_cols.append(rel["columns"])
-                    c_rec.append(zip_cells(rel, msg.get("new")))
-                    c_old.append(zip_cells(rel, msg.get("old")))
-                    c_key.append(zip_cells(rel, msg.get("key")))
-                    c_ts.append(None); c_lsn.append(None); c_xid.append(None)
-                elif op == "TRUNCATE":
-                    for sub, rid in enumerate(msg["relation_ids"]):
-                        rel = registry_lookup(registry, rid, idx)
-                        if rel is None:
-                            continue
-                        c_idx.append(idx); c_sub.append(sub); c_op.append("TRUNCATE")
-                        c_schema.append(rel["namespace"]); c_table.append(rel["name"])
-                        c_cols.append(None); c_rec.append(None); c_old.append(None)
-                        c_key.append(None); c_ts.append(None); c_lsn.append(None)
-                        c_xid.append(None)
-                # RELATION/TYPE/ORIGIN/UNSUPPORTED: not data rows
-            ts_col = pd.Timestamp("2000-01-01") + pd.to_timedelta(
-                pd.Series(c_ts, dtype="float64"), unit="us"
-            )
-            # force object dtype on every nullable column: equal-length
-            # nested lists would collapse into a 2-D ndarray, and all-None
-            # columns (e.g. record in a BEGIN/COMMIT-only partition) would
-            # infer float64 NaN — both break Arrow conversion
-            obj = lambda v: pd.Series(v, dtype="object")
-            yield pd.DataFrame(
-                dict(
-                    zip(
-                        names,
-                        (c_idx, c_sub, c_op, obj(c_schema), obj(c_table),
-                         obj(c_cols), obj(c_rec), obj(c_old), obj(c_key),
-                         ts_col, obj(c_lsn), obj(c_xid)),
+                    held.append(
+                        (idx, sub, m["op"], rel["namespace"], rel["name"],
+                         None if tag == b"T" else rel["columns"],
+                         zip_cells(rel, m.get("new")), zip_cells(rel, m.get("old")),
+                         zip_cells(rel, m.get("key")), *txn, n)
                     )
-                )
-            )
+                    n += 1
+            yield to_pandas(out, kinds)
+        open_txn = (None,) * 4 if txn is None else (*txn, n)
+        end = (None, None, head_end) + (None,) * 6 + open_txn
+        kinds = [_HEAD if txn is incoming else _TAIL] * len(held) + [_END]
+        yield to_pandas(held + [end], kinds)
 
-    return frames.mapInPandas(decode_part, _DECODED_SCHEMA)
+    n_part = frames.sparkSession.sparkContext.defaultParallelism
+    return (
+        frames.select(idx_col, payload_col)
+        .repartitionByRange(n_part, idx_col)
+        .sortWithinPartitions(idx_col)
+        .mapInPandas(decode_part, _DECODED_SCHEMA)
+        .withColumn("part", F.spark_partition_id())
+    )
 
 
-def stamp_transactions(decoded: DataFrame, block_size: int = 1 << 16) -> DataFrame:
-    """BEGIN/COMMIT bracketing → per-change (xid, commit_ts, lsn,
-    change_idx), emitted as the canonical envelope.
+_CARRY_SCHEMA = (
+    "part int, carry_commit_us long, carry_lsn long, carry_xid long, "
+    "carry_n int, head_ok boolean, tail_ok boolean"
+)
 
-    The BEGIN carry-forward is a two-pass prefix scan, so a 100 TB WAL
-    backfill never serializes on one partition:
 
-      1. frames bucket into fixed ``block_size`` ranges of frame_idx;
-         within each block a partitioned window carries the last BEGIN
-         forward — fully parallel across blocks;
-      2. each block's LAST BEGIN aggregates to one row per block
-         (metadata-sized: ≤ n_frames/block_size rows); a serial window
-         over that tiny table computes the carry entering each block,
-         which broadcast-joins back and fills rows before their block's
-         first BEGIN.
+def _carry(ends: list) -> list[tuple]:
+    """Prefix scan over decode_frames' END rows, in partition order:
+    per partition, the transaction its HEAD rows continue (commit_ts
+    µs, lsn, xid, change_idx offset) and whether its HEAD and TAIL
+    rows commit. A transaction may span any number of partitions; its
+    fate is known at the partition whose walk sees its COMMIT (or the
+    BEGIN that discards it)."""
+    head_ok, tail_ok = 5, 6  # flag slots of an output row
+    out = []
+    txn = None  # (commit_us, lsn, xid, n) open where the next partition starts
+    waiting: list[tuple[list, int]] = []  # (row, flag slot) that commit with txn
+    for e in sorted(ends, key=lambda e: e.part):
+        row = [e.part, *(txn or (None,) * 4), False, False]
+        out.append(row)
+        if e.op is None:  # no BEGIN/COMMIT: the whole partition continues txn
+            if txn is not None:
+                waiting.append((row, head_ok))
+                txn = (*txn[:3], txn[3] + e.change_idx)
+            continue
+        if e.op == "COMMIT" and txn is not None:
+            for r, slot in [*waiting, (row, head_ok)]:
+                r[slot] = True
+        txn, waiting = None, []
+        if e.xid is not None:
+            txn = (e.commit_us, e.lsn, e.xid, e.change_idx)
+            waiting = [(row, tail_ok)]
+    return [tuple(r) for r in out]
 
-    A microbatch-sized input (< block_size frames) collapses to a
-    single block — pass 2 degenerates to a one-row no-op. Only the
-    narrow metadata projection (frame_idx, op, xid, ts, lsn) flows
-    through the scan; wide rows (record maps, column arrays) rejoin the
-    stamped metadata on (frame_idx, sub_idx), a plain parallel
-    equi-join. Only changes of COMMITTED transactions survive (an
-    unterminated tail is dropped, like the reference on restart)."""
-    # ONE explicit hash exchange on __blk, shared by its three plan
-    # consumers (the local carry window, the per-block last-BEGIN
-    # aggregate, and the block-list distinct): each keyed operation
-    # below runs on the already-established partitioning, so exchange
-    # reuse collapses what used to be three independent shuffles of
-    # the metadata projection into one.
-    meta = (
-        decoded.select(
-            "frame_idx", "sub_idx", "op", "xid", "commit_ts", "lsn"
-        )
-        .withColumn("__blk", (F.col("frame_idx") / F.lit(block_size)).cast("long"))
-        .repartition(
-            decoded.sparkSession.sparkContext.defaultParallelism, F.col("__blk")
-        )
+
+def stamp_transactions(decoded: DataFrame) -> DataFrame:
+    """decode_frames' rows → the canonical envelope: per change (xid,
+    commit_ts, lsn, change_idx), only changes of COMMITTED transactions
+    (an unterminated tail is dropped, like the reference on restart).
+
+    The decoded rows are materialized once (a local checkpoint, filled
+    by the collect below: the one eager action here), because they are
+    read twice. The END rows, one per partition, are collected and
+    ``_carry`` scans them on the driver; the result joins back on the
+    partition id as a broadcast, which stamps the HEAD rows and keeps
+    the HEAD and TAIL rows whose transaction committed. No window and
+    no shuffle: the only serial step is the scan over one row per
+    partition."""
+    decoded = decoded.localCheckpoint(eager=False)
+    ends = (
+        decoded.filter(F.col("kind") == _END)
+        .select("part", "op", F.unix_micros("commit_ts").alias("commit_us"),
+                "lsn", "xid", "change_idx")
+        .collect()
     )
-    begin = F.when(F.col("op") == "BEGIN", F.struct("xid", "commit_ts", "lsn"))
-    wloc = Window.partitionBy("__blk").orderBy("frame_idx", "sub_idx").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    carry = decoded.sparkSession.createDataFrame(_carry(ends), _CARRY_SCHEMA)
+    kind = F.col("kind")
+    head = kind == _HEAD
+    rows = decoded.join(F.broadcast(carry), "part").filter(
+        (kind == _DONE) | (head & F.col("head_ok")) | ((kind == _TAIL) & F.col("tail_ok"))
     )
-    local = meta.withColumn("__txn_loc", F.last(begin, ignorenulls=True).over(wloc))
-    # pass 2: last BEGIN per block (tiny) → carry entering each block
-    blk_begin = (
-        meta.filter(F.col("op") == "BEGIN")
-        .groupBy("__blk")
-        .agg(
-            F.max_by(
-                F.struct("xid", "commit_ts", "lsn"),
-                F.struct("frame_idx", "sub_idx"),
-            ).alias("__blk_begin")
-        )
-    )
-    wblk = Window.orderBy("__blk").rowsBetween(Window.unboundedPreceding, -1)
-    carry = (
-        meta.select("__blk")
-        .distinct()
-        .join(blk_begin, "__blk", "left")
-        .withColumn("__carry", F.last("__blk_begin", ignorenulls=True).over(wblk))
-        .select("__blk", "__carry")
-    )
-    # the stamped metadata feeds TWO consumers (the committed-xid set
-    # and the data-row stamp), and its subtree tops out below a
-    # broadcast join — exchange reuse cannot dedup it, so without the
-    # checkpoint the whole carry pipeline executed once per consumer
-    # (it appeared twice in the physical plan). Same narrow-projection
-    # bound as the decoded checkpoint above: O(input frames) metadata
-    # columns only, microbatch-bounded in streaming.
-    stamped = (
-        local.join(F.broadcast(carry), "__blk")
-        .withColumn(
-            "__txn", F.coalesce(F.col("__txn_loc"), F.col("__carry"))
-        )
-        .localCheckpoint(eager=False)
-    )
-    committed = (
-        stamped.filter(F.col("op") == "COMMIT")
-        .select(F.col("__txn.xid").alias("c_xid"))
-        .distinct()
-    )
-    data_meta = stamped.filter(~F.col("op").isin("BEGIN", "COMMIT"))
-    # no broadcast hint: committed is one row per txn — microbatch-tiny
-    # in streaming (AQE broadcasts it), but WAL-sized on a backfill
-    # where a forced broadcast would OOM; the xid equi-join lets AQE
-    # pick per run
-    data_meta = data_meta.join(
-        committed, data_meta["__txn.xid"] == committed["c_xid"], "left_semi"
-    )
-    wtxn = Window.partitionBy("__txn.xid").orderBy("frame_idx", "sub_idx")
-    data_meta = data_meta.select(
-        F.col("frame_idx").alias("m_frame_idx"),
-        F.col("sub_idx").alias("m_sub_idx"),
-        F.col("__txn.commit_ts").alias("m_commit_ts"),
-        # bitwise split, not division: double math would lose precision
-        # past 2^53 and a real WAL position exceeds 2^31 routinely
-        F.shiftrightunsigned(F.col("__txn.lsn"), 32).alias("m_lsn_hi"),
-        F.col("__txn.lsn").bitwiseAND(F.lit(4294967295)).alias("m_lsn_lo"),
-        F.col("__txn.xid").alias("m_xid"),
-        (F.row_number().over(wtxn) - F.lit(1)).alias("m_change_idx"),
-    )
-    wide = decoded.filter(~F.col("op").isin("BEGIN", "COMMIT"))
-    return wide.join(
-        data_meta,
-        (wide["frame_idx"] == data_meta["m_frame_idx"])
-        & (wide["sub_idx"] == data_meta["m_sub_idx"]),
-    ).select(
+    lsn = F.when(head, F.col("carry_lsn")).otherwise(F.col("lsn"))
+    return rows.select(
         "op",
         "schema",
         "table",
@@ -596,37 +575,30 @@ def stamp_transactions(decoded: DataFrame, block_size: int = 1 << 16) -> DataFra
         "record",
         "old_record",
         "key_record",
-        F.col("m_commit_ts").alias("commit_ts"),
-        F.col("m_lsn_hi").alias("lsn_hi"),
-        F.col("m_lsn_lo").alias("lsn_lo"),
-        F.col("m_xid").alias("xid"),
-        F.col("m_change_idx").alias("change_idx"),
+        F.when(head, F.timestamp_micros("carry_commit_us"))
+        .otherwise(F.col("commit_ts"))
+        .alias("commit_ts"),
+        # bitwise split, not division: double math would lose precision
+        # past 2^53 and a real WAL position exceeds 2^31 routinely
+        F.shiftrightunsigned(lsn, 32).alias("lsn_hi"),
+        lsn.bitwiseAND(F.lit(4294967295)).alias("lsn_lo"),
+        F.when(head, F.col("carry_xid")).otherwise(F.col("xid")).alias("xid"),
+        (F.col("change_idx") + F.when(head, F.col("carry_n")).otherwise(0)).alias("change_idx"),
     )
 
 
 def decode_envelope(
     frames: DataFrame,
     payload_col: str = "payload",
-    cache_decoded: bool = True,
     registry: dict[int, dict] | None = None,
 ) -> DataFrame:
-    """frames(frame_idx, payload) → canonical change envelope: the full
-    two-pass pipeline (registry collect → parallel decode → txn stamp).
+    """frames(frame_idx, payload) → canonical change envelope: registry
+    collect → one ordered decode-and-stamp pass per range partition
+    (decode_frames) → the per-partition carry (stamp_transactions).
 
-    ``cache_decoded`` materializes the decoded rows once via a lazy
-    ``localCheckpoint``: the stamping stage reads them twice (narrow
-    metadata pass + wide rejoin), and without it each read would re-run
-    the Python decode. localCheckpoint rather than ``cache()``,
-    deliberately, on both grounds the drift monitors documented:
-    (1) the downstream physical plan scans a pinned RDD instead of
-    printing the full decode subtree once per cache reference, so the
-    plan — and the pinned exchange budget — is independent of cache
-    manager state; (2) measured at sf0.1 the cache path cost ~1 s more
-    per run (InMemoryRelation columnar encode of the binary payload
-    rows vs plain RDD block storage). The tradeoff is honest: lineage
-    is truncated, so losing a checkpoint block means re-running the
-    query, not recomputing a partition — acceptable for a bounded
-    microbatch frame. Size is bounded by the microbatch, evicted LRU.
+    Two eager actions: the registry collect (skipped when ``registry``
+    is given) and stamp_transactions' collect of the per-partition END
+    rows, which also materializes the decoded rows for the output.
 
     ``registry``: pass a pre-collected relation registry (e.g. from
     ``collect_registry`` over just the Relation/Type frames, or a
@@ -635,7 +607,4 @@ def decode_envelope(
     synthesized/streamed source it's a whole extra materialization."""
     if registry is None:
         registry = collect_registry(frames, payload_col)
-    decoded = decode_frames(frames, registry, payload_col)
-    if cache_decoded:
-        decoded = decoded.localCheckpoint(eager=False)
-    return stamp_transactions(decoded)
+    return stamp_transactions(decode_frames(frames, registry, payload_col))

@@ -36,13 +36,10 @@ def prep_delta_input(
     NUL-joined null-safe key, the canonical 64-bit lsn
     (transforms.lsn_column), I/U/D only. ``payload`` is the one
     operator-specific column (already aliased)."""
-    from walex_spark.operators.transforms import lsn_column
+    from walex_spark.operators.transforms import lsn_column, pk_column
 
-    rec = F.coalesce(F.col(record_col), F.col("old_record"))
     return env.select(
-        F.concat_ws(
-            "\x00", *[F.coalesce(rec.getItem(k), F.lit("")) for k in key_cols]
-        ).alias("__pk"),
+        pk_column(key_cols, record_col).alias("__pk"),
         F.col("op"),
         lsn_column().alias("lsn"),
         F.col("change_idx"),

@@ -40,20 +40,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from walex_spark.operators.transforms import materialize_table_state
-
-
-def _pk_expr(key_cols: list[str], record_col: str = "record"):
-    return F.concat_ws(
-        "\x00",
-        *[
-            F.coalesce(
-                F.coalesce(F.col(record_col), F.col("old_record")).getItem(k),
-                F.lit(""),
-            )
-            for k in key_cols
-        ],
-    )
+from walex_spark.operators.transforms import materialize_table_state, pk_column
 
 
 @dataclass
@@ -88,7 +75,7 @@ class ParquetStateSink:
         ]
 
     def _bucket_col(self):
-        return F.pmod(F.hash(_pk_expr(self.key_cols, self.record_col)), F.lit(self.num_buckets))
+        return F.pmod(F.hash(pk_column(self.key_cols, self.record_col)), F.lit(self.num_buckets))
 
     def state(self, spark: SparkSession) -> DataFrame:
         """Current snapshot (envelope-shaped rows, one per live key)."""

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from walex_spark.operators.transforms import lsn_column, pk_column
+
 OUT_SCHEMA = (
     "pk STRING, record_json STRING, valid_from_lsn BIGINT, "
     "valid_to_lsn BIGINT, closed_by_delete BOOLEAN"
@@ -33,14 +35,10 @@ def scd2_stream(env: DataFrame, key_cols: list[str], record_col: str = "record")
     """Envelope stream → stream of CLOSED SCD2 interval rows."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    rec = F.coalesce(F.col(record_col), F.col("old_record"))
     pre = env.select(
-        F.concat_ws(
-            "\x00", *[F.coalesce(rec.getItem(k), F.lit("")) for k in key_cols]
-        ).alias("__pk"),
+        pk_column(key_cols, record_col).alias("__pk"),
         F.col("op"),
-        (F.col("lsn_hi").cast("bigint") * F.lit(4294967296).cast("bigint")
-         + F.col("lsn_lo").cast("bigint")).alias("lsn"),
+        lsn_column(),
         F.col("change_idx"),
         F.to_json(F.col(record_col)).alias("rec_json"),
     ).filter(F.col("op").isin("INSERT", "UPDATE", "DELETE"))

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from walex_spark.operators.transforms import lsn_column
+
 TXN_SCHEMA = T.StructType(
     [
         T.StructField("xid", T.LongType(), False),
@@ -42,8 +44,7 @@ def assemble_transactions(env: DataFrame) -> DataFrame:
     shuffle is the only exchange; ordering inside a group is a local
     sort (sort_array on the collected structs, keyed by (lsn, idx)).
     """
-    lsn = F.col("lsn_hi").cast("long") * F.lit(4294967296) + F.col("lsn_lo").cast("long")
-    keyed = env.withColumn("__lsn", lsn)
+    keyed = env.withColumn("__lsn", lsn_column())
     def _by_wal_order(a, b):
         # struct contains maps → default struct ordering unavailable;
         # compare explicitly on (lsn, change_idx)

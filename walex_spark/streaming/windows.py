@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from walex_spark.operators.transforms import pk_column
+
 
 def _maybe_watermark(env: DataFrame, watermark: str | None) -> DataFrame:
     if watermark and env.isStreaming:
@@ -115,16 +117,7 @@ def correlate_changes(
     Returns one row per (change, matching insert): op, table, pk,
     change_ts, insert_ts, lag_seconds, change lsn ordering columns.
     """
-    pk = F.concat_ws(
-        "\x00",
-        *[
-            F.coalesce(
-                F.coalesce(F.col(record_col), F.col("old_record")).getItem(k),
-                F.lit(""),
-            )
-            for k in key_cols
-        ],
-    )
+    pk = pk_column(key_cols, record_col)
     # time-bucket the join key: a ``within``-sized window spans at most
     # 2 buckets of that size, so the change side probes exactly its own
     # bucket and the previous one. This bounds join fan-out to
