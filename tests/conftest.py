@@ -20,15 +20,17 @@ from walex_spark.session import get_spark
 # Spark vs DuckDB there) plus the two BPE oracle params whose cost is
 # the DUCKDB side (q_doc_bpe_encode's oracle ran 990 s — 16 minutes of
 # the 70 — in one recursive-CTE DuckDB execution), plus four >20 s
-# stragglers. Node-id substring match keeps the list in one reviewable
-# place.
+# stragglers. Whole files match on the file name, single tests on a
+# node-id substring; both lists stay in one reviewable place.
 # ---------------------------------------------------------------------------
-SLOW_NODE_PATTERNS = (
+SLOW_FILES = (
     # twin e2e / replay / compaction files (wholesale)
-    "tests/test_dedup_incr.py",
-    "tests/test_drift_incr.py",
-    "tests/test_pii_incr.py",
-    "tests/test_streaming.py",
+    "test_dedup_incr.py",
+    "test_drift_incr.py",
+    "test_pii_incr.py",
+    "test_streaming.py",
+)
+SLOW_NODE_PATTERNS = (
     # individual >20s stragglers (calm full-run durations)
     "test_expectation_checks_count_violations",
     "test_hamming_tie_breaks_on_neighbor_id",
@@ -61,9 +63,10 @@ def pytest_collection_modifyitems(config, items):
         reason="slow tier — set WALEX_SLOW_TESTS=1 to run"
     )
     for item in items:
-        nodeid = item.nodeid
-        if "slow" in item.keywords or any(
-            p in nodeid for p in SLOW_NODE_PATTERNS
+        if (
+            "slow" in item.keywords
+            or item.path.name in SLOW_FILES
+            or any(p in item.nodeid for p in SLOW_NODE_PATTERNS)
         ):
             item.add_marker(skip)
 

@@ -8,7 +8,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from walex_spark.model import CHANGE_ENVELOPE_SCHEMA
-from walex_spark.operators.scd import apply_cdc_snapshot, scd2_history
+from walex_spark.operators.scd import (
+    apply_cdc_snapshot,
+    maintain_group_counts,
+    maintain_group_sums,
+    maintain_term_postings,
+    scd2_history,
+)
 
 TS = dt.datetime(2024, 1, 15, 10, 30)
 
@@ -514,3 +520,66 @@ def test_postings_delta_stream_nbsp_matches_batch(spark, tmp_path):
         for r in maintain_term_postings(env, ["id"], "t").collect()
     }
     assert folded == batch == {"foo bar": (1, 1), "baz": (1, 1)}
+
+
+def _group_delta_stream_run(spark, env, tmp_path):
+    from walex_spark.sources.envelope import read_envelope_stream
+    from walex_spark.streaming.ivm import group_delta_stream
+
+    src = str(tmp_path / "env")
+    env.write.parquet(src)
+    q = (
+        group_delta_stream(read_envelope_stream(spark, src), ["id"], "g")
+        .writeStream.format("memory")
+        .queryName("truncate_deltas")
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _collect(build):
+    return lambda spark, env, tmp_path: build(spark, env).collect()
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        _collect(lambda spark, env: scd2_history(env, ["id"])),
+        _collect(
+            lambda spark, env: apply_cdc_snapshot(
+                spark.createDataFrame([("9", "keep")], ["id", "v"]), env, ["id"], ["v"]
+            )
+        ),
+        _collect(lambda spark, env: maintain_group_counts(env, ["id"], "g")),
+        _collect(lambda spark, env: maintain_group_sums(env, ["id"], "g", "m")),
+        _collect(lambda spark, env: maintain_term_postings(env, ["id"], "v")),
+        _group_delta_stream_run,
+    ],
+    ids=[
+        "scd2_history",
+        "apply_cdc_snapshot",
+        "maintain_group_counts",
+        "maintain_group_sums",
+        "maintain_term_postings",
+        "group_delta_stream",
+    ],
+)
+def test_history_operators_raise_on_truncate(spark, tmp_path, run):
+    """A TRUNCATE has no primary key: the per-key history operators
+    fail on it instead of folding it in as a keyless change (only
+    materialize_table_state applies TRUNCATE)."""
+    rec = {"v": "a", "g": "x", "m": "1"}
+    env = spark.createDataFrame(
+        [
+            _change("INSERT", 10, rec),
+            ("TRUNCATE", "public", "user", None, None, None, None, TS, 0, 20, 920, 0),
+            _change("INSERT", 30, rec, key="2"),
+        ],
+        CHANGE_ENVELOPE_SCHEMA,
+    )
+    with pytest.raises(Exception, match="TRUNCATE in a changelog"):
+        run(spark, env, tmp_path)

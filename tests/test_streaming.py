@@ -1,5 +1,5 @@
-"""Streaming layer tests: transaction assembly (batch + stateful),
-foreachBatch dispatch engine, JDBC polling cursor semantics.
+"""Streaming layer tests: transaction assembly, foreachBatch dispatch
+engine, JDBC polling cursor semantics.
 
 Uses file-drop envelope streams + memory sinks so a batch of rows
 drives each streaming query to completion synchronously (no Kafka in
@@ -9,26 +9,21 @@ import datetime as dt
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from walex_spark.model import CHANGE_ENVELOPE_SCHEMA
 from walex_spark.sources.envelope import read_envelope_stream
 from walex_spark.sources.jdbc import JdbcPollingSource
 from walex_spark.streaming.engine import WalExEngine
-from walex_spark.streaming.txn_assembly import (
-    assemble_transactions,
-    assemble_transactions_stateful,
-)
+from walex_spark.streaming.txn_assembly import assemble_transactions
 
 TS = dt.datetime(2024, 1, 15, 10, 30)
 
 
 def _env_rows():
-    # txn 700: two changes + COMMIT; txn 701: one change, no COMMIT yet
+    # stamped changes: txn 700 has two, txn 701 one
     return [
         ("INSERT", "public", "user", None, {"id": "1"}, None, None, TS, 0, 100, 700, 0),
         ("UPDATE", "public", "todo", None, {"id": "t1"}, {"id": "t1"}, None, TS, 0, 101, 700, 1),
-        ("COMMIT", "public", "", None, None, None, None, TS, 0, 102, 700, 2),
         ("INSERT", "public", "user", None, {"id": "2"}, None, None, TS, 0, 200, 701, 0),
     ]
 
@@ -39,7 +34,7 @@ def env_df(spark):
 
 
 def test_assemble_transactions_batch(spark, env_df):
-    txns = assemble_transactions(env_df.filter(F.col("op") != "COMMIT"))
+    txns = assemble_transactions(env_df)
     rows = {r.xid: r for r in txns.collect()}
     assert rows[700].n_changes == 2
     assert rows[700].first_lsn == 100 and rows[700].last_lsn == 101
@@ -47,29 +42,6 @@ def test_assemble_transactions_batch(spark, env_df):
     # WAL order preserved within the txn
     assert [c.op for c in rows[700].changes] == ["INSERT", "UPDATE"]
     assert rows[701].n_changes == 1
-
-
-def test_assemble_transactions_stateful(spark, env_df, tmp_path):
-    src = str(tmp_path / "env")
-    env_df.write.parquet(src)
-    stream = read_envelope_stream(spark, src)
-    txns = assemble_transactions_stateful(stream)
-    q = (
-        txns.writeStream.format("memory")
-        .queryName("txn_out")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {r.xid: r for r in spark.table("txn_out").collect()}
-    finally:
-        q.stop()
-    # only the committed txn emits; 701 stays in state awaiting COMMIT
-    assert set(got) == {700}
-    assert got[700].n_changes == 2
-    assert got[700].tables == ["todo", "user"]
-    assert got[700].first_lsn == 100 and got[700].last_lsn == 102
 
 
 def test_engine_dispatch_batch(spark, env_df):
@@ -88,7 +60,7 @@ def test_engine_dispatch_batch(spark, env_df):
         .on_update("todo", make_handler("todo_updates"))
         .on_delete("user", make_handler("user_deletes"))
     )
-    eng.process_batch(env_df.filter(F.col("op") != "COMMIT"))
+    eng.process_batch(env_df)
     assert seen == {"user_inserts": 2, "all": 3, "todo_updates": 1, "user_deletes": 0}
 
 
@@ -105,7 +77,7 @@ def test_engine_streaming_attach_and_replay_dedup(spark, env_df, tmp_path):
     finally:
         q.stop()
     # R12: duplicates collapsed on (lsn, change_idx) before dispatch
-    assert sum(counts) == 4
+    assert sum(counts) == 3
 
 
 def test_jdbc_polling_cursor(tmp_path):
@@ -440,24 +412,6 @@ def test_checkpoint_restart_no_reprocess(spark, tmp_path):
     assert sum(seen2) == 1
 
 
-def test_engine_per_event_dispatch(spark, env_df, tmp_path):
-    """Async side-effect parity (dsl.ex:2-28): per_event handlers run
-    once per Event row on the executors."""
-    outdir = tmp_path / "fired"
-    outdir.mkdir()
-    path = str(outdir)
-
-    def fire(row):
-        # executor-side side effect; local[N] shares the filesystem
-        with open(f"{path}/{row.name}-{row.lsn_ord}", "w") as f:
-            f.write(row.type)
-
-    eng = WalExEngine().on_insert("user", fire, per_event=True)
-    eng.process_batch(env_df.filter(F.col("op") != "COMMIT"))
-    fired = sorted(p.name for p in outdir.iterdir())
-    assert len(fired) == 2 and all(f.startswith("user-") for f in fired)
-
-
 def test_engine_async_handlers_alongside_batch(spark, env_df, tmp_path):
     """dsl.ex parity: the `functions` list fires per event (executor-
     side) AND the do_block handler still receives the batch."""
@@ -479,7 +433,7 @@ def test_engine_async_handlers_alongside_batch(spark, env_df, tmp_path):
         lambda df, epoch: batch_counts.append(df.count()),
         async_handlers=[notify, audit],
     )
-    eng.process_batch(env_df.filter(F.col("op") != "COMMIT"))
+    eng.process_batch(env_df)
     fired = sorted(p.name for p in outdir.iterdir())
     # 2 insert events x 2 async handlers, plus the batch handler once
     assert len(fired) == 4
@@ -503,7 +457,7 @@ def test_engine_runtime_reconfiguration(spark, env_df):
         .on_insert("user", make("user"))
         .on_update("todo", make("todo"))
     )
-    data = env_df.filter(F.col("op") != "COMMIT")
+    data = env_df
     eng.process_batch(data, 0)
     assert counts == {"user": 2, "todo": 1}
     # drop the user handler + unsubscribe todo between batches

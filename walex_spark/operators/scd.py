@@ -19,19 +19,51 @@ Scale posture (100 TB):
     window) and joins base on the same key — a sort-merge join that
     reuses the key partitioning; skew is AQE's job. No broadcast of
     either side: both scale with the data.
+
+Every operator here keys a change by ``transforms.pk_column`` and
+orders it by ``transforms.lsn_column`` (then change_idx), through
+``_by_key``. A TRUNCATE has no primary key, so these operators (and
+their streaming forms, through ``streaming.ivm.prep_delta_input``)
+raise on one instead of folding it in as a keyless change;
+``transforms.materialize_table_state`` and the ``ParquetStateSink``
+built on it are the operators that apply TRUNCATE.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from walex_spark.operators.transforms import lsn_column
+from walex_spark.operators.transforms import key_cells, lsn_column, pk_column
 
 
-def _key_col(record_col: str, key: str):
-    return F.coalesce(F.col(record_col), F.col("old_record")).getItem(key)
+def lsn_raising_on_truncate() -> Column:
+    """``transforms.lsn_column``, failing the query on a TRUNCATE row."""
+    return F.when(
+        F.col("op") == "TRUNCATE",
+        F.raise_error(
+            F.lit(
+                "TRUNCATE in a changelog fed to a per-key history operator; "
+                "apply it with materialize_table_state or ParquetStateSink"
+            )
+        ),
+    ).otherwise(lsn_column())
+
+
+def _by_key(
+    df: DataFrame, key_cols: list[str], record_col: str, partition: list[Column] | None = None
+):
+    """``df`` with ``__pk`` (pk_column) and ``__lsn``, and the window
+    that orders each key's changes in WAL order. ``partition`` replaces
+    ``__pk`` as the window key."""
+    keyed = df.withColumn("__lsn", lsn_raising_on_truncate()).withColumn(
+        "__pk", pk_column(key_cols, record_col)
+    )
+    w = Window.partitionBy(*(partition or ["__pk"])).orderBy(
+        F.col("__lsn").asc(), F.col("change_idx").asc()
+    )
+    return keyed, w
 
 
 def scd2_history(
@@ -55,16 +87,7 @@ def scd2_history(
     shuffle (the per-key window); `lead` closes intervals in the same
     pass — no self-join, no second shuffle.
     """
-    keyed = df.withColumn("__lsn", lsn_column()).withColumn(
-        "__pk",
-        F.concat_ws(
-            "\x00",
-            *[F.coalesce(_key_col(record_col, k), F.lit("")) for k in key_cols],
-        ),
-    )
-    w = Window.partitionBy("__pk").orderBy(
-        F.col("__lsn").asc(), F.col("change_idx").asc()
-    )
+    keyed, w = _by_key(df, key_cols, record_col)
     nxt_lsn = F.lead(F.col("__lsn")).over(w)
     nxt_op = F.lead(F.col("op")).over(w)
     return (
@@ -100,19 +123,14 @@ def apply_cdc_snapshot(
     which reuses the window's hash partitioning (no extra exchange for
     the changelog side). Nothing is broadcast: both sides scale.
     """
+    keys = [c.alias(k) for c, k in zip(key_cells(key_cols, record_col), key_cols)]
+    keyed, w = _by_key(changes, key_cols, record_col, partition=keys)
     latest = (
-        changes.withColumn("__lsn", lsn_column())
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy(
-                    *[_key_col(record_col, k).alias(k) for k in key_cols]
-                ).orderBy(F.col("__lsn").desc(), F.col("change_idx").desc())
-            ),
-        )
-        .filter(F.col("__rn") == 1)
+        # the key's last change in WAL order is the one with no next
+        keyed.withColumn("__last", F.lead(F.lit(True)).over(w).isNull())
+        .filter(F.col("__last"))
         .select(
-            *[_key_col(record_col, k).alias(k) for k in key_cols],
+            *keys,
             F.col("op").alias("__op"),
             *[
                 F.col(record_col).getItem(v).alias(f"__new_{v}")
@@ -154,7 +172,7 @@ def table_state_as_of(
     materialization — and at 100 TB the filter prunes at the scan when
     the changelog is stored LSN-sorted (parquet min/max row groups).
     """
-    from walex_spark.operators.transforms import lsn_column, materialize_table_state
+    from walex_spark.operators.transforms import materialize_table_state
 
     bounded = df.filter(lsn_column() <= as_of_lsn)
     return materialize_table_state(bounded, key_cols, record_col=record_col)
@@ -187,16 +205,7 @@ def maintain_group_counts(
     lag pays data-sized cost, and only on backfill (a streaming
     deployment keeps the previous version in state instead).
     """
-    keyed = df.withColumn("__lsn", lsn_column()).withColumn(
-        "__pk",
-        F.concat_ws(
-            "\x00",
-            *[F.coalesce(_key_col(record_col, k), F.lit("")) for k in key_cols],
-        ),
-    )
-    w = Window.partitionBy("__pk").orderBy(
-        F.col("__lsn").asc(), F.col("change_idx").asc()
-    )
+    keyed, w = _by_key(df, key_cols, record_col)
     cur_grp = F.col(record_col).getItem(group_field)
     # window expressions must be plain columns before the explode — a
     # Generate operator cannot evaluate them inline
@@ -257,16 +266,7 @@ def maintain_group_sums(
     their maintained row count reaches zero (a dead group with a
     residual null sum must not linger).
     """
-    keyed = df.withColumn("__lsn", lsn_column()).withColumn(
-        "__pk",
-        F.concat_ws(
-            "\x00",
-            *[F.coalesce(_key_col(record_col, k), F.lit("")) for k in key_cols],
-        ),
-    )
-    w = Window.partitionBy("__pk").orderBy(
-        F.col("__lsn").asc(), F.col("change_idx").asc()
-    )
+    keyed, w = _by_key(df, key_cols, record_col)
     cur_grp = F.col(record_col).getItem(group_field)
     cur_m = F.col(record_col).getItem(measure_field).cast("bigint")
     lagged = (
@@ -343,16 +343,7 @@ def maintain_term_postings(
     """
     from walex_spark.extensions.text import _tokens
 
-    keyed = df.withColumn("__lsn", lsn_column()).withColumn(
-        "__pk",
-        F.concat_ws(
-            "\x00",
-            *[F.coalesce(_key_col(record_col, k), F.lit("")) for k in key_cols],
-        ),
-    )
-    w = Window.partitionBy("__pk").orderBy(
-        F.col("__lsn").asc(), F.col("change_idx").asc()
-    )
+    keyed, w = _by_key(df, key_cols, record_col)
     cur_text = F.col(record_col).getItem(text_field)
     lagged = keyed.withColumn("__prev_text", F.lag(cur_text).over(w)).withColumn(
         "__prev_op", F.lag(F.col("op")).over(w)

@@ -232,11 +232,19 @@ def lsn_column(hi_col: str = "lsn_hi", lo_col: str = "lsn_lo") -> Column:
     ).alias("lsn")
 
 
-def pk_column(key_cols: list[str], record_col: str = "record") -> Column:
-    """Null-safe primary key: the ``key_cols`` cells of the record (the
-    old record for a DELETE), NUL-joined, a missing cell as ''."""
+def key_cells(key_cols: list[str], record_col: str = "record") -> list[Column]:
+    """The ``key_cols`` cells of the record (the old record for a
+    DELETE), one column each."""
     rec = F.coalesce(F.col(record_col), F.col("old_record"))
-    return F.concat_ws("\x00", *[F.coalesce(rec.getItem(k), F.lit("")) for k in key_cols])
+    return [rec.getItem(k) for k in key_cols]
+
+
+def pk_column(key_cols: list[str], record_col: str = "record") -> Column:
+    """Null-safe primary key: the ``key_cells``, NUL-joined, a missing
+    cell as ''."""
+    return F.concat_ws(
+        "\x00", *[F.coalesce(c, F.lit("")) for c in key_cells(key_cols, record_col)]
+    )
 
 
 def lsn_string(hi_col: str = "lsn_hi", lo_col: str = "lsn_lo") -> Column:

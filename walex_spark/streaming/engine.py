@@ -47,11 +47,11 @@ class _Registration:
     handler: Callable[[DataFrame, int], None]
     unwatched_fields: list[str] | None = None
     unwatched_records: dict[str, str] | None = None
-    per_event: bool = False  # handler receives each Event Row (executor-side)
-    # reference parity for dsl.ex `functions` (the [{Module, :function}]
-    # list dispatched via Task.start per event, ALONGSIDE the do_block):
-    # each callable here runs once per Event row on the executors, in
-    # addition to `handler` receiving the batch DataFrame
+    # the one per-event path, dsl.ex's `functions` (the
+    # [{Module, :function}] list dispatched via Task.start per event,
+    # ALONGSIDE the do_block): each callable here runs once per Event
+    # row on the executors, and `handler` still receives the batch
+    # DataFrame
     async_handlers: list[Callable] | None = None
 
 
@@ -203,16 +203,7 @@ class WalExEngine:
                         h(row)
 
                 events.foreach(fan_out)
-            if reg.per_event:
-                # the reference's async side-effect dispatch (dsl.ex:2-28:
-                # Task.start per event × function) — in Spark the per-row
-                # fan-out runs ON THE EXECUTORS via foreach, so side
-                # effects parallelize with the data instead of queuing on
-                # one node; the handler must be serializable + idempotent
-                # (batches replay on failure)
-                events.foreach(reg.handler)
-            else:
-                reg.handler(events, epoch_id)
+            reg.handler(events, epoch_id)
 
     def attach(
         self,

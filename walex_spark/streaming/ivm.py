@@ -32,19 +32,21 @@ def prep_delta_input(
     record_col: str = "record",
 ) -> DataFrame:
     """Shared envelope → (__pk, op, lsn, change_idx, payload) prep for
-    the retraction-delta streams (this module + streaming/postings):
-    NUL-joined null-safe key, the canonical 64-bit lsn
-    (transforms.lsn_column), I/U/D only. ``payload`` is the one
-    operator-specific column (already aliased)."""
-    from walex_spark.operators.transforms import lsn_column, pk_column
+    the streaming history operators (this module, streaming/postings
+    and streaming/scd): the null-safe key (transforms.pk_column) and
+    the canonical 64-bit lsn (transforms.lsn_column). A TRUNCATE fails
+    the query, as in the batch operators (operators/scd.py).
+    ``payload`` is the one operator-specific column (already aliased)."""
+    from walex_spark.operators.scd import lsn_raising_on_truncate
+    from walex_spark.operators.transforms import pk_column
 
     return env.select(
         pk_column(key_cols, record_col).alias("__pk"),
         F.col("op"),
-        lsn_column().alias("lsn"),
+        lsn_raising_on_truncate().alias("lsn"),
         F.col("change_idx"),
         payload,
-    ).filter(F.col("op").isin("INSERT", "UPDATE", "DELETE"))
+    )
 
 
 def group_delta_stream(

@@ -112,7 +112,10 @@ class ParquetStateSink:
         existing_dirs = self._bucket_dirs(manifest, changed)
         merged_input = batch.drop("__bucket")
         if existing_dirs:
-            merged_input = spark.read.parquet(*existing_dirs).unionByName(merged_input)
+            # the sink wrote these files from batches of this schema:
+            # passing it spares a schema-inference job
+            existing = spark.read.schema(env.schema).parquet(*existing_dirs)
+            merged_input = existing.unionByName(merged_input)
         new_state = materialize_table_state(
             merged_input, self.key_cols, self.record_col
         ).withColumn("__bucket", self._bucket_col())

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from walex_spark.operators.transforms import lsn_column, pk_column
+from walex_spark.streaming.ivm import prep_delta_input
 
 OUT_SCHEMA = (
     "pk STRING, record_json STRING, valid_from_lsn BIGINT, "
@@ -35,13 +35,9 @@ def scd2_stream(env: DataFrame, key_cols: list[str], record_col: str = "record")
     """Envelope stream → stream of CLOSED SCD2 interval rows."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    pre = env.select(
-        pk_column(key_cols, record_col).alias("__pk"),
-        F.col("op"),
-        lsn_column(),
-        F.col("change_idx"),
-        F.to_json(F.col(record_col)).alias("rec_json"),
-    ).filter(F.col("op").isin("INSERT", "UPDATE", "DELETE"))
+    pre = prep_delta_input(
+        env, key_cols, F.to_json(F.col(record_col)).alias("rec_json"), record_col
+    )
 
     def step(key, pdfs, state: GroupState):
         import pandas as pd
