@@ -21,11 +21,7 @@ Two deliberate r12 harness changes (declared in OPTIMIZATION_r12.md):
   - HEAVY_OUTPUT queries are timed against the noop sink
     (df.write.format("noop")), which computes every column of every
     row, instead of count(), which lets the optimizer prune columns
-    and whole subtrees (optimization guide §1.4). To keep
-    round-over-round numbers interpretable, THIS round additionally
-    records a one-shot legacy count() timing per heavy query under
-    "<name>__count_legacy" (added keys only — no existing key is
-    removed or renamed; the legacy numbers do not enter the total).
+    and whole subtrees (optimization guide §1.4).
 """
 
 from __future__ import annotations
@@ -138,7 +134,6 @@ def main() -> None:
 
     metric = "walex_spark query-suite wall clock"
     timings: dict[str, float] = {}
-    legacy: dict[str, float] = {}
     errors: dict[str, str] = {}
     total = 0.0
 
@@ -151,10 +146,6 @@ def main() -> None:
             "total_ok_sec": round(total, 3),  # sum over SUCCEEDED queries only
             "timing": TIMING_POLICY,
             "queries": timings,
-            # transition-round evidence for the count()->noop switch:
-            # one-shot count() walls per HEAVY_OUTPUT query, NOT in the
-            # total (see module docstring)
-            "heavy_count_legacy": legacy,
             "errors": errors,
         }
         if partial:
@@ -193,13 +184,6 @@ def main() -> None:
             total += timings[name]
         except Exception as exc:  # noqa: BLE001 — bench must never DNF
             errors[name] = f"{type(exc).__name__}: {str(exc)[:200]}"
-        if name in HEAVY_OUTPUT and name in timings:
-            try:
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                legacy[name] = round(time.time() - t0, 3)
-            except Exception:  # noqa: BLE001 — legacy evidence only,
-                pass  # never fails the round
         # incremental flush: a killed run still leaves per-query ground
         # truth for everything that finished (r11's 32-core run was
         # killed with nothing recorded)

@@ -137,6 +137,14 @@ def frames(spark):
         frame_begin(lsn=3000, xid=702),
         frame_insert(rel_id=99, cells=("x",)),
         frame_commit(lsn=3000),
+        # txn 704: two todo inserts; txn 705: key-only delete of one
+        frame_begin(lsn=3500, xid=704),
+        frame_insert(rel_id=2, cells=("9", "t")),
+        frame_insert(rel_id=2, cells=("8", "f")),
+        frame_commit(lsn=3500),
+        frame_begin(lsn=3600, xid=705),
+        frame_delete(rel_id=2, key=("9", None)),
+        frame_commit(lsn=3600),
         # txn 703: never commits → dropped entirely
         frame_begin(lsn=4000, xid=703),
         frame_insert(rel_id=1, cells=("2", "carol")),
@@ -166,6 +174,10 @@ def test_decode_envelope_end_to_end(spark, frames):
         ("DELETE", "todo"), ("TRUNCATE", "user"), ("TRUNCATE", "todo"),
     ]
     assert by_xid[701][0].key_record == {"id": "9", "done": None}
+    # txn 705: the key-only delete carries its tuple in key_record alone
+    (dele,) = by_xid[705]
+    assert (dele.record, dele.old_record) == (None, None)
+    assert dele.key_record == {"id": "9", "done": None}
     # txn 702's unknown-relation change dropped; 703 never committed
     assert 702 not in by_xid and 703 not in by_xid
 
@@ -180,6 +192,36 @@ def test_decode_envelope_feeds_transforms(spark, frames):
         "name": {"old_value": "alice", "new_value": "bob"}
     }
     assert row.lsn == "0/3E8"
+
+
+def test_key_only_delete_reaches_state_history_and_handlers(spark, frames, tmp_path):
+    """A key-only DELETE (REPLICA IDENTITY DEFAULT) that follows its
+    INSERT removes the key from the table state, closes its history
+    interval and reaches a handler filtered on unwatched records, all
+    through transforms.row_image."""
+    from pyspark.sql import functions as F
+
+    from walex_spark.operators import transforms as X
+    from walex_spark.operators.scd import scd2_history
+    from walex_spark.streaming.materialize import ParquetStateSink
+
+    env = decode_envelope(frames)
+    live = {("todo", "8")}
+    state = X.materialize_table_state(env, ["id"]).collect()
+    assert {(r.table, r.record["id"]) for r in state} == live
+    sink = ParquetStateSink(str(tmp_path / "state"), ["id"], num_buckets=2)
+    sink.process_batch(env, 0)
+    assert {(r.table, r.record["id"]) for r in sink.state(spark).collect()} == live
+
+    deletes = X.filter_and_cast(
+        env, table="todo", record_types=["delete"], unwatched_records={"done": "t"}
+    ).collect()
+    assert [r.old_record for r in deletes] == [{"id": "9", "done": None}] * 2
+
+    todo = env.filter((F.col("table") == "todo") & (F.col("op") != "TRUNCATE"))
+    by_id = {r.record["id"]: r for r in scd2_history(todo, ["id"]).collect()}
+    assert by_id["9"].closed_by_delete and not by_id["9"].is_current
+    assert by_id["8"].is_current
 
 
 def _random_stream(seed: int) -> tuple[list[tuple[int, bytes]], tuple[int, int]]:

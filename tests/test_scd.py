@@ -324,6 +324,7 @@ def test_maintain_term_postings_retraction(spark):
             op,
             rec if op != "DELETE" else None,
             rec if op == "DELETE" else None,
+            None,
             0,
             lsn,
             0,
@@ -340,7 +341,7 @@ def test_maintain_term_postings_retraction(spark):
     df = spark.createDataFrame(
         rows,
         "op string, record map<string,string>, old_record map<string,string>,"
-        " lsn_hi int, lsn_lo long, change_idx int",
+        " key_record map<string,string>, lsn_hi int, lsn_lo long, change_idx int",
     )
     got = {
         r.term: (r.n_docs, r.tf_total)
@@ -356,13 +357,13 @@ def test_maintain_term_postings_same_lsn_transaction(spark):
     from walex_spark.operators.scd import maintain_term_postings
 
     rows = [
-        ("INSERT", {"key": "A", "text": "x"}, None, 0, 7, 0),
-        ("UPDATE", {"key": "A", "text": "x"}, None, 0, 7, 1),
+        ("INSERT", {"key": "A", "text": "x"}, None, None, 0, 7, 0),
+        ("UPDATE", {"key": "A", "text": "x"}, None, None, 0, 7, 1),
     ]
     df = spark.createDataFrame(
         rows,
         "op string, record map<string,string>, old_record map<string,string>,"
-        " lsn_hi int, lsn_lo long, change_idx int",
+        " key_record map<string,string>, lsn_hi int, lsn_lo long, change_idx int",
     )
     got = {
         r.term: (r.n_docs, r.tf_total)

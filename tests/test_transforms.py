@@ -110,7 +110,7 @@ def test_unwatched_fields(envelope):
 
 
 def test_unwatched_records(envelope):
-    out = X.filter_unwatched_records(envelope, {"id": "5"})
+    out = X.filter_and_cast(envelope, unwatched_records={"id": "5"})
     # the DELETE of id=5 is excluded (old_record consulted)
     assert out.count() == 5
 
@@ -122,11 +122,11 @@ def test_unwatched_records_missing_key_kept(envelope):
     unwatched and the event stays. Every fixture row lacks a 'status'
     key, so {'status': 'archived'} must drop nothing — the pre-fix bare
     getItem== predicate NULL-propagated and dropped all 6."""
-    out = X.filter_unwatched_records(envelope, {"status": "archived"})
+    out = X.filter_and_cast(envelope, unwatched_records={"status": "archived"})
     assert out.count() == 6
     # conjunctive mix: one present-and-matching key plus one missing key
     # still fails the conjunction -> everything kept
-    out2 = X.filter_unwatched_records(envelope, {"id": "5", "status": "x"})
+    out2 = X.filter_and_cast(envelope, unwatched_records={"id": "5", "status": "x"})
     assert out2.count() == 6
 
 
@@ -141,7 +141,7 @@ def test_unwatched_records_null_value_kept(spark):
          {"id": "8", "status": "archived"}, None, TS, 0, 210, 711, 0),
     ]
     df = spark.createDataFrame(rows, CHANGE_ENVELOPE_SCHEMA)
-    out = X.filter_unwatched_records(df, {"status": "archived"})
+    out = X.filter_and_cast(df, unwatched_records={"status": "archived"})
     kept = [r.old_record["id"] for r in out.collect()]
     assert kept == ["7"]  # NULL-valued row kept, matching row dropped
 

@@ -3,7 +3,8 @@
 Mirrors the reference's data model (SURVEY.md §1.1):
   - change envelope  <- lib/walex/changes.ex:9-33 + decoder structs
     (lib/walex/decoder/decoder.ex:8-36)
-  - Event            <- lib/walex/event/event.ex:5-17
+  - Event            <- lib/walex/event/event.ex:5-17 (the rows
+    transforms.event_projection emits)
   - Event.Source     <- lib/walex/event/source.ex:4-13
 
 Design choice (SURVEY.md §7.4 "dynamic schema"): the envelope types
@@ -38,6 +39,8 @@ COLUMN_SCHEMA = T.StructType(
 )
 
 # Canonical CDC change envelope — one row per change (FIXTURES.md §3).
+# Every CDC operator takes this shape; transforms.row_image picks a
+# change's row image from it.
 CHANGE_ENVELOPE_SCHEMA = T.StructType(
     [
         T.StructField("op", T.StringType(), False),
@@ -69,29 +72,3 @@ EVENT_SOURCE_SCHEMA = T.StructType(
     ]
 )
 
-
-def event_schema(record_schema: T.DataType | None = None) -> T.StructType:
-    """User-facing Event envelope (event.ex:5-17).
-
-    ``record_schema`` is the typed per-table record struct when known;
-    defaults to the text map (late-cast mode).
-    """
-    rec = record_schema or T.MapType(T.StringType(), T.StringType())
-    change_entry = T.StructType(
-        [
-            T.StructField("old_value", T.StringType(), True),
-            T.StructField("new_value", T.StringType(), True),
-        ]
-    )
-    return T.StructType(
-        [
-            T.StructField("name", T.StringType(), False),
-            T.StructField("type", T.StringType(), False),
-            T.StructField("source", EVENT_SOURCE_SCHEMA, True),
-            T.StructField("new_record", rec, True),
-            T.StructField("old_record", rec, True),
-            T.StructField("changes", T.MapType(T.StringType(), change_entry), True),
-            T.StructField("timestamp", T.TimestampType(), True),
-            T.StructField("lsn", T.StringType(), True),
-        ]
-    )

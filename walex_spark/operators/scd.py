@@ -51,14 +51,12 @@ def lsn_raising_on_truncate() -> Column:
     ).otherwise(lsn_column())
 
 
-def _by_key(
-    df: DataFrame, key_cols: list[str], record_col: str, partition: list[Column] | None = None
-):
+def _by_key(df: DataFrame, key_cols: list[str], partition: list[Column] | None = None):
     """``df`` with ``__pk`` (pk_column) and ``__lsn``, and the window
     that orders each key's changes in WAL order. ``partition`` replaces
     ``__pk`` as the window key."""
     keyed = df.withColumn("__lsn", lsn_raising_on_truncate()).withColumn(
-        "__pk", pk_column(key_cols, record_col)
+        "__pk", pk_column(key_cols)
     )
     w = Window.partitionBy(*(partition or ["__pk"])).orderBy(
         F.col("__lsn").asc(), F.col("change_idx").asc()
@@ -66,11 +64,7 @@ def _by_key(
     return keyed, w
 
 
-def scd2_history(
-    df: DataFrame,
-    key_cols: list[str],
-    record_col: str = "record",
-) -> DataFrame:
+def scd2_history(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """CDC envelope → SCD Type-2 validity intervals.
 
     Each INSERT/UPDATE opens a version carrying that event's record;
@@ -87,7 +81,7 @@ def scd2_history(
     shuffle (the per-key window); `lead` closes intervals in the same
     pass — no self-join, no second shuffle.
     """
-    keyed, w = _by_key(df, key_cols, record_col)
+    keyed, w = _by_key(df, key_cols)
     nxt_lsn = F.lead(F.col("__lsn")).over(w)
     nxt_op = F.lead(F.col("op")).over(w)
     return (
@@ -105,7 +99,6 @@ def apply_cdc_snapshot(
     changes: DataFrame,
     key_cols: list[str],
     value_cols: list[str],
-    record_col: str = "record",
 ) -> DataFrame:
     """MERGE the latest change per key onto a base snapshot.
 
@@ -123,8 +116,8 @@ def apply_cdc_snapshot(
     which reuses the window's hash partitioning (no extra exchange for
     the changelog side). Nothing is broadcast: both sides scale.
     """
-    keys = [c.alias(k) for c, k in zip(key_cells(key_cols, record_col), key_cols)]
-    keyed, w = _by_key(changes, key_cols, record_col, partition=keys)
+    keys = [c.alias(k) for c, k in zip(key_cells(key_cols), key_cols)]
+    keyed, w = _by_key(changes, key_cols, partition=keys)
     latest = (
         # the key's last change in WAL order is the one with no next
         keyed.withColumn("__last", F.lead(F.lit(True)).over(w).isNull())
@@ -133,7 +126,7 @@ def apply_cdc_snapshot(
             *keys,
             F.col("op").alias("__op"),
             *[
-                F.col(record_col).getItem(v).alias(f"__new_{v}")
+                F.col("record").getItem(v).alias(f"__new_{v}")
                 for v in value_cols
             ],
         )
@@ -159,7 +152,6 @@ def table_state_as_of(
     df: DataFrame,
     key_cols: list[str],
     as_of_lsn,
-    record_col: str = "record",
 ) -> DataFrame:
     """Point-in-time snapshot reconstruction ("time travel"): the table
     state as of ``as_of_lsn`` — every change with a later LSN is
@@ -175,14 +167,13 @@ def table_state_as_of(
     from walex_spark.operators.transforms import materialize_table_state
 
     bounded = df.filter(lsn_column() <= as_of_lsn)
-    return materialize_table_state(bounded, key_cols, record_col=record_col)
+    return materialize_table_state(bounded, key_cols)
 
 
 def maintain_group_counts(
     df: DataFrame,
     key_cols: list[str],
     group_field: str,
-    record_col: str = "record",
 ) -> DataFrame:
     """Incremental aggregate (view) maintenance: current-state row
     counts per ``group_field`` computed from the CHANGE LOG via
@@ -205,8 +196,8 @@ def maintain_group_counts(
     lag pays data-sized cost, and only on backfill (a streaming
     deployment keeps the previous version in state instead).
     """
-    keyed, w = _by_key(df, key_cols, record_col)
-    cur_grp = F.col(record_col).getItem(group_field)
+    keyed, w = _by_key(df, key_cols)
+    cur_grp = F.col("record").getItem(group_field)
     # window expressions must be plain columns before the explode — a
     # Generate operator cannot evaluate them inline
     lagged = keyed.withColumn("__prev_grp", F.lag(cur_grp).over(w)).withColumn(
@@ -243,7 +234,6 @@ def maintain_group_sums(
     key_cols: list[str],
     group_field: str,
     measure_field: str,
-    record_col: str = "record",
 ) -> DataFrame:
     """Incremental SUM (+ count) maintenance per ``group_field`` from
     the changelog — the measure generalization of
@@ -266,9 +256,9 @@ def maintain_group_sums(
     their maintained row count reaches zero (a dead group with a
     residual null sum must not linger).
     """
-    keyed, w = _by_key(df, key_cols, record_col)
-    cur_grp = F.col(record_col).getItem(group_field)
-    cur_m = F.col(record_col).getItem(measure_field).cast("bigint")
+    keyed, w = _by_key(df, key_cols)
+    cur_grp = F.col("record").getItem(group_field)
+    cur_m = F.col("record").getItem(measure_field).cast("bigint")
     lagged = (
         keyed.withColumn("__prev_grp", F.lag(cur_grp).over(w))
         .withColumn("__prev_m", F.lag(cur_m).over(w))
@@ -316,7 +306,6 @@ def maintain_term_postings(
     df: DataFrame,
     key_cols: list[str],
     text_field: str,
-    record_col: str = "record",
 ) -> DataFrame:
     """CDC-maintained inverted index: per-term document frequency and
     total term frequency of the CURRENT table state, computed from the
@@ -343,8 +332,8 @@ def maintain_term_postings(
     """
     from walex_spark.extensions.text import _tokens
 
-    keyed, w = _by_key(df, key_cols, record_col)
-    cur_text = F.col(record_col).getItem(text_field)
+    keyed, w = _by_key(df, key_cols)
+    cur_text = F.col("record").getItem(text_field)
     lagged = keyed.withColumn("__prev_text", F.lag(cur_text).over(w)).withColumn(
         "__prev_op", F.lag(F.col("op")).over(w)
     )

@@ -106,32 +106,30 @@ def filter_changes(
     return out
 
 
-def filter_unwatched_fields(
-    df: DataFrame, unwatched: list[str], changes_col: str = "changes"
-) -> DataFrame:
+def filter_unwatched_fields(df: DataFrame, unwatched: list[str]) -> DataFrame:
     """Drop UPDATE events whose changed fields ⊆ unwatched (i.e. keep iff
     some changed field is watched). Events without a diff (inserts /
     deletes, changes NULL) are always kept
     (transaction_filter.ex:175-187)."""
     unwatched_arr = F.array(*[F.lit(u) for u in unwatched])
     watched_changes = F.map_filter(
-        F.col(changes_col), lambda k, _v: ~F.array_contains(unwatched_arr, k)
+        F.col("changes"), lambda k, _v: ~F.array_contains(unwatched_arr, k)
     )
     return df.filter(
-        F.col(changes_col).isNull() | (F.size(F.map_keys(watched_changes)) > 0)
+        F.col("changes").isNull() | (F.size(F.map_keys(watched_changes)) > 0)
     )
 
 
 def filter_unwatched_records(
     df: DataFrame,
     unwatched_records: dict[str, str],
-    record_col: str = "record",
+    record_col: str = "new_record",
     old_record_col: str = "old_record",
 ) -> DataFrame:
-    """Drop events whose record matches ALL {key: value} pairs
+    """Drop Events whose record matches ALL {key: value} pairs
     (conjunctive exclusion). The record examined is new_record, else
-    old_record for deletes; events with neither are dropped
-    (transaction_filter.ex:189-207).
+    old_record for deletes (the change's ``row_image``); events with
+    neither are dropped (transaction_filter.ex:189-207).
 
     Reference semantics on a missing or NULL-valued key: the reference's
     `contains_unwatched_records?` requires `Map.has_key?(record, key)
@@ -216,41 +214,49 @@ def map_changes(
     )
 
 
-def set_type(table_col: Column | str = "table", op_col: Column | str = "op") -> Column:
+def set_type() -> Column:
     """"{table}.{insert|update|delete}" event-type string
     (helpers.ex:5-7)."""
-    t = F.col(table_col) if isinstance(table_col, str) else table_col
-    o = F.col(op_col) if isinstance(op_col, str) else op_col
-    return F.concat_ws(".", t, F.lower(o))
+    return F.concat_ws(".", F.col("table"), F.lower(F.col("op")))
 
 
-def lsn_column(hi_col: str = "lsn_hi", lo_col: str = "lsn_lo") -> Column:
+def lsn_column() -> Column:
     """Single orderable BIGINT lsn = hi<<32 | lo (decoder.ex:271-272)."""
     return (
-        F.col(hi_col).cast(T.LongType()) * F.lit(4294967296)
-        + F.col(lo_col).cast(T.LongType())
+        F.col("lsn_hi").cast(T.LongType()) * F.lit(4294967296)
+        + F.col("lsn_lo").cast(T.LongType())
     ).alias("lsn")
 
 
-def key_cells(key_cols: list[str], record_col: str = "record") -> list[Column]:
-    """The ``key_cols`` cells of the record (the old record for a
-    DELETE), one column each."""
-    rec = F.coalesce(F.col(record_col), F.col("old_record"))
+def row_image() -> Column:
+    """The change's row image: the new tuple; for a DELETE the old
+    tuple, or under REPLICA IDENTITY DEFAULT the key-only tuple the
+    decoder puts in ``key_record`` (decoder.ex:166-181). NULL for a
+    TRUNCATE.
+
+    This is the one expression that picks a change's row: the primary
+    key (``key_cells``, ``pk_column``) and a DELETE Event's
+    ``old_record`` (``event_projection``) read through it."""
+    return F.coalesce(F.col("record"), F.col("old_record"), F.col("key_record"))
+
+
+def key_cells(key_cols: list[str]) -> list[Column]:
+    """The ``key_cols`` cells of the change's ``row_image``, one column
+    each."""
+    rec = row_image()
     return [rec.getItem(k) for k in key_cols]
 
 
-def pk_column(key_cols: list[str], record_col: str = "record") -> Column:
+def pk_column(key_cols: list[str]) -> Column:
     """Null-safe primary key: the ``key_cells``, NUL-joined, a missing
     cell as ''."""
-    return F.concat_ws(
-        "\x00", *[F.coalesce(c, F.lit("")) for c in key_cells(key_cols, record_col)]
-    )
+    return F.concat_ws("\x00", *[F.coalesce(c, F.lit("")) for c in key_cells(key_cols)])
 
 
-def lsn_string(hi_col: str = "lsn_hi", lo_col: str = "lsn_lo") -> Column:
+def lsn_string() -> Column:
     """"HEX/HEX" formatting (event.ex:170-175)."""
     return F.concat(
-        F.upper(F.hex(F.col(hi_col))), F.lit("/"), F.upper(F.hex(F.col(lo_col)))
+        F.upper(F.hex(F.col("lsn_hi"))), F.lit("/"), F.upper(F.hex(F.col("lsn_lo")))
     )
 
 
@@ -285,7 +291,7 @@ def event_projection(df: DataFrame, db: str | None = None) -> DataFrame:
       INSERT: new_record only, no changes
       UPDATE: new_record + changes diff; old_record deliberately
               omitted to shrink payload (event.ex:65-87, README.md:215-217)
-      DELETE: old_record only
+      DELETE: old_record only, the change's ``row_image``
     """
     is_insert = F.col("op") == "INSERT"
     is_update = F.col("op") == "UPDATE"
@@ -295,9 +301,7 @@ def event_projection(df: DataFrame, db: str | None = None) -> DataFrame:
         F.lower(F.col("op")).alias("type"),
         source_struct(db).alias("source"),
         F.when(is_insert | is_update, F.col("record")).alias("new_record"),
-        F.when(is_delete, F.coalesce(F.col("old_record"), F.col("key_record"))).alias(
-            "old_record"
-        ),
+        F.when(is_delete, row_image()).alias("old_record"),
         F.when(is_update, map_changes("old_record", "record")).alias("changes"),
         F.col("commit_ts").alias("timestamp"),
         lsn_string().alias("lsn"),
@@ -330,9 +334,9 @@ def filter_and_cast(
     out = filter_subscribed(df, subscriptions)
     if table is not None:
         out = filter_changes(out, table, record_types)
+    out = event_projection(out, db)
     if unwatched_records:
         out = filter_unwatched_records(out, unwatched_records)
-    out = event_projection(out, db)
     if unwatched_fields:
         out = filter_unwatched_fields(out, unwatched_fields)
     return out
@@ -354,7 +358,6 @@ def resolve_unchanged_toast(
     df: DataFrame,
     key_cols: list[str],
     columns: list[str],
-    record_col: str = "record",
 ) -> DataFrame:
     """Replace unchanged-TOAST sentinels with the previous value of the
     same column for the same primary key (SURVEY.md §7.4; the reference
@@ -372,14 +375,14 @@ def resolve_unchanged_toast(
     from walex_spark.model import UNCHANGED_TOAST
 
     keyed = df.withColumn("__lsn", lsn_column()).withColumn(
-        "__pk", pk_column(key_cols, record_col)
+        "__pk", pk_column(key_cols)
     )
     w = (
         Window.partitionBy("table", "__pk")
         .orderBy("__lsn", "change_idx")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    rec = F.col(record_col)
+    rec = F.col("record")
     entries = []
     for c in columns:
         cell = rec.getItem(c)
@@ -397,7 +400,7 @@ def resolve_unchanged_toast(
     fixed = F.map_from_entries(F.array(*entries))  # null values legal in maps
     return (
         keyed.withColumn(
-            record_col, F.when(rec.isNotNull(), fixed).otherwise(rec)
+            "record", F.when(rec.isNotNull(), fixed).otherwise(rec)
         )
         .drop("__lsn", "__pk")
     )
@@ -415,9 +418,7 @@ def dedup_replay(df: DataFrame) -> DataFrame:
     return df.dropDuplicates(["lsn_hi", "lsn_lo", "change_idx"])
 
 
-def materialize_table_state(
-    df: DataFrame, key_cols: list[str], record_col: str = "record"
-) -> DataFrame:
+def materialize_table_state(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Apply I/U/D/TRUNCATE in LSN order → current snapshot (R10).
 
     Batch form: latest change per PK wins (Window over the key ordered
@@ -432,10 +433,10 @@ def materialize_table_state(
     high-water marks aggregate to one row per truncated table —
     metadata-sized, so the join back is an explicit broadcast.
 
-    ``key_cols`` index into the record map (e.g. ["id"]).
+    ``key_cols`` index into the change's ``row_image`` (e.g. ["id"]).
     """
     keyed = df.withColumn("__lsn", lsn_column()).withColumn(
-        "__pk", pk_column(key_cols, record_col)
+        "__pk", pk_column(key_cols)
     )
     ord_ = F.struct(F.col("__lsn").alias("l"), F.col("change_idx").alias("c"))
     trunc_pts = (

@@ -1282,7 +1282,7 @@ def q_cdc_filter_events(spark, sf_dir):
     out = out.filter(F.col("op").isin("INSERT", "UPDATE"))
     return out.select(
         F.col("xid").alias("event_id"),
-        F.coalesce(F.col("record"), F.col("old_record")).getItem("user_id").cast(T.LongType()).alias("user_id"),
+        X.row_image().getItem("user_id").cast(T.LongType()).alias("user_id"),
         F.col("op"),
         X.set_type().alias("event_name"),
     )
@@ -1342,7 +1342,7 @@ def q_cdc_latest_state(spark, sf_dir):
 
     env = events_as_envelope(spark, sf_dir)
     state = X.materialize_table_state(env, ["user_id"])
-    rec = F.coalesce(F.col("record"), F.col("old_record"))
+    rec = X.row_image()
     return state.select(
         rec.getItem("user_id").cast(T.LongType()).alias("user_id"),
         rec.getItem("event_type").alias("last_event_type"),
@@ -1369,7 +1369,7 @@ def q_cdc_dedup_replay(spark, sf_dir):
     deduped = X.dedup_replay(replayed)
     return deduped.select(
         F.col("xid").alias("event_id"),
-        F.coalesce(F.col("record"), F.col("old_record")).getItem("user_id").cast(T.LongType()).alias("user_id"),
+        X.row_image().getItem("user_id").cast(T.LongType()).alias("user_id"),
         F.col("op"),
     )
 
@@ -1404,13 +1404,13 @@ def q_cdc_changes_diff(spark, sf_dir):
     """R8: generic old/new field diff (map_changes,
     transaction_filter.ex:209-222) over consecutive per-key changes.
     user_id never differs within a partition so it never appears."""
-    from walex_spark.operators.transforms import map_changes
+    from walex_spark.operators import transforms as X
 
     env = events_as_envelope(spark, sf_dir)
-    rec = F.coalesce(F.col("record"), F.col("old_record"))
+    rec = X.row_image()
     w = Window.partitionBy(rec.getItem("user_id")).orderBy("xid")
     with_old = env.withColumn("cur", rec).withColumn("prev", F.lag(F.col("cur")).over(w))
-    diff = with_old.withColumn("changes", map_changes("prev", "cur")).filter(
+    diff = with_old.withColumn("changes", X.map_changes("prev", "cur")).filter(
         F.col("prev").isNotNull() & (F.size(F.map_keys(F.col("changes"))) > 0)
     )
     ch = F.col("changes")
@@ -1464,7 +1464,7 @@ def q_cdc_unwatched_filters(spark, sf_dir):
     from walex_spark.operators.transforms import map_changes
 
     env = events_as_envelope(spark, sf_dir)
-    rec = F.coalesce(F.col("record"), F.col("old_record"))
+    rec = X.row_image()
     w = Window.partitionBy(rec.getItem("user_id")).orderBy("xid")
     with_diff = (
         env.withColumn("cur", rec)
@@ -1551,9 +1551,11 @@ def q_cdc_txn_stats(spark, sf_dir):
     """R3 (batch form): transaction assembly as grouping by the txn key
     with ordered lsn bounds — the streaming form lives in
     walex_spark.streaming (applyInPandasWithState)."""
+    from walex_spark.operators import transforms as X
+
     env = events_as_envelope(spark, sf_dir)
     return (
-        env.withColumn("user_id", F.coalesce(F.col("record"), F.col("old_record")).getItem("user_id").cast(T.LongType()))
+        env.withColumn("user_id", X.row_image().getItem("user_id").cast(T.LongType()))
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_changes"),
@@ -1721,7 +1723,7 @@ def q_cdc_toast_resolve(spark, sf_dir):
     )
     return resolved.select(
         F.col("xid").alias("event_id"),
-        F.coalesce(rec, F.col("old_record")).getItem("user_id").cast(T.LongType()).alias("user_id"),
+        X.row_image().getItem("user_id").cast(T.LongType()).alias("user_id"),
         "op",
         F.col("record").getItem("k").alias("k_resolved"),
     )
@@ -1745,6 +1747,7 @@ def q_cdc_pgoutput_decode(spark, sf_dir):
     predicts the decoded rows straight from the source table, so the
     whole binary round trip is value-checked (decoder golden tests
     cover the per-message layouts: tests/test_pgoutput.py)."""
+    from walex_spark.operators import transforms as X
     from walex_spark.sources import pgoutput as P
 
     # shuffle-before-fan-out (the partition_by_doc discipline): the
@@ -1801,10 +1804,7 @@ def q_cdc_pgoutput_decode(spark, sf_dir):
     return env.select(
         "op",
         "table",
-        F.coalesce(F.col("record"), F.col("old_record"))
-        .getItem("user_id")
-        .cast(T.LongType())
-        .alias("user_id"),
+        X.row_image().getItem("user_id").cast(T.LongType()).alias("user_id"),
         "xid",
         "lsn_lo",
         "change_idx",
@@ -3161,13 +3161,14 @@ def q_cdc_time_travel(spark, sf_dir):
     from the stream itself (one-row aggregate, broadcast); the LSN
     bound is a plain filter BELOW the single per-key shuffle, so time
     travel costs the same as current-state materialization."""
+    from walex_spark.operators import transforms as X
     from walex_spark.operators.scd import table_state_as_of
 
     env = events_as_envelope(spark, sf_dir)
     cut = env.agg(F.floor(F.max("lsn_lo") / 2).cast(T.LongType()).alias("__cut"))
     bounded = env.crossJoin(F.broadcast(cut))
     state = table_state_as_of(bounded, ["user_id"], F.col("__cut")).drop("__cut")
-    rec = F.coalesce(F.col("record"), F.col("old_record"))
+    rec = X.row_image()
     return state.select(
         rec.getItem("user_id").cast(T.LongType()).alias("user_id"),
         rec.getItem("event_type").alias("last_event_type"),
@@ -6026,6 +6027,7 @@ def q_cdc_search_index(spark, sf_dir):
         op.alias("op"),
         F.when(op != "DELETE", record).alias("record"),
         F.when(op == "DELETE", record).alias("old_record"),
+        F.lit(None).cast("map<string,string>").alias("key_record"),
         F.lit(0).alias("lsn_hi"),
         F.col("doc_id").cast(T.LongType()).alias("lsn_lo"),
         F.lit(0).alias("change_idx"),

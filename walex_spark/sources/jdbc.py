@@ -122,7 +122,7 @@ class JdbcPollingSource:
             raise ValueError("slot lock requires a durable checkpoint_path")
         return f"{self.checkpoint_path}.lock"
 
-    def acquire_lock(self, stale_after_s: float = 300.0) -> None:
+    def acquire_lock(self) -> None:
         """Take the slot's single-writer lock or raise SlotInUseError.
 
         Ownership is a kernel ``flock(2)`` on the lock file — atomic
@@ -137,9 +137,7 @@ class JdbcPollingSource:
         The JSON (pid, ts) payload in the file is observability
         metadata only, never the ownership primitive; the lock file
         itself is deliberately never unlinked (unlinking a lock file
-        reopens the race via path/inode divergence). ``stale_after_s``
-        is retained for API compatibility; with flock, liveness comes
-        from the kernel, not a heartbeat age.
+        reopens the race via path/inode divergence).
 
         Same-host scope is the honest contract here: on a multi-host
         deployment, slot exclusivity is enforced server-side by the

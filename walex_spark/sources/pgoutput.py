@@ -289,9 +289,7 @@ def encode_truncate(rel_ids, options: int = 0) -> bytes:
     )
 
 
-def collect_registry(
-    frames: DataFrame, payload_col: str = "payload", idx_col: str = "frame_idx"
-) -> dict[int, tuple[list[int], list[dict]]]:
+def collect_registry(frames: DataFrame) -> dict[int, tuple[list[int], list[dict]]]:
     """Pass 1: Relation/Type frames → broadcastable VERSIONED registry:
     ``{relation_id: ([valid_from_idx...], [relation_msg...])}`` with
     ascending validity bounds.
@@ -307,11 +305,11 @@ def collect_registry(
     stream order and resolve OIDs for relation versions collected after
     them."""
     tagged = frames.filter(
-        F.substring(F.col(payload_col), 1, 1).isin([bytes([82]), bytes([89])])  # R, Y
+        F.substring(F.col("payload"), 1, 1).isin([bytes([82]), bytes([89])])  # R, Y
     )
     rows = sorted(
         (row[0], bytes(row[1]))
-        for row in tagged.select(idx_col, payload_col).collect()
+        for row in tagged.select("frame_idx", "payload").collect()
     )
     custom_types: dict[str, str] = {}
     registry: dict[int, tuple[list[int], list[dict]]] = {}
@@ -329,16 +327,14 @@ def collect_registry(
 
 
 def registry_lookup(registry: dict, rel_id: int, frame_idx: int) -> dict | None:
-    """Relation version in effect at ``frame_idx`` — or the single
-    un-versioned dict when the caller supplied an out-of-band schema.
-    None when the relation is unknown (or not yet announced at this
-    position in the stream): the frame is skipped, like the reference's
-    unknown-relation drop (publisher.ex:124-126)."""
+    """Relation version in effect at ``frame_idx`` in a
+    ``collect_registry`` registry. None when the relation is unknown
+    (or not yet announced at this position in the stream): the frame is
+    skipped, like the reference's unknown-relation drop
+    (publisher.ex:124-126)."""
     entry = registry.get(rel_id)
     if entry is None:
         return None
-    if isinstance(entry, dict):  # out-of-band schema, version-agnostic
-        return entry
     bounds, versions = entry
     pos = bisect_right(bounds, frame_idx) - 1
     return versions[pos] if pos >= 0 else None
@@ -379,16 +375,11 @@ _DECODED_SCHEMA = T.StructType(
 )
 
 
-def decode_frames(
-    frames: DataFrame,
-    registry: dict,
-    payload_col: str = "payload",
-    idx_col: str = "frame_idx",
-) -> DataFrame:
+def decode_frames(frames: DataFrame, registry: dict) -> DataFrame:
     """Pass 2: decode and stamp the frames in one ordered walk per
     partition, against the broadcast registry.
 
-    The one exchange range-partitions the frames on ``idx_col``; each
+    The one exchange range-partitions the frames on ``frame_idx``; each
     partition is sorted, so it holds one contiguous stretch of the
     stream. The walk is the reference's transaction loop
     (publisher.ex:57-77): BEGIN opens a transaction, each change is
@@ -457,7 +448,7 @@ def decode_frames(
         for pdf in batches:
             out: list[tuple] = []
             kinds: list[int] = []
-            for idx, payload in zip(pdf[idx_col].to_numpy(), pdf[payload_col].to_numpy()):
+            for idx, payload in zip(pdf["frame_idx"].to_numpy(), pdf["payload"].to_numpy()):
                 buf = bytes(payload)
                 tag = buf[0:1]
                 if tag == b"B" or tag == b"C":
@@ -497,9 +488,9 @@ def decode_frames(
 
     n_part = frames.sparkSession.sparkContext.defaultParallelism
     return (
-        frames.select(idx_col, payload_col)
-        .repartitionByRange(n_part, idx_col)
-        .sortWithinPartitions(idx_col)
+        frames.select("frame_idx", "payload")
+        .repartitionByRange(n_part, "frame_idx")
+        .sortWithinPartitions("frame_idx")
         .mapInPandas(decode_part, _DECODED_SCHEMA)
         .withColumn("part", F.spark_partition_id())
     )
@@ -589,8 +580,7 @@ def stamp_transactions(decoded: DataFrame) -> DataFrame:
 
 def decode_envelope(
     frames: DataFrame,
-    payload_col: str = "payload",
-    registry: dict[int, dict] | None = None,
+    registry: dict[int, tuple[list[int], list[dict]]] | None = None,
 ) -> DataFrame:
     """frames(frame_idx, payload) → canonical change envelope: registry
     collect → one ordered decode-and-stamp pass per range partition
@@ -600,11 +590,12 @@ def decode_envelope(
     is given) and stamp_transactions' collect of the per-partition END
     rows, which also materializes the decoded rows for the output.
 
-    ``registry``: pass a pre-collected relation registry (e.g. from
-    ``collect_registry`` over just the Relation/Type frames, or a
-    schema known out-of-band) to skip the pass-1 scan of the full
-    frame stream — on storage that's a pruned re-scan, but on a
-    synthesized/streamed source it's a whole extra materialization."""
+    ``registry``: a pre-collected versioned relation registry, as
+    ``collect_registry`` returns it (e.g. over just the Relation/Type
+    frames, or accumulated across microbatches), to skip the pass-1
+    scan of the full frame stream — on storage that's a pruned
+    re-scan, but on a synthesized/streamed source it's a whole extra
+    materialization."""
     if registry is None:
-        registry = collect_registry(frames, payload_col)
-    return stamp_transactions(decode_frames(frames, registry, payload_col))
+        registry = collect_registry(frames)
+    return stamp_transactions(decode_frames(frames, registry))

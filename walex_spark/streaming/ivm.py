@@ -29,7 +29,6 @@ def prep_delta_input(
     env: DataFrame,
     key_cols: list[str],
     payload,
-    record_col: str = "record",
 ) -> DataFrame:
     """Shared envelope → (__pk, op, lsn, change_idx, payload) prep for
     the streaming history operators (this module, streaming/postings
@@ -41,7 +40,7 @@ def prep_delta_input(
     from walex_spark.operators.transforms import pk_column
 
     return env.select(
-        pk_column(key_cols, record_col).alias("__pk"),
+        pk_column(key_cols).alias("__pk"),
         F.col("op"),
         lsn_raising_on_truncate().alias("lsn"),
         F.col("change_idx"),
@@ -53,17 +52,11 @@ def group_delta_stream(
     env: DataFrame,
     key_cols: list[str],
     group_field: str,
-    record_col: str = "record",
 ) -> DataFrame:
     """Envelope stream → stream of (grp, w, lsn) retraction deltas."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    pre = prep_delta_input(
-        env,
-        key_cols,
-        F.col(record_col).getItem(group_field).alias("grp"),
-        record_col,
-    )
+    pre = prep_delta_input(env, key_cols, F.col("record").getItem(group_field).alias("grp"))
 
     def step(key, pdfs, state: GroupState):
         import pandas as pd

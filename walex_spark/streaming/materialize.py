@@ -51,7 +51,6 @@ class ParquetStateSink:
     path: str
     key_cols: list[str]
     num_buckets: int = 16
-    record_col: str = "record"
     _spark: SparkSession | None = field(default=None, init=False, repr=False)
 
     # -- layout ------------------------------------------------------------
@@ -75,7 +74,7 @@ class ParquetStateSink:
         ]
 
     def _bucket_col(self):
-        return F.pmod(F.hash(pk_column(self.key_cols, self.record_col)), F.lit(self.num_buckets))
+        return F.pmod(F.hash(pk_column(self.key_cols)), F.lit(self.num_buckets))
 
     def state(self, spark: SparkSession) -> DataFrame:
         """Current snapshot (envelope-shaped rows, one per live key)."""
@@ -116,9 +115,9 @@ class ParquetStateSink:
             # passing it spares a schema-inference job
             existing = spark.read.schema(env.schema).parquet(*existing_dirs)
             merged_input = existing.unionByName(merged_input)
-        new_state = materialize_table_state(
-            merged_input, self.key_cols, self.record_col
-        ).withColumn("__bucket", self._bucket_col())
+        new_state = materialize_table_state(merged_input, self.key_cols).withColumn(
+            "__bucket", self._bucket_col()
+        )
 
         vdir = f"v-{epoch_id}-{uuid.uuid4().hex[:8]}"
         new_state.write.partitionBy("__bucket").parquet(os.path.join(self.path, vdir))

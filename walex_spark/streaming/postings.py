@@ -49,7 +49,6 @@ def postings_delta_stream(
     env: DataFrame,
     key_cols: list[str],
     text_field: str,
-    record_col: str = "record",
 ) -> DataFrame:
     """Envelope stream → stream of (term, dtf, ddf, lsn) deltas.
 
@@ -66,8 +65,7 @@ def postings_delta_stream(
         # case-fold in the JVM so stored state tokenizes exactly like
         # the batch operator's F.lower (Python str.lower differs on a
         # handful of Unicode mappings)
-        F.lower(F.col(record_col).getItem(text_field)).alias("txt"),
-        record_col,
+        F.lower(F.col("record").getItem(text_field)).alias("txt"),
     )
 
     def step(key, pdfs, state: GroupState):

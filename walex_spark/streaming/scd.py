@@ -31,13 +31,11 @@ OUT_SCHEMA = (
 )
 
 
-def scd2_stream(env: DataFrame, key_cols: list[str], record_col: str = "record") -> DataFrame:
+def scd2_stream(env: DataFrame, key_cols: list[str]) -> DataFrame:
     """Envelope stream → stream of CLOSED SCD2 interval rows."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    pre = prep_delta_input(
-        env, key_cols, F.to_json(F.col(record_col)).alias("rec_json"), record_col
-    )
+    pre = prep_delta_input(env, key_cols, F.to_json(F.col("record")).alias("rec_json"))
 
     def step(key, pdfs, state: GroupState):
         import pandas as pd

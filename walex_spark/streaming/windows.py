@@ -100,7 +100,6 @@ def correlate_changes(
     env: DataFrame,
     key_cols: list[str],
     within: str = "1 hour",
-    record_col: str = "record",
 ) -> DataFrame:
     """Pair each UPDATE/DELETE with the INSERT that created its key —
     CDC lineage enrichment as a STREAM-STREAM join.
@@ -117,7 +116,7 @@ def correlate_changes(
     Returns one row per (change, matching insert): op, table, pk,
     change_ts, insert_ts, lag_seconds, change lsn ordering columns.
     """
-    pk = pk_column(key_cols, record_col)
+    pk = pk_column(key_cols)
     # time-bucket the join key: a ``within``-sized window spans at most
     # 2 buckets of that size, so the change side probes exactly its own
     # bucket and the previous one. This bounds join fan-out to
