@@ -22,13 +22,14 @@ from walex_spark.session import get_spark
 # the 70 — in one recursive-CTE DuckDB execution), plus four >20 s
 # stragglers. Whole files match on the file name, single tests on a
 # node-id substring; both lists stay in one reviewable place.
+# tests/test_streaming.py (engine replay dedup, sink crash and
+# kill-mid-swap) runs in the default tier: it gates exactly-once.
 # ---------------------------------------------------------------------------
 SLOW_FILES = (
     # twin e2e / replay / compaction files (wholesale)
     "test_dedup_incr.py",
     "test_drift_incr.py",
     "test_pii_incr.py",
-    "test_streaming.py",
 )
 SLOW_NODE_PATTERNS = (
     # individual >20s stragglers (calm full-run durations)

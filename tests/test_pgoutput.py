@@ -145,6 +145,10 @@ def frames(spark):
         frame_begin(lsn=3600, xid=705),
         frame_delete(rel_id=2, key=("9", None)),
         frame_commit(lsn=3600),
+        # txn 706: key-changing update of todo 8 -> 7 ('K' tuple)
+        frame_begin(lsn=3700, xid=706),
+        frame_update(rel_id=2, new=("7", "f"), key=("8", None)),
+        frame_commit(lsn=3700),
         # txn 703: never commits → dropped entirely
         frame_begin(lsn=4000, xid=703),
         frame_insert(rel_id=1, cells=("2", "carol")),
@@ -198,7 +202,9 @@ def test_key_only_delete_reaches_state_history_and_handlers(spark, frames, tmp_p
     """A key-only DELETE (REPLICA IDENTITY DEFAULT) that follows its
     INSERT removes the key from the table state, closes its history
     interval and reaches a handler filtered on unwatched records, all
-    through transforms.row_image."""
+    through transforms.row_image. A key-changing UPDATE whose old key
+    sits in key_record does the same for its old key
+    (transforms.split_key_changes)."""
     from pyspark.sql import functions as F
 
     from walex_spark.operators import transforms as X
@@ -206,7 +212,7 @@ def test_key_only_delete_reaches_state_history_and_handlers(spark, frames, tmp_p
     from walex_spark.streaming.materialize import ParquetStateSink
 
     env = decode_envelope(frames)
-    live = {("todo", "8")}
+    live = {("todo", "7")}
     state = X.materialize_table_state(env, ["id"]).collect()
     assert {(r.table, r.record["id"]) for r in state} == live
     sink = ParquetStateSink(str(tmp_path / "state"), ["id"], num_buckets=2)
@@ -221,7 +227,8 @@ def test_key_only_delete_reaches_state_history_and_handlers(spark, frames, tmp_p
     todo = env.filter((F.col("table") == "todo") & (F.col("op") != "TRUNCATE"))
     by_id = {r.record["id"]: r for r in scd2_history(todo, ["id"]).collect()}
     assert by_id["9"].closed_by_delete and not by_id["9"].is_current
-    assert by_id["8"].is_current
+    assert by_id["8"].closed_by_delete and not by_id["8"].is_current
+    assert by_id["7"].is_current
 
 
 def _random_stream(seed: int) -> tuple[list[tuple[int, bytes]], tuple[int, int]]:

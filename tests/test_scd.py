@@ -19,10 +19,10 @@ from walex_spark.operators.scd import (
 TS = dt.datetime(2024, 1, 15, 10, 30)
 
 
-def _change(op, lsn, rec, old=None, key="1"):
+def _change(op, lsn, rec, old=None, key="1", key_record=None):
     rec = dict(rec or {}, id=key) if op != "DELETE" else None
     old = dict(old or {}, id=key) if op == "DELETE" else old
-    return ("" + op, "public", "user", None, rec, old, None, TS, 0, lsn, 900 + lsn, 0)
+    return ("" + op, "public", "user", None, rec, old, key_record, TS, 0, lsn, 900 + lsn, 0)
 
 
 def _atomic_append(df, src, stage):
@@ -132,7 +132,11 @@ def test_scd2_stream_emits_closed_intervals(spark, tmp_path):
 
     src = str(tmp_path / "env")
     batch1 = spark.createDataFrame(
-        [_change("INSERT", 100, {"v": "a"}), _change("UPDATE", 110, {"v": "b"})],
+        [
+            _change("INSERT", 100, {"v": "a"}),
+            _change("UPDATE", 110, {"v": "b"}),
+            _change("INSERT", 105, {"v": "k"}, key="5"),
+        ],
         CHANGE_ENVELOPE_SCHEMA,
     )
     batch1.write.parquet(src)
@@ -152,11 +156,13 @@ def test_scd2_stream_emits_closed_intervals(spark, tmp_path):
             (100, 110, False)
         ]
         assert json.loads(got[0].record_json)["v"] == "a"
-        # second drop: delete closes 110, re-insert opens 130 (unemitted)
+        # second drop: delete closes 110, re-insert opens 130
+        # (unemitted); re-keying 5 -> 6 closes 5's open 105 as a delete
         batch2 = spark.createDataFrame(
             [
                 _change("DELETE", 120, None, old={"v": "b"}),
                 _change("INSERT", 130, {"v": "c"}),
+                _change("UPDATE", 125, {"v": "k"}, key="6", key_record={"id": "5"}),
             ],
             CHANGE_ENVELOPE_SCHEMA,
         )
@@ -165,9 +171,12 @@ def test_scd2_stream_emits_closed_intervals(spark, tmp_path):
         got = sorted(
             spark.table("scd_out").collect(), key=lambda r: r.valid_from_lsn
         )
-        assert [(r.valid_from_lsn, r.valid_to_lsn, r.closed_by_delete) for r in got] == [
-            (100, 110, False),
-            (110, 120, True),
+        assert [
+            (r.pk, r.valid_from_lsn, r.valid_to_lsn, r.closed_by_delete) for r in got
+        ] == [
+            ("1", 100, 110, False),
+            ("5", 105, 125, True),
+            ("1", 110, 120, True),
         ]
     finally:
         q.stop()
@@ -187,21 +196,26 @@ def test_maintain_group_counts_retraction_algebra(spark):
         _change("INSERT", 140, {"g": "a"}, key="3"),
         _change("INSERT", 150, {"g": "b"}, key="3"),   # upsert a -> b
         _change("DELETE", 160, None, old={"g": "x"}, key="9"),  # no-op
+        _change("INSERT", 170, {"g": "c"}, key="4"),
+        # key change 4 -> 5 ('K' tuple): retracts 4, installs 5
+        _change("UPDATE", 180, {"g": "c"}, key="5", key_record={"id": "4"}),
     ]
     env = spark.createDataFrame(rows, CHANGE_ENVELOPE_SCHEMA)
     got = {
         r.g: r.n_rows
         for r in maintain_group_counts(env, ["id"], "g").collect()
     }
-    # live state: key 1 -> b, key 3 -> b
-    assert got == {"b": 2}
+    # live state: key 1 -> b, key 3 -> b, key 5 -> c
+    assert got == {"b": 2, "c": 1}
 
 
 def test_group_delta_stream_folds_to_batch_counts(spark, tmp_path):
     """Streaming IVM deltas across two microbatches: folding the delta
     stream equals the batch maintain_group_counts on the same
     changelog — including group moves, deletes, and upserts crossing
-    the batch boundary (state must carry the live group over)."""
+    the batch boundary (state must carry the live group over), a live
+    version with a NULL group, a DELETE of a never-inserted key, and a
+    key-changing UPDATE across the boundary."""
     from walex_spark.model import CHANGE_ENVELOPE_SCHEMA
     from walex_spark.operators.scd import maintain_group_counts
     from walex_spark.sources.envelope import read_envelope_stream
@@ -211,12 +225,18 @@ def test_group_delta_stream_folds_to_batch_counts(spark, tmp_path):
         _change("INSERT", 100, {"g": "a"}, key="1"),
         _change("INSERT", 110, {"g": "a"}, key="2"),
         _change("UPDATE", 120, {"g": "b"}, key="1"),   # move a -> b
+        _change("INSERT", 112, {}, key="4"),           # live, NULL group
+        _change("INSERT", 115, {"g": "d"}, key="6"),
     ]
     b2 = [
         _change("DELETE", 130, None, old={"g": "a"}, key="2"),
         _change("INSERT", 140, {"g": "b"}, key="3"),
         _change("INSERT", 150, {"g": "a"}, key="3"),   # upsert b -> a
         _change("UPDATE", 160, {"g": "c"}, key="1"),   # cross-batch move
+        _change("UPDATE", 165, {"g": "c"}, key="4"),   # retracts the NULL group
+        _change("INSERT", 168, {}, key="5"),           # stays live, NULL group
+        _change("DELETE", 170, None, old={"g": "z"}, key="9"),  # never inserted
+        _change("UPDATE", 175, {"g": "d"}, key="7", key_record={"id": "6"}),  # 6 -> 7
     ]
     src = str(tmp_path / "env")
     spark.createDataFrame(b1, CHANGE_ENVELOPE_SCHEMA).write.parquet(src)
@@ -246,8 +266,8 @@ def test_group_delta_stream_folds_to_batch_counts(spark, tmp_path):
         r.g: r.n_rows
         for r in maintain_group_counts(env, ["id"], "g").collect()
     }
-    # live: 1 -> c, 3 -> a
-    assert folded == batch == {"a": 1, "c": 1}
+    # live: 1 -> c, 3 -> a, 4 -> c, 5 -> NULL, 7 -> d
+    assert folded == batch == {"a": 1, "c": 2, None: 1, "d": 1}
 
 
 def test_group_delta_stream_survives_restart(spark, tmp_path):
@@ -376,8 +396,10 @@ def test_postings_delta_stream_folds_to_batch_postings(spark, tmp_path):
     """Streaming postings deltas across two microbatches: folding
     (SUM(dtf), SUM(ddf) per term) equals batch maintain_term_postings
     on the same changelog — including an UPDATE that moves tokens, a
-    DELETE, and a cross-batch retraction (state carries the live
-    text)."""
+    DELETE, a cross-batch retraction (state carries the live text), a
+    live version with NULL text, a DELETE of a never-inserted key, a
+    re-INSERT over a live key, and a key-changing UPDATE across the
+    boundary."""
     from walex_spark.model import CHANGE_ENVELOPE_SCHEMA
     from walex_spark.operators.scd import maintain_term_postings
     from walex_spark.sources.envelope import read_envelope_stream
@@ -387,11 +409,17 @@ def test_postings_delta_stream_folds_to_batch_postings(spark, tmp_path):
         _change("INSERT", 100, {"t": "x y x"}, key="1"),
         _change("INSERT", 110, {"t": "y"}, key="2"),
         _change("UPDATE", 120, {"t": "y z"}, key="1"),  # retract x y x
+        _change("INSERT", 112, {}, key="4"),            # live, NULL text
+        _change("INSERT", 115, {"t": "k"}, key="5"),
     ]
     b2 = [
         _change("DELETE", 130, None, old={"t": "y"}, key="2"),
         _change("INSERT", 140, {"t": "z z q"}, key="3"),
         _change("UPDATE", 150, {"t": "w"}, key="1"),    # cross-batch retract y z
+        _change("INSERT", 155, {"t": "q r"}, key="3"),  # re-INSERT over live 3
+        _change("UPDATE", 160, {"t": "n"}, key="4"),    # over the NULL text
+        _change("DELETE", 165, None, old={"t": "v"}, key="9"),  # never inserted
+        _change("UPDATE", 170, {"t": "k m"}, key="6", key_record={"id": "5"}),  # 5 -> 6
     ]
     src = str(tmp_path / "env")
     spark.createDataFrame(b1, CHANGE_ENVELOPE_SCHEMA).write.parquet(src)
@@ -422,8 +450,10 @@ def test_postings_delta_stream_folds_to_batch_postings(spark, tmp_path):
         r.term: (r.tf_total, r.n_docs)
         for r in maintain_term_postings(env, ["id"], "t").collect()
     }
-    # live: 1 -> "w", 3 -> "z z q"
-    assert folded == batch == {"w": (1, 1), "z": (2, 1), "q": (1, 1)}
+    # live: 1 -> "w", 3 -> "q r", 4 -> "n", 6 -> "k m"
+    assert folded == batch == {
+        t: (1, 1) for t in ("w", "q", "r", "n", "k", "m")
+    }
 
 
 def test_postings_delta_stream_survives_restart(spark, tmp_path):

@@ -161,19 +161,25 @@ def test_parquet_state_sink_merge(spark, tmp_path):
     b1 = [
         ("INSERT", "public", "user", None, {"id": "1", "age": "30"}, None, None, TS, 0, 10, 1, 0),
         ("INSERT", "public", "user", None, {"id": "2", "age": "40"}, None, None, TS, 0, 20, 2, 0),
+        ("INSERT", "public", "user", None, {"id": "7", "age": "70"}, None, None, TS, 0, 25, 6, 0),
     ]
     b2 = [
         ("UPDATE", "public", "user", None, {"id": "1", "age": "31"},
          {"id": "1", "age": "30"}, None, TS, 0, 30, 3, 0),
         ("DELETE", "public", "user", None, None, {"id": "2", "age": "40"}, None, TS, 0, 40, 4, 0),
+        # key change 7 -> 8 ('K' tuple): 7's bucket holds no other
+        # changed key and must still be rewritten
+        ("UPDATE", "public", "user", None, {"id": "8", "age": "70"},
+         None, {"id": "7"}, TS, 0, 45, 7, 0),
         ("INSERT", "public", "user", None, {"id": "3", "age": "50"}, None, None, TS, 0, 50, 5, 0),
     ]
     sink.process_batch(spark.createDataFrame(b1, CHANGE_ENVELOPE_SCHEMA), 0)
     got = {r.record["id"]: r.record["age"] for r in sink.state(spark).collect()}
-    assert got == {"1": "30", "2": "40"}
+    assert got == {"1": "30", "2": "40", "7": "70"}
     sink.process_batch(spark.createDataFrame(b2, CHANGE_ENVELOPE_SCHEMA), 1)
     got = {r.record["id"]: r.record["age"] for r in sink.state(spark).collect()}
-    assert got == {"1": "31", "3": "50"}  # 2 deleted, 1 updated, 3 inserted
+    # 2 deleted, 1 updated, 7 re-keyed to 8, 3 inserted
+    assert got == {"1": "31", "8": "70", "3": "50"}
     # replaying the same batch is idempotent (checkpoint-replay contract)
     sink.process_batch(spark.createDataFrame(b2, CHANGE_ENVELOPE_SCHEMA), 1)
     got2 = {r.record["id"]: r.record["age"] for r in sink.state(spark).collect()}

@@ -1,8 +1,8 @@
-"""History materialization over the CDC envelope: SCD Type-2 and
-snapshot+delta MERGE.
+"""History materialization over the CDC envelope: SCD Type-2,
+snapshot+delta MERGE and incrementally maintained aggregates.
 
 The reference routes change events to callbacks and stops there
-(lib/walex/event/event.ex:43-122 — no downstream state); these two
+(lib/walex/event/event.ex:43-122 — no downstream state); these
 operators are what a warehouse consumer of those events builds FIRST:
 
   scd2_history        — every change becomes a validity-interval row
@@ -11,22 +11,41 @@ operators are what a warehouse consumer of those events builds FIRST:
   apply_cdc_snapshot  — MERGE the latest change per key onto an
                         existing base snapshot (upsert + delete), the
                         incremental-materialization shape.
+  maintain_group_counts / maintain_group_sums / maintain_term_postings
+                      — current-state aggregates summed from the
+                        live-version fold below, never from a state
+                        rebuild.
+
+Every operator here keys a change by ``transforms.pk_column`` and
+orders it by ``transforms.lsn_column`` (then change_idx), through
+``_by_key``, which first splits a key-changing UPDATE into a DELETE of
+the old key and the UPDATE of the new one
+(``transforms.split_key_changes``). A TRUNCATE has no primary key, so
+these operators (and their streaming forms, through
+``streaming.ivm.prep_delta_input``) raise on one instead of folding it
+in as a keyless change; ``transforms.materialize_table_state`` and the
+``ParquetStateSink`` built on it are the operators that apply
+TRUNCATE.
+
+The live-version fold (``_signed_versions``; its streaming form is
+``streaming.ivm.live_version_stream``): per key in WAL order, every
+INSERT/UPDATE installs a live version (+1 row with its payload), and
+every change over a live previous version — UPDATE, DELETE, or a
+re-INSERT, which last-wins state treats as an upsert — retracts that
+version (-1 row with the previous payload). Summing a payload's signs
+telescopes to the live state: the retraction algebra every incremental
+materialized view needs. pgoutput ships old tuples only under REPLICA
+IDENTITY FULL, so the previous version comes from the log itself.
 
 Scale posture (100 TB):
-  * scd2_history is ONE shuffle — the window partitionBy(key); the
-    interval close is a `lead` in the same window pass, no self-join.
+  * scd2_history and the fold are ONE shuffle each — the window
+    partitionBy(key); the interval close is a `lead` and the
+    retraction a `lag` in the same window pass, no self-join. The
+    aggregates add one group-keyed shuffle of ints.
   * apply_cdc_snapshot shuffles the changelog once (latest-per-key
     window) and joins base on the same key — a sort-merge join that
     reuses the key partitioning; skew is AQE's job. No broadcast of
     either side: both scale with the data.
-
-Every operator here keys a change by ``transforms.pk_column`` and
-orders it by ``transforms.lsn_column`` (then change_idx), through
-``_by_key``. A TRUNCATE has no primary key, so these operators (and
-their streaming forms, through ``streaming.ivm.prep_delta_input``)
-raise on one instead of folding it in as a keyless change;
-``transforms.materialize_table_state`` and the ``ParquetStateSink``
-built on it are the operators that apply TRUNCATE.
 """
 
 from __future__ import annotations
@@ -35,7 +54,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from walex_spark.operators.transforms import key_cells, lsn_column, pk_column
+from walex_spark.operators.transforms import (
+    key_cells,
+    lsn_column,
+    pk_column,
+    split_key_changes,
+)
 
 
 def lsn_raising_on_truncate() -> Column:
@@ -52,11 +76,13 @@ def lsn_raising_on_truncate() -> Column:
 
 
 def _by_key(df: DataFrame, key_cols: list[str], partition: list[Column] | None = None):
-    """``df`` with ``__pk`` (pk_column) and ``__lsn``, and the window
-    that orders each key's changes in WAL order. ``partition`` replaces
-    ``__pk`` as the window key."""
-    keyed = df.withColumn("__lsn", lsn_raising_on_truncate()).withColumn(
-        "__pk", pk_column(key_cols)
+    """``df`` with key-changing UPDATEs split, ``__pk`` (pk_column) and
+    ``__lsn``, and the window that orders each key's changes in WAL
+    order. ``partition`` replaces ``__pk`` as the window key."""
+    keyed = (
+        split_key_changes(df, key_cols)
+        .withColumn("__lsn", lsn_raising_on_truncate())
+        .withColumn("__pk", pk_column(key_cols))
     )
     w = Window.partitionBy(*(partition or ["__pk"])).orderBy(
         F.col("__lsn").asc(), F.col("change_idx").asc()
@@ -170,61 +196,63 @@ def table_state_as_of(
     return materialize_table_state(bounded, key_cols)
 
 
+def _signed_versions(df: DataFrame, key_cols: list[str], payload: Column) -> DataFrame:
+    """The live-version fold (module doc): ``(__pk, __lsn, change_idx,
+    sign, payload)`` with a +1 row per installed version and a -1 row
+    per retracted one. One shuffle, the per-key window; the -1 rows
+    come from a ``lag`` in the same pass and leave in the same
+    ``explode`` as the +1 rows, so the output keeps the ``__pk``
+    partitioning."""
+    keyed, w = _by_key(df, key_cols)
+    # window expressions must be plain columns before the explode — a
+    # Generate operator cannot evaluate them inline
+    lagged = keyed.select(
+        "__pk",
+        "__lsn",
+        "change_idx",
+        F.col("op"),
+        payload.alias("__cur"),
+        F.lag(payload).over(w).alias("__prev"),
+        F.lag(F.col("op")).over(w).alias("__prev_op"),
+    )
+    prev_live = F.col("__prev_op").isNotNull() & (F.col("__prev_op") != "DELETE")
+    signed = F.array(
+        F.when(
+            F.col("op") != "DELETE",
+            F.struct(F.lit(1).alias("sign"), F.col("__cur").alias("payload")),
+        ),
+        F.when(
+            prev_live,
+            F.struct(F.lit(-1).alias("sign"), F.col("__prev").alias("payload")),
+        ),
+    )
+    return (
+        lagged.select("__pk", "__lsn", "change_idx", F.explode(signed).alias("v"))
+        .filter(F.col("v").isNotNull())
+        .select("__pk", "__lsn", "change_idx", "v.sign", "v.payload")
+    )
+
+
 def maintain_group_counts(
     df: DataFrame,
     key_cols: list[str],
     group_field: str,
 ) -> DataFrame:
     """Incremental aggregate (view) maintenance: current-state row
-    counts per ``group_field`` computed from the CHANGE LOG via
-    +1/-1 deltas, never from a state rebuild.
+    counts per ``group_field``, summed from the live-version fold's
+    signs (payload: the version's group) — never from a state rebuild.
+    DELETE decrements; an UPDATE moves a unit between groups when the
+    grouping value changed.
 
-    Each change emits up to two weighted contributions:
-      INSERT/UPDATE  → +1 for the new record's group
-      UPDATE/DELETE  → -1 for the row's PREVIOUS group (derived with a
-                       per-key lag — pgoutput only ships old tuples
-                       under REPLICA IDENTITY FULL, so the previous
-                       version is reconstructed from the log itself)
-    Summing weights per group equals aggregating the materialized
-    current state — the retraction algebra every incremental
-    materialized view needs (DELETE decrements, UPDATE moves a unit
-    between groups when the grouping value changed).
-
-    Two shuffles: the per-key lag window, then the (tiny) group-keyed
-    weight sum with map-side combine. At 100 TB the second shuffle
-    carries one int per (partition, group) — the cheap side; only the
-    lag pays data-sized cost, and only on backfill (a streaming
-    deployment keeps the previous version in state instead).
+    Two shuffles: the fold's per-key window, then the (tiny)
+    group-keyed sum with map-side combine, which carries one int per
+    (partition, group).
     """
-    keyed, w = _by_key(df, key_cols)
-    cur_grp = F.col("record").getItem(group_field)
-    # window expressions must be plain columns before the explode — a
-    # Generate operator cannot evaluate them inline
-    lagged = keyed.withColumn("__prev_grp", F.lag(cur_grp).over(w)).withColumn(
-        "__prev_op", F.lag(F.col("op")).over(w)
-    )
-    prev_live = F.col("__prev_op").isNotNull() & (F.col("__prev_op") != "DELETE")
-    contrib = F.array(
-        F.when(
-            F.col("op").isin("INSERT", "UPDATE"),
-            F.struct(cur_grp.alias("grp"), F.lit(1).alias("w")),
-        ),
-        # ANY change over a live previous version retracts it — incl.
-        # a re-INSERT of an existing key, which last-wins state treats
-        # as an upsert (CDC streams deliver these on replay/backfill)
-        F.when(
-            prev_live,
-            F.struct(F.col("__prev_grp").alias("grp"), F.lit(-1).alias("w")),
-        ),
-    )
-    deltas = (
-        lagged.select(F.explode(contrib).alias("c"))
-        .filter(F.col("c").isNotNull())
-        .select(F.col("c.grp").alias(group_field), F.col("c.w").alias("w"))
-    )
+    grp = F.col("record").getItem(group_field)
     return (
-        deltas.groupBy(group_field)
-        .agg(F.sum("w").alias("n_rows"))
+        _signed_versions(df, key_cols, grp)
+        .groupBy(F.col("payload").alias(group_field))
+        .agg(F.sum("sign").alias("n_rows"))
         .filter(F.col("n_rows") > 0)
     )
 
@@ -235,68 +263,32 @@ def maintain_group_sums(
     group_field: str,
     measure_field: str,
 ) -> DataFrame:
-    """Incremental SUM (+ count) maintenance per ``group_field`` from
-    the changelog — the measure generalization of
-    maintain_group_counts' retraction algebra:
+    """Incremental SUM (+ count) maintenance per ``group_field``: the
+    live-version fold with the version's (group, measure) as payload,
+    summed per group as ``sign * measure``.
 
-      INSERT/UPDATE  → +measure for the new record's group
-      change over a live previous version → -previous measure for the
-                       previous group (reconstructed via the per-key
-                       lag, as for counts)
-
-    The contributions telescope: per key only the live version's
-    measure survives, so the group sums equal aggregating the
-    materialized state. NULL measures contribute nothing on both the
-    +side and the -side, matching SQL SUM's null-skipping. The measure
-    is cast to BIGINT — integer retraction is exact; for fractional
-    measures scale to integer units first (micro-units), the same rule
-    the rolling-window query uses.
+    Per key only the live version's measure survives, so the group
+    sums equal aggregating the materialized state. NULL measures
+    contribute nothing on either side, matching SQL SUM's
+    null-skipping. The measure is cast to BIGINT — integer retraction
+    is exact; for fractional measures scale to integer units first
+    (micro-units), the same rule the rolling-window query uses.
 
     Same two shuffles as the count variant; groups are dropped when
     their maintained row count reaches zero (a dead group with a
     residual null sum must not linger).
     """
-    keyed, w = _by_key(df, key_cols)
-    cur_grp = F.col("record").getItem(group_field)
-    cur_m = F.col("record").getItem(measure_field).cast("bigint")
-    lagged = (
-        keyed.withColumn("__prev_grp", F.lag(cur_grp).over(w))
-        .withColumn("__prev_m", F.lag(cur_m).over(w))
-        .withColumn("__prev_op", F.lag(F.col("op")).over(w))
-    )
-    prev_live = F.col("__prev_op").isNotNull() & (F.col("__prev_op") != "DELETE")
-    contrib = F.array(
-        F.when(
-            F.col("op").isin("INSERT", "UPDATE"),
-            F.struct(
-                cur_grp.alias("grp"),
-                F.lit(1).alias("w"),
-                cur_m.alias("m"),
-            ),
-        ),
-        F.when(
-            prev_live,
-            F.struct(
-                F.col("__prev_grp").alias("grp"),
-                F.lit(-1).alias("w"),
-                (-F.col("__prev_m")).alias("m"),
-            ),
-        ),
-    )
-    deltas = (
-        lagged.select(F.explode(contrib).alias("c"))
-        .filter(F.col("c").isNotNull())
-        .select(
-            F.col("c.grp").alias(group_field),
-            F.col("c.w").alias("w"),
-            F.col("c.m").alias("m"),
-        )
+    rec = F.col("record")
+    version = F.struct(
+        rec.getItem(group_field).alias("grp"),
+        rec.getItem(measure_field).cast("bigint").alias("m"),
     )
     return (
-        deltas.groupBy(group_field)
+        _signed_versions(df, key_cols, version)
+        .groupBy(F.col("payload.grp").alias(group_field))
         .agg(
-            F.sum("w").alias("n_rows"),
-            F.sum("m").cast("bigint").alias("sum_measure"),
+            F.sum("sign").alias("n_rows"),
+            F.sum(F.col("sign") * F.col("payload.m")).cast("bigint").alias("sum_measure"),
         )
         .filter(F.col("n_rows") > 0)
     )
@@ -308,63 +300,43 @@ def maintain_term_postings(
     text_field: str,
 ) -> DataFrame:
     """CDC-maintained inverted index: per-term document frequency and
-    total term frequency of the CURRENT table state, computed from the
-    changelog with retraction algebra — the search-index twin of
-    maintain_group_counts, and the bridge from the reference's
+    total term frequency of the CURRENT table state — the search-index
+    twin of maintain_group_counts, and the bridge from the reference's
     event-routing heritage to the retrieval layer (an indexer is just
     another CDC subscriber).
 
-    Each change contributes token counts of the NEW record's
-    ``text_field`` (+) and of the row's PREVIOUS live version (−,
-    reconstructed with the same per-key lag maintain_group_counts
-    uses): an UPDATE moves its tokens between term buckets, a DELETE
-    retracts them, and the per-term sums telescope to exactly the
-    postings of the live state.
+    The live-version fold's payload is the version's ``text_field``;
+    each signed version contributes its token counts with its sign, so
+    an UPDATE moves its tokens between term buckets, a DELETE retracts
+    them, and the per-term sums telescope to exactly the postings of
+    the live state.
 
     Returns (term, n_docs, tf_total), terms with n_docs > 0 or a
     residual tf (defensively both sums are kept exact integers).
 
-    Scale shape: the per-key lag is the only data-sized shuffle (and a
-    streaming deployment holds the previous version in state instead);
-    token contributions aggregate per (change, term) BEFORE the term
-    shuffle, so the wide exchange carries (term, ±tf, ±1) ints —
-    never text. Tokenization is the shared whitespace tokenizer.
+    Scale shape: the fold's per-key window is the only data-sized
+    shuffle; token counts aggregate per (version, term) on the fold's
+    key partitioning, so the wide exchange carries (term, ±tf, ±1)
+    ints — never text. Tokenization is the shared whitespace
+    tokenizer.
     """
     from walex_spark.extensions.text import _tokens
 
-    keyed, w = _by_key(df, key_cols)
-    cur_text = F.col("record").getItem(text_field)
-    lagged = keyed.withColumn("__prev_text", F.lag(cur_text).over(w)).withColumn(
-        "__prev_op", F.lag(F.col("op")).over(w)
-    )
-    prev_live = F.col("__prev_op").isNotNull() & (F.col("__prev_op") != "DELETE")
-    plus = lagged.filter(
-        F.col("op").isin("INSERT", "UPDATE") & cur_text.isNotNull()
-    ).select(
-        F.col("__pk"),
-        F.col("__lsn"),
-        F.col("change_idx"),
-        F.lit(1).alias("sign"),
-        F.explode(_tokens(cur_text)).alias("term"),
-    )
-    minus = lagged.filter(prev_live & F.col("__prev_text").isNotNull()).select(
-        F.col("__pk"),
-        F.col("__lsn"),
-        F.col("change_idx"),
-        F.lit(-1).alias("sign"),
-        F.explode(_tokens(F.col("__prev_text"))).alias("term"),
-    )
-    # change_idx MUST be a group key: two same-key changes inside one
-    # transaction share an LSN, and collapsing their contributions
-    # would merge two +1 df marks into one (n_docs off by one per
-    # collapsed change)
-    per_change = (
-        plus.unionByName(minus)
+    versions = _signed_versions(df, key_cols, F.col("record").getItem(text_field))
+    # change_idx and sign MUST be group keys: two same-key changes
+    # inside one transaction share an LSN, and one change both
+    # retracts and installs; collapsing either would merge two df
+    # marks into one
+    per_version = (
+        versions.select(
+            "__pk", "__lsn", "change_idx", "sign",
+            F.explode(_tokens(F.col("payload"))).alias("term"),
+        )
         .groupBy("__pk", "__lsn", "change_idx", "sign", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     return (
-        per_change.groupBy("term")
+        per_version.groupBy("term")
         .agg(
             F.sum(F.col("sign")).cast("bigint").alias("n_docs"),
             F.sum(F.col("sign") * F.col("tf")).cast("bigint").alias("tf_total"),

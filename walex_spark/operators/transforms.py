@@ -247,10 +247,48 @@ def key_cells(key_cols: list[str]) -> list[Column]:
     return [rec.getItem(k) for k in key_cols]
 
 
+def _joined_key(cells: list[Column]) -> Column:
+    return F.concat_ws("\x00", *[F.coalesce(c, F.lit("")) for c in cells])
+
+
 def pk_column(key_cols: list[str]) -> Column:
     """Null-safe primary key: the ``key_cells``, NUL-joined, a missing
     cell as ''."""
-    return F.concat_ws("\x00", *[F.coalesce(c, F.lit("")) for c in key_cells(key_cols)])
+    return _joined_key(key_cells(key_cols))
+
+
+def split_key_changes(df: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Envelope → envelope: an UPDATE that changes its primary key
+    becomes a DELETE of the old key followed by the UPDATE of the new
+    one, both at the UPDATE's (lsn, change_idx).
+
+    The old image is ``coalesce(key_record, old_record)``: pgoutput
+    ships the old key as a 'K' tuple under REPLICA IDENTITY DEFAULT
+    when the key changed, the whole old row as an 'O' tuple under FULL
+    (``sources.pgoutput._update``). Left whole, such an UPDATE is keyed
+    by its new tuple alone and the old key stays live. An old image
+    missing a key cell names no key and is not split. The old image
+    moves to the DELETE row (its ``row_image``), so the UPDATE row no
+    longer carries it and a second application changes nothing. One
+    pass, no shuffle.
+    """
+    old = F.coalesce(F.col("key_record"), F.col("old_record"))
+    old_cells = [old.getItem(k) for k in key_cols]
+    moved = (F.col("op") == "UPDATE") & (_joined_key(old_cells) != pk_column(key_cols))
+    for c in old_cells:
+        moved = moved & c.isNotNull()
+    halves = F.when(moved, F.array(F.lit(True), F.lit(False))).otherwise(
+        F.array(F.lit(False))
+    )
+    split = df.withColumn("__moved", moved).withColumn("__old_key", F.explode(halves))
+    old_key, new_key = F.col("__old_key"), F.col("__moved") & ~F.col("__old_key")
+    rewrite = {
+        "op": F.when(old_key, F.lit("DELETE")).otherwise(F.col("op")),
+        "record": F.when(~old_key, F.col("record")),
+        "old_record": F.when(~new_key, F.col("old_record")),
+        "key_record": F.when(~new_key, F.col("key_record")),
+    }
+    return split.select(*[rewrite.get(c, F.col(c)).alias(c) for c in df.columns])
 
 
 def lsn_string() -> Column:
@@ -308,11 +346,6 @@ def event_projection(df: DataFrame, db: str | None = None) -> DataFrame:
         lsn_column().alias("lsn_ord"),
         F.col("change_idx"),
     )
-
-
-def cast_events(df: DataFrame, db: str | None = None) -> DataFrame:
-    """Alias for event_projection (cast_events/2, event.ex:124-127)."""
-    return event_projection(df, db)
 
 
 def filter_and_cast(
@@ -433,11 +466,13 @@ def materialize_table_state(df: DataFrame, key_cols: list[str]) -> DataFrame:
     high-water marks aggregate to one row per truncated table —
     metadata-sized, so the join back is an explicit broadcast.
 
-    ``key_cols`` index into the change's ``row_image`` (e.g. ["id"]).
+    ``key_cols`` index into the change's ``row_image`` (e.g. ["id"]);
+    a key-changing UPDATE is split (``split_key_changes``) before the
+    per-key pick. The split comes after the TRUNCATE wipe, which it
+    does not affect, so the optimizer still sees the input's own ``op``
+    there and prunes the wipe when no TRUNCATE can occur.
     """
-    keyed = df.withColumn("__lsn", lsn_column()).withColumn(
-        "__pk", pk_column(key_cols)
-    )
+    keyed = df.withColumn("__lsn", lsn_column())
     ord_ = F.struct(F.col("__lsn").alias("l"), F.col("change_idx").alias("c"))
     trunc_pts = (
         keyed.filter(F.col("op") == "TRUNCATE")
@@ -452,6 +487,7 @@ def materialize_table_state(df: DataFrame, key_cols: list[str]) -> DataFrame:
         )
         .drop("__trunc_ord")
     )
+    keyed = split_key_changes(keyed, key_cols).withColumn("__pk", pk_column(key_cols))
     w = Window.partitionBy("table", "__pk").orderBy(
         F.col("__lsn").desc(), F.col("change_idx").desc()
     )

@@ -43,20 +43,6 @@ def read_envelope_stream(
     return reader.parquet(path) if fmt == "parquet" else reader.json(path)
 
 
-def parse_json_envelope(df: DataFrame, json_col: str = "value") -> DataFrame:
-    """Kafka-style ingestion: a string column of JSON envelopes →
-    typed envelope columns (R1 decode as a from_json select).
-
-    Malformed JSON yields all-null rows (from_json PERMISSIVE mode);
-    use ``parse_json_envelope_with_rejects`` to split them out instead
-    of silently carrying nulls downstream.
-    """
-    parsed = df.select(
-        F.from_json(F.col(json_col).cast("string"), CHANGE_ENVELOPE_SCHEMA).alias("e")
-    )
-    return parsed.select("e.*")
-
-
 def parse_json_envelope_with_rejects(
     df: DataFrame, json_col: str = "value"
 ) -> tuple[DataFrame, DataFrame]:
@@ -66,7 +52,7 @@ def parse_json_envelope_with_rejects(
     JSON, wrong shape, empty payload). Rejects keep the ORIGINAL raw
     string (plus nothing else) so a dead-letter sink can persist them
     for replay after a fix — the poison-pill pattern; the valid side
-    is exactly parse_json_envelope's output. One pass each side, no
+    is the typed envelope columns. One pass each side, no
     shuffle; Catalyst shares the from_json subtree across the two
     filters."""
     raw = F.col(json_col).cast("string")

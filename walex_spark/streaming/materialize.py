@@ -17,7 +17,9 @@ hash-bucketed parquet and bucket-pruned rewrites:
     (the same access pattern a MERGE with bucketed clustering gives);
   - the merge itself is materialize_table_state over
     (existing ∪ batch): latest change per key wins by (lsn, change_idx),
-    DELETE drops the key, TRUNCATE tombstones its whole table;
+    DELETE drops the key, TRUNCATE tombstones its whole table, and a
+    key-changing UPDATE is a DELETE of its old key (split before the
+    changed buckets are chosen, so the old key's bucket is rewritten);
   - the swap is ATOMIC: new buckets are fully written before one
     os.replace() flips the MANIFEST. A crash at any point leaves the
     previous manifest — and therefore a complete, single-epoch
@@ -40,7 +42,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from walex_spark.operators.transforms import materialize_table_state, pk_column
+from walex_spark.operators.transforms import (
+    materialize_table_state,
+    pk_column,
+    split_key_changes,
+)
 
 
 @dataclass
@@ -95,7 +101,11 @@ class ParquetStateSink:
         The publish is a single atomic manifest flip (see module doc).
         """
         spark = env.sparkSession
-        batch = env.withColumn("__bucket", self._bucket_col())
+        # split key-changing UPDATEs first: the old key's bucket must be
+        # rewritten too, to drop it
+        batch = split_key_changes(env, self.key_cols).withColumn(
+            "__bucket", self._bucket_col()
+        )
         agg = batch.agg(
             F.collect_set("__bucket").alias("bs"),
             F.max(F.col("op") == "TRUNCATE").alias("has_trunc"),

@@ -1,48 +1,28 @@
 """Streaming search-index maintenance: the changelog → a stream of
 (term, ±tf, ±df) posting deltas — the streaming twin of
-operators/scd.py::maintain_term_postings, built on the same
-append-mode delta discipline as streaming/ivm.py.
+operators/scd.py::maintain_term_postings — plus ewma_stream, the
+stateful twin of operators/signal.py::ewma_last.
 
-Append mode cannot retract emitted rows, so the operator emits the
-retraction DELTAS themselves: +tf/+1 for every term of a newly
-installed live version, −tf/−1 for every term of the version it
-displaces (UPDATE/re-INSERT) or removes (DELETE). Folding the delta
-stream (``SUM(dtf), SUM(ddf) GROUP BY term``) reproduces the batch
-operator's (term, n_docs, tf_total) exactly; the fold is associative,
-so it can run per sink partition, per micro-batch, or over the whole
-delta log.
+The postings deltas are the live-version fold's signed rows
+(streaming/ivm.py, which states the fold and the key-change split)
+with the version's text as payload, tokenized in the JVM by the batch
+operator's tokenizer (``extensions.text._tokens``): +tf/+1 for every
+term of a newly installed version, −tf/−1 for every term of a version
+it retracts. Folding the delta stream (``SUM(dtf), SUM(ddf) GROUP BY
+term``) reproduces the batch operator's (term, n_docs, tf_total)
+exactly; the fold is associative, so it can run per sink partition,
+per micro-batch, or over the whole delta log.
 
-State per key is the live version's TEXT (the token source for its
-future retraction) — the streaming deployment the batch docstring
-promises, where the previous version comes from state instead of a
-data-sized lag shuffle. State is dropped on DELETE, so it is bounded
-by live keys × document size. Batches cross to Python via Arrow
-(applyInPandasWithState), never row-at-a-time.
+The fold's state per key is the live version's TEXT (the token source
+for its future retraction), so the previous version comes from state
+instead of a data-sized lag shuffle; it is bounded by live keys ×
+document size.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-OUT_SCHEMA = "term STRING, dtf INT, ddf INT, lsn BIGINT"
-
-# Java \s is ASCII-only; Python str.split() splits on Unicode
-# whitespace (NBSP, U+2028, ...), which would silently diverge from
-# the batch tokenizer on real-world text — the same hazard the
-# heavy-hitters two-pass hit in round 5. re.ASCII pins the split to
-# the JVM semantics; case-folding happens JVM-side (see pre below).
-_ASCII_WS = re.compile(r"\s+", re.ASCII)
-
-
-def _token_counts(lowered_text: str) -> dict:
-    counts: dict = {}
-    for tok in _ASCII_WS.split(lowered_text):
-        if tok:
-            counts[tok] = counts.get(tok, 0) + 1
-    return counts
 
 
 def postings_delta_stream(
@@ -50,57 +30,30 @@ def postings_delta_stream(
     key_cols: list[str],
     text_field: str,
 ) -> DataFrame:
-    """Envelope stream → stream of (term, dtf, ddf, lsn) deltas.
+    """Envelope stream → stream of (term, dtf, ddf, lsn) deltas, one
+    row per signed version and distinct term.
 
-    Tokenization matches the batch operator's whitespace tokenizer
-    (lower + split on whitespace, empty tokens dropped) — pinned by
-    the fold-equals-batch test."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    A term's count in a version is a scan of the version's token array
+    per distinct term, in the JVM: no aggregate, which an append-mode
+    stream could not run after the stateful fold."""
+    from walex_spark.extensions.text import _tokens
+    from walex_spark.streaming.ivm import live_version_stream
 
-    from walex_spark.streaming.ivm import prep_delta_input
-
-    pre = prep_delta_input(
-        env,
-        key_cols,
-        # case-fold in the JVM so stored state tokenizes exactly like
-        # the batch operator's F.lower (Python str.lower differs on a
-        # handful of Unicode mappings)
-        F.lower(F.col("record").getItem(text_field)).alias("txt"),
+    versions = live_version_stream(
+        env, key_cols, F.col("record").getItem(text_field)
+    ).select("sign", "lsn", _tokens(F.col("payload")).alias("toks"))
+    term_tf = F.transform(
+        F.array_distinct(F.col("toks")),
+        lambda t: F.struct(
+            t.alias("term"),
+            F.size(F.filter(F.col("toks"), lambda x: x == t)).alias("tf"),
+        ),
     )
-
-    def step(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        rows = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["lsn", "change_idx"]
-        )
-        live_text = state.get[0] if state.exists else None
-        out = []
-        for r in rows.itertuples():
-            lsn = int(r.lsn)
-            if live_text is not None:
-                for term, tf in _token_counts(live_text).items():
-                    out.append((term, -tf, -1, lsn))
-            if r.op == "DELETE":
-                live_text = None
-            else:
-                live_text = r.txt if isinstance(r.txt, str) else None
-                if live_text is not None:
-                    for term, tf in _token_counts(live_text).items():
-                        out.append((term, tf, 1, lsn))
-        if live_text is not None:
-            state.update((live_text,))
-        elif state.exists:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out, columns=["term", "dtf", "ddf", "lsn"])
-
-    return pre.groupBy("__pk").applyInPandasWithState(
-        step,
-        outputStructType=OUT_SCHEMA,
-        stateStructType="live_text STRING",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return versions.select("sign", "lsn", F.inline(term_tf)).select(
+        "term",
+        (F.col("sign") * F.col("tf")).alias("dtf"),
+        F.col("sign").alias("ddf"),
+        "lsn",
     )
 
 
