@@ -19,10 +19,10 @@ from walex_spark.operators.scd import (
 TS = dt.datetime(2024, 1, 15, 10, 30)
 
 
-def _change(op, lsn, rec, old=None, key="1", key_record=None):
+def _change(op, lsn, rec, old=None, key="1", key_record=None, table="user"):
     rec = dict(rec or {}, id=key) if op != "DELETE" else None
     old = dict(old or {}, id=key) if op == "DELETE" else old
-    return ("" + op, "public", "user", None, rec, old, key_record, TS, 0, lsn, 900 + lsn, 0)
+    return ("" + op, "public", table, None, rec, old, key_record, TS, 0, lsn, 900 + lsn, 0)
 
 
 def _atomic_append(df, src, stage):
@@ -123,7 +123,8 @@ def test_apply_cdc_snapshot_merge_cases(spark, merge_env):
 def test_scd2_stream_emits_closed_intervals(spark, tmp_path):
     """Streaming SCD2 across two microbatches: intervals close exactly
     once, the open version survives in state between batches, DELETE
-    drops state and a later INSERT re-opens."""
+    drops state and a later INSERT re-opens; a second table's row with
+    the same id is a row of its own."""
     import json
 
     from walex_spark.model import CHANGE_ENVELOPE_SCHEMA
@@ -136,6 +137,7 @@ def test_scd2_stream_emits_closed_intervals(spark, tmp_path):
             _change("INSERT", 100, {"v": "a"}),
             _change("UPDATE", 110, {"v": "b"}),
             _change("INSERT", 105, {"v": "k"}, key="5"),
+            _change("INSERT", 108, {"v": "t"}, table="todo"),
         ],
         CHANGE_ENVELOPE_SCHEMA,
     )
@@ -157,12 +159,14 @@ def test_scd2_stream_emits_closed_intervals(spark, tmp_path):
         ]
         assert json.loads(got[0].record_json)["v"] == "a"
         # second drop: delete closes 110, re-insert opens 130
-        # (unemitted); re-keying 5 -> 6 closes 5's open 105 as a delete
+        # (unemitted); re-keying 5 -> 6 closes 5's open 105 as a delete;
+        # todo 1's update closes todo 1 alone
         batch2 = spark.createDataFrame(
             [
                 _change("DELETE", 120, None, old={"v": "b"}),
                 _change("INSERT", 130, {"v": "c"}),
                 _change("UPDATE", 125, {"v": "k"}, key="6", key_record={"id": "5"}),
+                _change("UPDATE", 135, {"v": "u"}, table="todo"),
             ],
             CHANGE_ENVELOPE_SCHEMA,
         )
@@ -172,11 +176,13 @@ def test_scd2_stream_emits_closed_intervals(spark, tmp_path):
             spark.table("scd_out").collect(), key=lambda r: r.valid_from_lsn
         )
         assert [
-            (r.pk, r.valid_from_lsn, r.valid_to_lsn, r.closed_by_delete) for r in got
+            (r.table, r.pk, r.valid_from_lsn, r.valid_to_lsn, r.closed_by_delete)
+            for r in got
         ] == [
-            ("1", 100, 110, False),
-            ("5", 105, 125, True),
-            ("1", 110, 120, True),
+            ("user", "1", 100, 110, False),
+            ("user", "5", 105, 125, True),
+            ("todo", "1", 108, 135, False),
+            ("user", "1", 110, 120, True),
         ]
     finally:
         q.stop()
@@ -214,8 +220,9 @@ def test_group_delta_stream_folds_to_batch_counts(spark, tmp_path):
     stream equals the batch maintain_group_counts on the same
     changelog — including group moves, deletes, and upserts crossing
     the batch boundary (state must carry the live group over), a live
-    version with a NULL group, a DELETE of a never-inserted key, and a
-    key-changing UPDATE across the boundary."""
+    version with a NULL group, a DELETE of a never-inserted key, a
+    key-changing UPDATE across the boundary, and a second table's row
+    that shares an id with a user row."""
     from walex_spark.model import CHANGE_ENVELOPE_SCHEMA
     from walex_spark.operators.scd import maintain_group_counts
     from walex_spark.sources.envelope import read_envelope_stream
@@ -227,6 +234,7 @@ def test_group_delta_stream_folds_to_batch_counts(spark, tmp_path):
         _change("UPDATE", 120, {"g": "b"}, key="1"),   # move a -> b
         _change("INSERT", 112, {}, key="4"),           # live, NULL group
         _change("INSERT", 115, {"g": "d"}, key="6"),
+        _change("INSERT", 118, {"g": "b"}, key="2", table="todo"),
     ]
     b2 = [
         _change("DELETE", 130, None, old={"g": "a"}, key="2"),
@@ -266,8 +274,8 @@ def test_group_delta_stream_folds_to_batch_counts(spark, tmp_path):
         r.g: r.n_rows
         for r in maintain_group_counts(env, ["id"], "g").collect()
     }
-    # live: 1 -> c, 3 -> a, 4 -> c, 5 -> NULL, 7 -> d
-    assert folded == batch == {"a": 1, "c": 2, None: 1, "d": 1}
+    # live: 1 -> c, 3 -> a, 4 -> c, 5 -> NULL, 7 -> d, todo 2 -> b
+    assert folded == batch == {"a": 1, "b": 1, "c": 2, None: 1, "d": 1}
 
 
 def test_group_delta_stream_survives_restart(spark, tmp_path):
@@ -342,6 +350,8 @@ def test_maintain_term_postings_retraction(spark):
         rec = {"key": key, "text": text}
         return (
             op,
+            "public",
+            "docs",
             rec if op != "DELETE" else None,
             rec if op == "DELETE" else None,
             None,
@@ -360,7 +370,8 @@ def test_maintain_term_postings_retraction(spark):
     ]
     df = spark.createDataFrame(
         rows,
-        "op string, record map<string,string>, old_record map<string,string>,"
+        "op string, schema string, table string, record map<string,string>,"
+        " old_record map<string,string>,"
         " key_record map<string,string>, lsn_hi int, lsn_lo long, change_idx int",
     )
     got = {
@@ -377,12 +388,13 @@ def test_maintain_term_postings_same_lsn_transaction(spark):
     from walex_spark.operators.scd import maintain_term_postings
 
     rows = [
-        ("INSERT", {"key": "A", "text": "x"}, None, None, 0, 7, 0),
-        ("UPDATE", {"key": "A", "text": "x"}, None, None, 0, 7, 1),
+        ("INSERT", "public", "docs", {"key": "A", "text": "x"}, None, None, 0, 7, 0),
+        ("UPDATE", "public", "docs", {"key": "A", "text": "x"}, None, None, 0, 7, 1),
     ]
     df = spark.createDataFrame(
         rows,
-        "op string, record map<string,string>, old_record map<string,string>,"
+        "op string, schema string, table string, record map<string,string>,"
+        " old_record map<string,string>,"
         " key_record map<string,string>, lsn_hi int, lsn_lo long, change_idx int",
     )
     got = {

@@ -19,30 +19,40 @@ TS = dt.datetime(2024, 1, 15, 10, 30)
 GROUPS = ["a", "b", "c"]
 
 
+TABLES = ["t", "u"]
+
+
 def _random_changelog(seed=42, n_keys=60, max_events=8):
+    """Each key's table is drawn from two tables that share key values:
+    (t, 7) and (u, 7) are different rows."""
     rng = random.Random(seed)
     rows, lsn = [], 100
     for key in range(n_keys):
+        table = rng.choice(TABLES)
         for _ in range(rng.randint(1, max_events)):
             op = rng.choice(["INSERT", "UPDATE", "DELETE"])
             g = rng.choice(GROUPS)
-            rec = {"id": str(key), "g": g} if op != "DELETE" else None
-            old = {"id": str(key), "g": g} if op == "DELETE" else None
+            rec = {"id": str(key % (n_keys // 2)), "g": g} if op != "DELETE" else None
+            old = {"id": str(key % (n_keys // 2)), "g": g} if op == "DELETE" else None
             rows.append(
-                (op, "public", "t", None, rec, old, None, TS, 0, lsn, 900, 0)
+                (op, "public", table, None, rec, old, None, TS, 0, lsn, 900, 0)
             )
             lsn += 1
     rng.shuffle(rows)  # arrival order must not matter (LSN order does)
     return rows
 
 
+def _row(r):
+    """The model's row identity: (table, id)."""
+    return (r[2], (r[4] or r[5])["id"])
+
+
 def _model_state(rows):
-    """Reference last-wins state: key -> g of the latest live version."""
+    """Reference last-wins state: (table, id) -> g of the latest live
+    version."""
     state = {}
-    for op, _s, _t, _c, rec, old, _k, _ts, hi, lo, _x, _ci in sorted(
-        rows, key=lambda r: r[9]
-    ):
-        key = (rec or old)["id"]
+    for r in sorted(rows, key=lambda r: r[9]):
+        op, rec, key = r[0], r[4], _row(r)
         if op == "DELETE":
             state.pop(key, None)
         else:
@@ -56,6 +66,7 @@ def test_scd2_intervals_partition_each_keys_life(spark):
     got = (
         scd2_history(env, ["id"])
         .select(
+            "table",
             F.col("record").getItem("id").alias("id"),
             "valid_from_lsn", "valid_to_lsn", "is_current",
         )
@@ -63,13 +74,12 @@ def test_scd2_intervals_partition_each_keys_life(spark):
     )
     by_key = {}
     for r in got:
-        by_key.setdefault(r.id, []).append(r)
-    # model: per key, the I/U events' LSNs in order; each opens a
-    # version closed by the key's next event of any kind
+        by_key.setdefault((r.table, r.id), []).append(r)
+    # model: per (table, id), the I/U events' LSNs in order; each opens
+    # a version closed by the row's next event of any kind
     events = {}
     for row in sorted(rows, key=lambda r: r[9]):
-        key = (row[4] or row[5])["id"]
-        events.setdefault(key, []).append((row[9], row[0]))
+        events.setdefault(_row(row), []).append((row[9], row[0]))
     for key, evs in events.items():
         expected = []
         for i, (lsn, op) in enumerate(evs):

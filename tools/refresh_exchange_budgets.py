@@ -28,9 +28,10 @@ import json
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-BUDGETS = "/root/repo/tests/exchange_budgets.json"
+BUDGETS = os.path.join(ROOT, "tests", "exchange_budgets.json")
 SF_DIR = "/root/testdata/sf0.001"
 
 

@@ -16,19 +16,18 @@ operators are what a warehouse consumer of those events builds FIRST:
                         live-version fold below, never from a state
                         rebuild.
 
-Every operator here keys a change by ``transforms.pk_column`` and
-orders it by ``transforms.lsn_column`` (then change_idx), through
-``_by_key``, which first splits a key-changing UPDATE into a DELETE of
-the old key and the UPDATE of the new one
-(``transforms.split_key_changes``). A TRUNCATE has no primary key, so
-these operators (and their streaming forms, through
-``streaming.ivm.prep_delta_input``) raise on one instead of folding it
-in as a keyless change; ``transforms.materialize_table_state`` and the
-``ParquetStateSink`` built on it are the operators that apply
-TRUNCATE.
+Every operator here, and its streaming form (``streaming.ivm``), keys
+and orders a change through ``transforms.by_row_key``, the one row
+identity of the per-key operators: a row is ``(schema, table, primary
+key)``, its changes apply in ``(lsn, change_idx)`` order, a
+key-changing UPDATE is split into a DELETE of the old key and the
+UPDATE of the new one, and a TRUNCATE, which has no primary key, fails
+the query instead of folding in as a keyless change
+(``transforms.materialize_table_state`` and the ``ParquetStateSink``
+built on it are the operators that apply it).
 
 The live-version fold (``_signed_versions``; its streaming form is
-``streaming.ivm.live_version_stream``): per key in WAL order, every
+``streaming.ivm.live_version_stream``): per row in WAL order, every
 INSERT/UPDATE installs a live version (+1 row with its payload), and
 every change over a live previous version — UPDATE, DELETE, or a
 re-INSERT, which last-wins state treats as an upsert — retracts that
@@ -39,7 +38,7 @@ IDENTITY FULL, so the previous version comes from the log itself.
 
 Scale posture (100 TB):
   * scd2_history and the fold are ONE shuffle each — the window
-    partitionBy(key); the interval close is a `lead` and the
+    partitionBy(row key); the interval close is a `lead` and the
     retraction a `lag` in the same window pass, no self-join. The
     aggregates add one group-keyed shuffle of ints.
   * apply_cdc_snapshot shuffles the changelog once (latest-per-key
@@ -52,42 +51,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from walex_spark.operators.transforms import (
+    ROW_KEY,
+    by_row_key,
     key_cells,
     lsn_column,
-    pk_column,
-    split_key_changes,
 )
-
-
-def lsn_raising_on_truncate() -> Column:
-    """``transforms.lsn_column``, failing the query on a TRUNCATE row."""
-    return F.when(
-        F.col("op") == "TRUNCATE",
-        F.raise_error(
-            F.lit(
-                "TRUNCATE in a changelog fed to a per-key history operator; "
-                "apply it with materialize_table_state or ParquetStateSink"
-            )
-        ),
-    ).otherwise(lsn_column())
-
-
-def _by_key(df: DataFrame, key_cols: list[str], partition: list[Column] | None = None):
-    """``df`` with key-changing UPDATEs split, ``__pk`` (pk_column) and
-    ``__lsn``, and the window that orders each key's changes in WAL
-    order. ``partition`` replaces ``__pk`` as the window key."""
-    keyed = (
-        split_key_changes(df, key_cols)
-        .withColumn("__lsn", lsn_raising_on_truncate())
-        .withColumn("__pk", pk_column(key_cols))
-    )
-    w = Window.partitionBy(*(partition or ["__pk"])).orderBy(
-        F.col("__lsn").asc(), F.col("change_idx").asc()
-    )
-    return keyed, w
 
 
 def scd2_history(df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -107,7 +77,7 @@ def scd2_history(df: DataFrame, key_cols: list[str]) -> DataFrame:
     shuffle (the per-key window); `lead` closes intervals in the same
     pass — no self-join, no second shuffle.
     """
-    keyed, w = _by_key(df, key_cols)
+    keyed, w = by_row_key(df, key_cols, applied=True)
     nxt_lsn = F.lead(F.col("__lsn")).over(w)
     nxt_op = F.lead(F.col("op")).over(w)
     return (
@@ -137,13 +107,15 @@ def apply_cdc_snapshot(
       key in both, latest op = DELETE → row dropped
       key only in changes (≠ DELETE)  → inserted
 
-    Two shuffles total, both on the merge key: the latest-per-key
-    window over the changelog, then the full-outer sort-merge join —
+    ``changes`` are one table's: the changelog is keyed by the key
+    cells alone, so its partitioning is the merge key's. Two shuffles
+    total, both on the merge key: the latest-per-key window over the
+    changelog, then the full-outer sort-merge join —
     which reuses the window's hash partitioning (no extra exchange for
     the changelog side). Nothing is broadcast: both sides scale.
     """
     keys = [c.alias(k) for c, k in zip(key_cells(key_cols), key_cols)]
-    keyed, w = _by_key(changes, key_cols, partition=keys)
+    keyed, w = by_row_key(changes, key_cols, applied=True, partition=keys)
     latest = (
         # the key's last change in WAL order is the one with no next
         keyed.withColumn("__last", F.lead(F.lit(True)).over(w).isNull())
@@ -197,17 +169,17 @@ def table_state_as_of(
 
 
 def _signed_versions(df: DataFrame, key_cols: list[str], payload: Column) -> DataFrame:
-    """The live-version fold (module doc): ``(__pk, __lsn, change_idx,
-    sign, payload)`` with a +1 row per installed version and a -1 row
-    per retracted one. One shuffle, the per-key window; the -1 rows
-    come from a ``lag`` in the same pass and leave in the same
-    ``explode`` as the +1 rows, so the output keeps the ``__pk``
+    """The live-version fold (module doc): ``(*ROW_KEY, __lsn,
+    change_idx, sign, payload)`` with a +1 row per installed version
+    and a -1 row per retracted one. One shuffle, the per-row window;
+    the -1 rows come from a ``lag`` in the same pass and leave in the
+    same ``explode`` as the +1 rows, so the output keeps the row-key
     partitioning."""
-    keyed, w = _by_key(df, key_cols)
+    keyed, w = by_row_key(df, key_cols, applied=True)
     # window expressions must be plain columns before the explode — a
     # Generate operator cannot evaluate them inline
     lagged = keyed.select(
-        "__pk",
+        *ROW_KEY,
         "__lsn",
         "change_idx",
         F.col("op"),
@@ -226,10 +198,11 @@ def _signed_versions(df: DataFrame, key_cols: list[str], payload: Column) -> Dat
             F.struct(F.lit(-1).alias("sign"), F.col("__prev").alias("payload")),
         ),
     )
+    fold_key = [*ROW_KEY, "__lsn", "change_idx"]
     return (
-        lagged.select("__pk", "__lsn", "change_idx", F.explode(signed).alias("v"))
+        lagged.select(*fold_key, F.explode(signed).alias("v"))
         .filter(F.col("v").isNotNull())
-        .select("__pk", "__lsn", "change_idx", "v.sign", "v.payload")
+        .select(*fold_key, "v.sign", "v.payload")
     )
 
 
@@ -323,16 +296,14 @@ def maintain_term_postings(
     from walex_spark.extensions.text import _tokens
 
     versions = _signed_versions(df, key_cols, F.col("record").getItem(text_field))
-    # change_idx and sign MUST be group keys: two same-key changes
+    # change_idx and sign MUST be group keys: two same-row changes
     # inside one transaction share an LSN, and one change both
     # retracts and installs; collapsing either would merge two df
     # marks into one
+    version = [*ROW_KEY, "__lsn", "change_idx", "sign"]
     per_version = (
-        versions.select(
-            "__pk", "__lsn", "change_idx", "sign",
-            F.explode(_tokens(F.col("payload"))).alias("term"),
-        )
-        .groupBy("__pk", "__lsn", "change_idx", "sign", "term")
+        versions.select(*version, F.explode(_tokens(F.col("payload"))).alias("term"))
+        .groupBy(*version, "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     return (

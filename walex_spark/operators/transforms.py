@@ -291,6 +291,46 @@ def split_key_changes(df: DataFrame, key_cols: list[str]) -> DataFrame:
     return split.select(*[rewrite.get(c, F.col(c)).alias(c) for c in df.columns])
 
 
+ROW_KEY = ["schema", "table", "__pk"]
+
+
+def lsn_raising_on_truncate() -> Column:
+    """``lsn_column``, failing the query on a TRUNCATE row."""
+    return F.when(
+        F.col("op") == "TRUNCATE",
+        F.raise_error(
+            F.lit(
+                "TRUNCATE in a changelog fed to a per-key history operator; "
+                "apply it with materialize_table_state or ParquetStateSink"
+            )
+        ),
+    ).otherwise(lsn_column())
+
+
+def by_row_key(
+    df: DataFrame,
+    key_cols: list[str],
+    applied: bool,
+    partition: list[Column] | None = None,
+):
+    """The one row identity of the per-key operators: ``df`` with
+    ``__pk`` (``pk_column``) and ``__lsn`` (``lsn_column``), and the
+    window over each row's changes in WAL order, ``(__lsn,
+    change_idx)``. A row is ``ROW_KEY``, ``(schema, table, __pk)``:
+    tables that share a key value never share a row.
+
+    ``applied`` changes are the ones an operator folds into per-key
+    state: a key-changing UPDATE is split first (``split_key_changes``)
+    and a TRUNCATE, which names no key, fails the query. ``partition``
+    replaces ``ROW_KEY`` as the window key."""
+    if applied:
+        df = split_key_changes(df, key_cols)
+    lsn = lsn_raising_on_truncate() if applied else lsn_column()
+    keyed = df.withColumn("__lsn", lsn).withColumn("__pk", pk_column(key_cols))
+    w = Window.partitionBy(*(partition or ROW_KEY)).orderBy("__lsn", "change_idx")
+    return keyed, w
+
+
 def lsn_string() -> Column:
     """"HEX/HEX" formatting (event.ex:170-175)."""
     return F.concat(
@@ -397,24 +437,18 @@ def resolve_unchanged_toast(
     ships `:unchanged_toast` through untouched — decoder.ex:226-227 —
     leaving resolution to the consumer; here it is an operator).
 
-    Batch form: per (table, pk) ordered by (lsn, change_idx), each
-    sentinel cell takes `last(non-sentinel value)` over the preceding
-    frame — one shuffle on the PK, the same partitioning the
-    materialization step needs. ``columns`` comes from the relation
-    registry (wire schemas are dynamic, §1.2). Cells with no prior
-    value resolve to NULL (documented deviation: text envelopes cannot
-    carry the atom).
+    Batch form: per row (``by_row_key``) in WAL order, each sentinel
+    cell takes `last(non-sentinel value)` over the preceding frame —
+    one shuffle on the row key, the same partitioning the
+    materialization step needs. Changes are not split and a TRUNCATE
+    passes through. ``columns`` comes from the relation registry (wire
+    schemas are dynamic, §1.2). Cells with no prior value resolve to
+    NULL (documented deviation: text envelopes cannot carry the atom).
     """
     from walex_spark.model import UNCHANGED_TOAST
 
-    keyed = df.withColumn("__lsn", lsn_column()).withColumn(
-        "__pk", pk_column(key_cols)
-    )
-    w = (
-        Window.partitionBy("table", "__pk")
-        .orderBy("__lsn", "change_idx")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    keyed, w = by_row_key(df, key_cols, applied=False)
+    w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     rec = F.col("record")
     entries = []
     for c in columns:
@@ -454,13 +488,13 @@ def dedup_replay(df: DataFrame) -> DataFrame:
 def materialize_table_state(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Apply I/U/D/TRUNCATE in LSN order → current snapshot (R10).
 
-    Batch form: latest change per PK wins (Window over the key ordered
-    by lsn desc), then DELETE rows drop out. At scale this is a single
-    shuffle on the PK — the same partitioning a downstream MERGE would
-    need; skewed PKs are handled by AQE.
+    Batch form: per row (``by_row_key``) the last change in WAL order —
+    the one with no next — wins, then DELETE rows drop out. At scale
+    this is a single shuffle on the row key — the same partitioning a
+    downstream MERGE would need; skewed keys are handled by AQE.
 
     TRUNCATE is a table-wide tombstone (pgoutput Truncate message,
-    pgoutput.py:170): every row of that table with a lower
+    pgoutput.py:170): every row of that (schema, table) with a lower
     (lsn, change_idx) is wiped before per-key winners are picked, and
     the TRUNCATE row itself never reaches the output. The truncate
     high-water marks aggregate to one row per truncated table —
@@ -472,28 +506,19 @@ def materialize_table_state(df: DataFrame, key_cols: list[str]) -> DataFrame:
     does not affect, so the optimizer still sees the input's own ``op``
     there and prunes the wipe when no TRUNCATE can occur.
     """
-    keyed = df.withColumn("__lsn", lsn_column())
-    ord_ = F.struct(F.col("__lsn").alias("l"), F.col("change_idx").alias("c"))
+    ord_ = F.struct(lsn_column().alias("l"), F.col("change_idx").alias("c"))
     trunc_pts = (
-        keyed.filter(F.col("op") == "TRUNCATE")
-        .groupBy("table")
+        df.filter(F.col("op") == "TRUNCATE")
+        .groupBy("schema", "table")
         .agg(F.max(ord_).alias("__trunc_ord"))
     )
-    keyed = (
-        keyed.join(F.broadcast(trunc_pts), "table", "left")
-        .filter(
-            (F.col("op") != "TRUNCATE")
-            & (F.col("__trunc_ord").isNull() | (ord_ > F.col("__trunc_ord")))
-        )
-        .drop("__trunc_ord")
+    wiped = df.join(F.broadcast(trunc_pts), ["schema", "table"], "left").filter(
+        (F.col("op") != "TRUNCATE")
+        & (F.col("__trunc_ord").isNull() | (ord_ > F.col("__trunc_ord")))
     )
-    keyed = split_key_changes(keyed, key_cols).withColumn("__pk", pk_column(key_cols))
-    w = Window.partitionBy("table", "__pk").orderBy(
-        F.col("__lsn").desc(), F.col("change_idx").desc()
-    )
+    keyed, w = by_row_key(wiped, key_cols, applied=True)
     return (
-        keyed.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col("op") != "DELETE"))
-        .drop("__rn", "__pk", "__lsn")
+        keyed.withColumn("__last", F.lead(F.lit(True)).over(w).isNull())
+        .filter(F.col("__last") & (F.col("op") != "DELETE"))
         .select(*df.columns)
     )

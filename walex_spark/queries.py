@@ -6025,6 +6025,8 @@ def q_cdc_search_index(spark, sf_dir):
     )
     ch = docs.select(
         op.alias("op"),
+        F.lit("public").alias("schema"),
+        F.lit("documents").alias("table"),
         F.when(op != "DELETE", record).alias("record"),
         F.when(op == "DELETE", record).alias("old_record"),
         F.lit(None).cast("map<string,string>").alias("key_record"),
@@ -9082,10 +9084,12 @@ DRIVER_ORDER = [
     "q_doc_decontam_jaccard", "q_doc_diversity", "q_doc_dsir",
     "q_doc_junk_fuse", "q_doc_mmr", "q_doc_nb_classifier",
     "q_doc_ndcg", "q_doc_novelty", "q_doc_prf",
-    "q_doc_source_overlap", "q_doc_tfidf_cosine",
-    "q_doc_token_budget", "q_emb_ann_ivf_trained", "q_emb_ann_rp",
-    "q_emb_hamming_topk", "q_emb_hard_negatives", "q_emb_knn_eval",
-    "q_emb_label_margin", "q_multimodal_features", "q_snm_blocking",
+    # (e) the 11 r12 deferrals, stale-mandatory since r12's files
+    # landed; the last 11 (d) entries (hard rows r12) yield to them:
+    "q_cdc_time_travel", "q_cdc_asof_state", "q_doc_heaps",
+    "q_doc_zipf", "q_doc_char_entropy", "q_doc_burstiness",
+    "q_emb_ann_ivf", "q_multimodal_audio", "q_multimodal_meta",
+    "q_doc_manifest", "q_doc_split",
 ]
 
 _DRIVER_ORDER_R11 = [

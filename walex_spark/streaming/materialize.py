@@ -16,10 +16,10 @@ hash-bucketed parquet and bucket-pruned rewrites:
     at 100 TB the rewrite cost scales with the churn, not the table
     (the same access pattern a MERGE with bucketed clustering gives);
   - the merge itself is materialize_table_state over
-    (existing ∪ batch): latest change per key wins by (lsn, change_idx),
+    (existing ∪ batch): latest change per row wins by (lsn, change_idx),
     DELETE drops the key, TRUNCATE tombstones its whole table, and a
-    key-changing UPDATE is a DELETE of its old key (split before the
-    changed buckets are chosen, so the old key's bucket is rewritten);
+    key-changing UPDATE is a DELETE of its old key (split for the
+    changed-bucket collect too, so the old key's bucket is rewritten);
   - the swap is ATOMIC: new buckets are fully written before one
     os.replace() flips the MANIFEST. A crash at any point leaves the
     previous manifest — and therefore a complete, single-epoch
@@ -101,13 +101,11 @@ class ParquetStateSink:
         The publish is a single atomic manifest flip (see module doc).
         """
         spark = env.sparkSession
-        # split key-changing UPDATEs first: the old key's bucket must be
-        # rewritten too, to drop it
-        batch = split_key_changes(env, self.key_cols).withColumn(
-            "__bucket", self._bucket_col()
-        )
-        agg = batch.agg(
-            F.collect_set("__bucket").alias("bs"),
+        # the bucket collect splits key-changing UPDATEs: the old key's
+        # bucket must be rewritten too, to drop it. The merge below
+        # splits the batch itself.
+        agg = split_key_changes(env, self.key_cols).agg(
+            F.collect_set(self._bucket_col()).alias("bs"),
             F.max(F.col("op") == "TRUNCATE").alias("has_trunc"),
         ).collect()[0]
         changed = sorted(agg.bs)
@@ -119,12 +117,12 @@ class ParquetStateSink:
             # bucket, so the merge must cover all live ones
             changed = sorted({int(b) for b in manifest} | set(changed))
         existing_dirs = self._bucket_dirs(manifest, changed)
-        merged_input = batch.drop("__bucket")
+        merged_input = env
         if existing_dirs:
             # the sink wrote these files from batches of this schema:
             # passing it spares a schema-inference job
             existing = spark.read.schema(env.schema).parquet(*existing_dirs)
-            merged_input = existing.unionByName(merged_input)
+            merged_input = existing.unionByName(env)
         new_state = materialize_table_state(merged_input, self.key_cols).withColumn(
             "__bucket", self._bucket_col()
         )

@@ -22,12 +22,15 @@ from walex_spark.streaming.ivm import live_version_stream
 
 
 def scd2_stream(env: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Envelope stream → stream of CLOSED SCD2 interval rows
-    (pk, record_json, valid_from_lsn, valid_to_lsn, closed_by_delete)."""
+    """Envelope stream → stream of CLOSED SCD2 interval rows (schema,
+    table, pk, record_json, valid_from_lsn, valid_to_lsn,
+    closed_by_delete)."""
     return (
         live_version_stream(env, key_cols, F.to_json(F.col("record")))
         .filter(F.col("sign") == -1)
         .select(
+            "schema",
+            "table",
             "pk",
             F.col("payload").alias("record_json"),
             F.col("from_lsn").alias("valid_from_lsn"),

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from walex_spark.operators.transforms import pk_column
+from walex_spark.operators.transforms import ROW_KEY, by_row_key
 
 
 def _maybe_watermark(env: DataFrame, watermark: str | None) -> DataFrame:
@@ -105,8 +105,8 @@ def correlate_changes(
     CDC lineage enrichment as a STREAM-STREAM join.
 
     Both sides are the same envelope stream split by op; they join on
-    (table, pk) with an event-time range (change within ``within`` of
-    the insert). In streaming, the watermarks plus the range constraint
+    the row key (``transforms.by_row_key``: schema, table, pk) with an
+    event-time range (change within ``within`` of the insert). In streaming, the watermarks plus the range constraint
     bound BOTH join state stores (an insert can be dropped from state
     once event time passes insert_ts + within) — without the range
     condition the insert side would accumulate forever. In batch the
@@ -116,25 +116,22 @@ def correlate_changes(
     Returns one row per (change, matching insert): op, table, pk,
     change_ts, insert_ts, lag_seconds, change lsn ordering columns.
     """
-    pk = pk_column(key_cols)
     # time-bucket the join key: a ``within``-sized window spans at most
     # 2 buckets of that size, so the change side probes exactly its own
     # bucket and the previous one. This bounds join fan-out to
     # per-(pk, bucket) groups — without it a hot key (one pk with many
     # inserts AND many changes) degrades quadratically, and the
     # streaming state store for a key never shards.
-    base = env.withColumn("__pk", pk)
+    base, _ = by_row_key(env, key_cols, applied=False)
     ins = base.filter(F.col("op") == "INSERT").select(
-        F.col("table").alias("i_table"),
-        F.col("__pk").alias("i_pk"),
+        *[F.col(c).alias(f"i_{c}") for c in ROW_KEY],
         F.col("commit_ts").alias("insert_ts"),
         F.window("commit_ts", within).start.alias("i_bucket"),
     )
     chg = (
         base.filter(F.col("op").isin("UPDATE", "DELETE"))
         .select(
-            "table",
-            "__pk",
+            *ROW_KEY,
             "op",
             F.col("commit_ts").alias("change_ts"),
             "lsn_hi",
@@ -153,13 +150,11 @@ def correlate_changes(
     if env.isStreaming:
         ins = ins.withWatermark("insert_ts", within)
         chg = chg.withWatermark("change_ts", within)
-    cond = (
-        (F.col("table") == F.col("i_table"))
-        & (F.col("__pk") == F.col("i_pk"))
-        & (chg["i_bucket"] == ins["i_bucket"])
-        & (F.col("change_ts") >= F.col("insert_ts"))
-        & (F.col("change_ts") <= F.col("insert_ts") + F.expr(f"INTERVAL {within}"))
-    )
+    cond = [F.col(c) == F.col(f"i_{c}") for c in ROW_KEY] + [
+        chg["i_bucket"] == ins["i_bucket"],
+        F.col("change_ts") >= F.col("insert_ts"),
+        F.col("change_ts") <= F.col("insert_ts") + F.expr(f"INTERVAL {within}"),
+    ]
     return chg.join(ins, cond).select(
         "op",
         "table",
