@@ -124,7 +124,8 @@ def test_scd2_stream_emits_closed_intervals(spark, tmp_path):
     """Streaming SCD2 across two microbatches: intervals close exactly
     once, the open version survives in state between batches, DELETE
     drops state and a later INSERT re-opens; a second table's row with
-    the same id is a row of its own."""
+    the same id is a row of its own; a re-delivered INSERT of a deleted
+    key opens nothing."""
     import json
 
     from walex_spark.model import CHANGE_ENVELOPE_SCHEMA
@@ -138,6 +139,8 @@ def test_scd2_stream_emits_closed_intervals(spark, tmp_path):
             _change("UPDATE", 110, {"v": "b"}),
             _change("INSERT", 105, {"v": "k"}, key="5"),
             _change("INSERT", 108, {"v": "t"}, table="todo"),
+            _change("INSERT", 102, {"v": "q"}, key="9"),
+            _change("DELETE", 103, None, old={"v": "q"}, key="9"),
         ],
         CHANGE_ENVELOPE_SCHEMA,
     )
@@ -152,17 +155,23 @@ def test_scd2_stream_emits_closed_intervals(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
-        got = spark.table("scd_out").collect()
-        # only 100->110 closed; 110 stays open in state
+        got = sorted(
+            spark.table("scd_out").collect(), key=lambda r: r.valid_from_lsn
+        )
+        # 100->110 and 9's 102->103 closed; 110 stays open in state
         assert [(r.valid_from_lsn, r.valid_to_lsn, r.closed_by_delete) for r in got] == [
-            (100, 110, False)
+            (100, 110, False), (102, 103, True)
         ]
         assert json.loads(got[0].record_json)["v"] == "a"
         # second drop: delete closes 110, re-insert opens 130
         # (unemitted); re-keying 5 -> 6 closes 5's open 105 as a delete;
-        # todo 1's update closes todo 1 alone
+        # todo 1's update closes todo 1 alone; 9's INSERT at 102 is
+        # re-delivered and must not reopen 9 for its re-insert at 140
+        # to close
         batch2 = spark.createDataFrame(
             [
+                _change("INSERT", 102, {"v": "q"}, key="9"),
+                _change("INSERT", 140, {"v": "r"}, key="9"),
                 _change("DELETE", 120, None, old={"v": "b"}),
                 _change("INSERT", 130, {"v": "c"}),
                 _change("UPDATE", 125, {"v": "k"}, key="6", key_record={"id": "5"}),
@@ -180,6 +189,7 @@ def test_scd2_stream_emits_closed_intervals(spark, tmp_path):
             for r in got
         ] == [
             ("user", "1", 100, 110, False),
+            ("user", "9", 102, 103, True),
             ("user", "5", 105, 125, True),
             ("todo", "1", 108, 135, False),
             ("user", "1", 110, 120, True),
@@ -221,8 +231,9 @@ def test_group_delta_stream_folds_to_batch_counts(spark, tmp_path):
     changelog — including group moves, deletes, and upserts crossing
     the batch boundary (state must carry the live group over), a live
     version with a NULL group, a DELETE of a never-inserted key, a
-    key-changing UPDATE across the boundary, and a second table's row
-    that shares an id with a user row."""
+    key-changing UPDATE across the boundary, a second table's row
+    that shares an id with a user row, and a re-delivered INSERT of a
+    key the first batch deleted."""
     from walex_spark.model import CHANGE_ENVELOPE_SCHEMA
     from walex_spark.operators.scd import maintain_group_counts
     from walex_spark.sources.envelope import read_envelope_stream
@@ -235,8 +246,11 @@ def test_group_delta_stream_folds_to_batch_counts(spark, tmp_path):
         _change("INSERT", 112, {}, key="4"),           # live, NULL group
         _change("INSERT", 115, {"g": "d"}, key="6"),
         _change("INSERT", 118, {"g": "b"}, key="2", table="todo"),
+        _change("INSERT", 102, {"g": "e"}, key="8"),
+        _change("DELETE", 104, None, old={"g": "e"}, key="8"),
     ]
     b2 = [
+        _change("INSERT", 102, {"g": "e"}, key="8"),   # replay of a deleted key
         _change("DELETE", 130, None, old={"g": "a"}, key="2"),
         _change("INSERT", 140, {"g": "b"}, key="3"),
         _change("INSERT", 150, {"g": "a"}, key="3"),   # upsert b -> a

@@ -74,9 +74,14 @@ def test_engine_streaming_attach_and_replay_dedup(spark, env_df, tmp_path):
     q = eng.attach(stream, checkpoint=str(tmp_path / "ckpt"))
     try:
         q.processAllAvailable()
+        # a later file re-delivers one change of the first drop (a
+        # slot restart re-sends from the last confirmed LSN)
+        env_df.limit(1).coalesce(1).write.parquet(src, mode="append")
+        q.processAllAvailable()
     finally:
         q.stop()
-    # R12: duplicates collapsed on (lsn, change_idx) before dispatch
+    # R12: duplicates collapsed on (lsn, change_idx) before dispatch,
+    # within a microbatch and across microbatches
     assert sum(counts) == 3
 
 
@@ -184,6 +189,11 @@ def test_parquet_state_sink_merge(spark, tmp_path):
     sink.process_batch(spark.createDataFrame(b2, CHANGE_ENVELOPE_SCHEMA), 1)
     got2 = {r.record["id"]: r.record["age"] for r in sink.state(spark).collect()}
     assert got2 == got
+    # a later batch re-delivers b1's INSERT of 2, which b2 deleted: the
+    # applied mark skips it and 2 stays deleted
+    sink.process_batch(spark.createDataFrame(b1[1:2], CHANGE_ENVELOPE_SCHEMA), 2)
+    got3 = {r.record["id"]: r.record["age"] for r in sink.state(spark).collect()}
+    assert got3 == got
 
 
 def test_parquet_state_sink_truncate_wipes_all_buckets(spark, tmp_path):
@@ -357,7 +367,7 @@ def test_sessionized_activity_batch_and_stream(spark, tmp_path):
 
 
 def test_dedup_replay_stream(spark, tmp_path):
-    from walex_spark.streaming.windows import dedup_replay_stream
+    from walex_spark.operators import transforms as X
 
     src = str(tmp_path / "ddw_src")
     t0 = dt.datetime(2024, 1, 15, 10, 0)
@@ -369,7 +379,7 @@ def test_dedup_replay_stream(spark, tmp_path):
     spark.createDataFrame(rows, CHANGE_ENVELOPE_SCHEMA).write.parquet(src, mode="append")
     stream = read_envelope_stream(spark, src)
     q = (
-        dedup_replay_stream(stream, watermark="1 hour")
+        X.dedup_replay(stream)
         .writeStream.format("memory").queryName("ddw_out")
         .outputMode("append").start()
     )

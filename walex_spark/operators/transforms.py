@@ -228,6 +228,11 @@ def lsn_column() -> Column:
     ).alias("lsn")
 
 
+def wal_position() -> Column:
+    """A change's WAL position ``(lsn, change_idx)``; rises in commit order."""
+    return F.struct(lsn_column(), F.col("change_idx"))
+
+
 def row_image() -> Column:
     """The change's row image: the new tuple; for a DELETE the old
     tuple, or under REPLICA IDENTITY DEFAULT the key-only tuple the
@@ -292,6 +297,7 @@ def split_key_changes(df: DataFrame, key_cols: list[str]) -> DataFrame:
 
 
 ROW_KEY = ["schema", "table", "__pk"]
+REPLAY_HORIZON = "1 hour"  # a stream's dedup_replay watermark on commit_ts
 
 
 def lsn_raising_on_truncate() -> Column:
@@ -481,8 +487,13 @@ def resolve_unchanged_toast(
 def dedup_replay(df: DataFrame) -> DataFrame:
     """Exactly-once on at-least-once replay: drop duplicate
     (lsn, change_idx) rows (SURVEY.md §2.9 R12; the reference documents
-    duplicates on durable-slot restart, replication/supervisor.ex:35-40)."""
-    return df.dropDuplicates(["lsn_hi", "lsn_lo", "change_idx"])
+    duplicates on durable-slot restart, replication/supervisor.ex:35-40).
+    A stream keeps its keys for ``REPLAY_HORIZON`` of ``commit_ts``; a
+    row later than that is dropped (Spark's ``numRowsDroppedByWatermark``)."""
+    key = ["lsn_hi", "lsn_lo", "change_idx"]
+    if not df.isStreaming:
+        return df.dropDuplicates(key)
+    return df.withWatermark("commit_ts", REPLAY_HORIZON).dropDuplicatesWithinWatermark(key)
 
 
 def materialize_table_state(df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -506,15 +517,14 @@ def materialize_table_state(df: DataFrame, key_cols: list[str]) -> DataFrame:
     does not affect, so the optimizer still sees the input's own ``op``
     there and prunes the wipe when no TRUNCATE can occur.
     """
-    ord_ = F.struct(lsn_column().alias("l"), F.col("change_idx").alias("c"))
     trunc_pts = (
         df.filter(F.col("op") == "TRUNCATE")
         .groupBy("schema", "table")
-        .agg(F.max(ord_).alias("__trunc_ord"))
+        .agg(F.max(wal_position()).alias("__trunc_ord"))
     )
     wiped = df.join(F.broadcast(trunc_pts), ["schema", "table"], "left").filter(
         (F.col("op") != "TRUNCATE")
-        & (F.col("__trunc_ord").isNull() | (ord_ > F.col("__trunc_ord")))
+        & (F.col("__trunc_ord").isNull() | (wal_position() > F.col("__trunc_ord")))
     )
     keyed, w = by_row_key(wiped, key_cols, applied=True)
     return (

@@ -10,7 +10,7 @@ file/Kafka envelope path uses.
 
 Slot semantics mapping (server.ex:64-141):
   durable slot    → persisted cursor (checkpoint file) → resume + replay
-                    (duplicates handled by operators.dedup_replay, R12)
+                    (dedup_replay within a poll, a sink's applied mark across)
   temporary slot  → in-memory cursor → at-most-once across restarts
   slot contention → single-writer cursor file lock
 

@@ -177,9 +177,13 @@ class WalExEngine:
         """Run every registration against one (micro)batch of envelope
         rows. Mirrors the reference's per-commit dispatch loop; the
         filter+cast pipeline is planned once per registration and
-        Catalyst prunes shared scans."""
+        Catalyst prunes shared scans. ``dedup_replay`` dedups within
+        this one batch only; no state is kept between calls."""
         if self.dedup_replay:
             env = X.dedup_replay(env)
+        self._dispatch(env, epoch_id)
+
+    def _dispatch(self, env: DataFrame, epoch_id: int) -> None:
         for reg in self._registrations:
             events = X.filter_and_cast(
                 env,
@@ -214,10 +218,13 @@ class WalExEngine:
         """Attach to a streaming envelope DataFrame via foreachBatch.
 
         ``checkpoint`` present = durable slot semantics (resume +
-        at-least-once, replay deduped); absent = temporary slot
-        (at-most-once across restarts) — README.md:320-346 mapping.
+        at-least-once); absent = temporary slot (at-most-once across
+        restarts) — README.md:320-346 mapping. ``dedup_replay`` dedups
+        the stream across microbatches, replay horizon ``X.REPLAY_HORIZON``
+        of ``commit_ts``; a later row is dropped (``numRowsDroppedByWatermark``).
         """
-        writer = env_stream.writeStream.foreachBatch(self.process_batch)
+        stream = X.dedup_replay(env_stream) if self.dedup_replay else env_stream
+        writer = stream.writeStream.foreachBatch(self._dispatch)
         if checkpoint:
             writer = writer.option("checkpointLocation", checkpoint)
         if trigger_seconds:

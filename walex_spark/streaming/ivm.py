@@ -24,9 +24,10 @@ rows are also the closed SCD2 intervals.
 
 State per row is the live version ``(from_lsn, payload)``; a live
 version may have a NULL payload, so liveness is ``from_lsn IS NOT
-NULL``. It is dropped on DELETE, so it is bounded by live row count.
-The only shuffle is the groupBy(row key) feeding applyInPandasWithState;
-batches cross to Python via Arrow, never row-at-a-time.
+NULL``. It is dropped on DELETE, so it is bounded by live row count;
+``transforms.dedup_replay`` first drops replays, which would reinstall
+it, and keeps each (lsn, change_idx) for ``REPLAY_HORIZON``. Batches
+cross to Python via Arrow, never row-at-a-time.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from walex_spark.operators.transforms import ROW_KEY, by_row_key
+from walex_spark.operators.transforms import ROW_KEY, by_row_key, dedup_replay
 
 FOLD_SCHEMA = (
     "schema STRING, table STRING, pk STRING, sign INT, payload STRING, "
@@ -51,7 +52,7 @@ def live_version_stream(
     (``FOLD_SCHEMA``); ``payload`` is a STRING column of the change."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    keyed, _ = by_row_key(env, key_cols, applied=True)
+    keyed, _ = by_row_key(dedup_replay(env), key_cols, applied=True)
     pre = keyed.select(
         *ROW_KEY,
         "op",

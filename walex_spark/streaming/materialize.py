@@ -26,9 +26,10 @@ hash-bucketed parquet and bucket-pruned rewrites:
     snapshot — readable (the same commit protocol as a Delta/Iceberg
     version pointer). Orphaned version dirs from crashed attempts are
     garbage-collected on the next successful publish;
-  - replay safety: a batch re-delivered after a crash merges
-    idempotently (same keys, same LSNs → same winners), matching the
-    checkpoint-replay contract of foreachBatch (R12).
+  - replay safety (R12): the MANIFEST's ``applied`` mark, flipped with
+    the buckets, is the highest ``wal_position`` merged; rows at or
+    below it are replays and skipped. Exact, no horizon; it assumes the
+    sink reads one slot's changes, whose positions rise in commit order.
 """
 
 from __future__ import annotations
@@ -46,6 +47,7 @@ from walex_spark.operators.transforms import (
     materialize_table_state,
     pk_column,
     split_key_changes,
+    wal_position,
 )
 
 
@@ -64,13 +66,14 @@ class ParquetStateSink:
     def _manifest_path(self) -> str:
         return os.path.join(self.path, "MANIFEST")
 
-    def _read_manifest(self) -> dict[str, str]:
-        """bucket id (str) → version dir name holding its current data."""
+    def _read_manifest(self, part: str = "buckets"):
+        """bucket id (str) → version dir name holding its current data;
+        ``part="applied"``: the mark, [lsn, change_idx] or None."""
         try:
             with open(self._manifest_path) as f:
-                return json.load(f)["buckets"]
+                return json.load(f).get(part)
         except FileNotFoundError:
-            return {}
+            return {} if part == "buckets" else None
 
     def _bucket_dirs(self, manifest: dict[str, str], buckets) -> list[str]:
         return [
@@ -101,12 +104,17 @@ class ParquetStateSink:
         The publish is a single atomic manifest flip (see module doc).
         """
         spark = env.sparkSession
+        mark = self._read_manifest("applied")
+        if mark:  # replays: at or below the mark
+            lsn, idx = mark
+            env = env.filter(wal_position() > F.struct(F.lit(lsn).cast("bigint"), F.lit(idx)))
         # the bucket collect splits key-changing UPDATEs: the old key's
         # bucket must be rewritten too, to drop it. The merge below
         # splits the batch itself.
         agg = split_key_changes(env, self.key_cols).agg(
             F.collect_set(self._bucket_col()).alias("bs"),
             F.max(F.col("op") == "TRUNCATE").alias("has_trunc"),
+            F.max(wal_position()).alias("top"),
         ).collect()[0]
         changed = sorted(agg.bs)
         if not changed:
@@ -129,10 +137,10 @@ class ParquetStateSink:
 
         vdir = f"v-{epoch_id}-{uuid.uuid4().hex[:8]}"
         new_state.write.partitionBy("__bucket").parquet(os.path.join(self.path, vdir))
-        self._publish(manifest, changed, vdir)
+        self._publish(manifest, changed, vdir, list(agg.top))
 
-    def _publish(self, manifest: dict[str, str], changed: list[int], vdir: str) -> None:
-        """Flip the manifest atomically, then GC unreferenced versions.
+    def _publish(self, manifest: dict, changed: list, vdir: str, applied: list) -> None:
+        """Flip the manifest and its mark atomically, then GC unreferenced versions.
 
         Everything before the os.replace is invisible to readers; a
         crash anywhere leaves the previous single-epoch state intact
@@ -147,7 +155,7 @@ class ParquetStateSink:
             # bucket emptied entirely (all its keys deleted) → drops out
         tmp = f"{self._manifest_path}.tmp"
         with open(tmp, "w") as f:
-            json.dump({"buckets": new_manifest}, f)
+            json.dump({"buckets": new_manifest, "applied": applied}, f)
         os.replace(tmp, self._manifest_path)
         # best-effort GC: version dirs no longer referenced (including
         # leftovers of crashed publishes) — a crash here is harmless

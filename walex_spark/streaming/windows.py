@@ -5,10 +5,9 @@ The reference has no event-time notion beyond passing commit_timestamp
 through (§2.8) — ordering is assumed from the replication socket. At
 engine scale the stream is partitioned and late data is real, so the
 windowing layer is native Structured Streaming: watermarks bound state,
-tumbling/sliding windows aggregate per table/op, session windows group
-bursts, and replay dedup becomes `dropDuplicatesWithinWatermark` keyed
-on `(lsn_hi, lsn_lo, change_idx)` — the streaming form of R12 (the
-batch form is `operators.transforms.dedup_replay`).
+tumbling/sliding windows aggregate per table/op and session windows
+group bursts. Replay dedup (R12) is not here: its one operator,
+`operators.transforms.dedup_replay`, serves batch and stream.
 
 All functions accept either a batch or a streaming envelope DataFrame;
 watermarks are applied only when streaming (no-op semantics in batch).
@@ -82,17 +81,6 @@ def sessionized_activity(
             "first_change",
             "last_change",
         )
-    )
-
-
-def dedup_replay_stream(env: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming R12: drop duplicate deliveries of the same change
-    within the watermark horizon. State is bounded by the watermark
-    (unlike a plain dropDuplicates whose key set grows forever) —
-    exactly the replay window a durable-slot restart can produce
-    (replication/supervisor.ex:35-40)."""
-    return env.withWatermark("commit_ts", watermark).dropDuplicatesWithinWatermark(
-        ["lsn_hi", "lsn_lo", "change_idx"]
     )
 
 
