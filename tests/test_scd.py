@@ -86,6 +86,23 @@ def test_scd2_delete_only_key_emits_nothing(spark):
     assert scd2_history(env, ["id"]).count() == 0
 
 
+def test_scd2_replayed_change_opens_one_version(spark):
+    # the INSERT @10 is delivered twice: one version, as the stream gives
+    env = spark.createDataFrame(
+        [
+            _change("INSERT", 10, {"v": "a"}),
+            _change("INSERT", 10, {"v": "a"}),
+            _change("UPDATE", 20, {"v": "b"}),
+        ],
+        CHANGE_ENVELOPE_SCHEMA,
+    )
+    got = sorted(
+        (r.valid_from_lsn, r.valid_to_lsn)
+        for r in scd2_history(env, ["id"]).collect()
+    )
+    assert got == [(10, 20), (20, None)]
+
+
 @pytest.fixture(scope="module")
 def merge_env(spark):
     rows = [

@@ -221,6 +221,39 @@ def test_parquet_state_sink_truncate_wipes_all_buckets(spark, tmp_path):
     assert got == {("user", "new"), ("todo", "t1")}
 
 
+def test_parquet_state_sink_jobs_per_batch(spark, tmp_path):
+    """A TRUNCATE-free batch costs the sink 4 Spark jobs (pre-pass and
+    merge, two each under AQE): the TRUNCATE wipe is pruned from its
+    plan. A batch with a TRUNCATE still plans and applies the wipe."""
+    from walex_spark.streaming.materialize import ParquetStateSink
+
+    sc = spark.sparkContext
+    sink = ParquetStateSink(str(tmp_path / "state"), ["id"], num_buckets=4)
+
+    def jobs(rows, epoch):
+        group = f"sink-jobs-{epoch}"
+        sc.setJobGroup(group, "sink job count")
+        try:
+            sink.process_batch(spark.createDataFrame(rows, CHANGE_ENVELOPE_SCHEMA), epoch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    b1 = [
+        ("INSERT", "public", "user", None, {"id": str(i)}, None, None, TS, 0, 10 + i, i, 0)
+        for i in range(8)
+    ]
+    b2 = [
+        ("TRUNCATE", "public", "user", None, None, None, None, TS, 0, 100, 100, 0),
+        ("INSERT", "public", "user", None, {"id": "new"}, None, None, TS, 0, 110, 101, 0),
+    ]
+    assert jobs(b1, 0) == 4
+    assert len(sink.state(spark).collect()) == 8
+    # the wipe's aggregate and broadcast join are back in the plan
+    assert jobs(b2, 1) > 4
+    assert [r.record["id"] for r in sink.state(spark).collect()] == ["new"]
+
+
 def test_parquet_state_sink_crash_mid_publish(spark, tmp_path):
     """Kill-mid-swap recovery (the reference's fault-injection tier,
     database_test.exs:80-106 analog): a crash after the new version is

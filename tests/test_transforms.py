@@ -52,6 +52,16 @@ def envelope(spark):
     return spark.createDataFrame(rows, CHANGE_ENVELOPE_SCHEMA)
 
 
+def test_session_default_keeps_analysis_errors(spark, envelope):
+    # get_spark turns off PySpark's per-call call-site capture
+    # (session.py); an error still has its class and names the column
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(AnalysisException, match="`op`"):
+        X.filter_and_cast(envelope.drop("op"), table="user")
+
+
 def test_relation_filter_parsing():
     f = X.parse_relation_filter("public:user")
     assert (f.schema, f.table) == ("public", "user")

@@ -21,6 +21,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -138,7 +140,7 @@ def main() -> int:
     if "/" not in args.sf:
         args.sf = f"/root/testdata/{args.sf}"
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     if args.entry:
         import __spark_entry__ as mod
 

@@ -23,7 +23,8 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F

@@ -18,11 +18,13 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -44,7 +46,7 @@ def main() -> int:
     names = args.names
     if not names:
         try:
-            with open("/root/repo/BENCH_DETAIL.json") as f:
+            with open(os.path.join(ROOT, "BENCH_DETAIL.json")) as f:
                 detail = json.load(f)["queries"]
             names = [n for n, _ in sorted(detail.items(), key=lambda kv: -kv[1])[:10]]
         except OSError:

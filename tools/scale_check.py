@@ -48,7 +48,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF01 = "/root/testdata/sf0.1"
 SF1 = "/tmp/sf1_scale"
@@ -136,7 +137,7 @@ def main() -> int:
 
     names = args.names
     if not names:
-        detail = json.load(open("/root/repo/BENCH_DETAIL.json"))
+        detail = json.load(open(os.path.join(ROOT, "BENCH_DETAIL.json")))
         qsec = detail.get("queries", detail)
         names = [
             k for k, _ in sorted(qsec.items(), key=lambda kv: -float(kv[1]))

@@ -73,20 +73,26 @@ def scd2_history(df: DataFrame, key_cols: list[str]) -> DataFrame:
       is_current       — open interval (key's live version)
 
     DELETE events close the prior version but emit no row themselves;
-    a later INSERT for the key re-opens history naturally. Exactly one
-    shuffle (the per-key window); `lead` closes intervals in the same
+    a later INSERT for the key re-opens history naturally. A change
+    delivered twice (same ``(lsn, change_idx)``) is a replay: only its
+    last copy opens a version. Exactly one shuffle (the per-key
+    window); `lead` closes intervals and finds the copies in the same
     pass — no self-join, no second shuffle.
     """
     keyed, w = by_row_key(df, key_cols, applied=True)
     nxt_lsn = F.lead(F.col("__lsn")).over(w)
     nxt_op = F.lead(F.col("op")).over(w)
+    nxt_idx = F.lead(F.col("change_idx")).over(w)
+    # the next change is a copy of this one: same WAL position
+    replayed = nxt_lsn.eqNullSafe(F.col("__lsn")) & nxt_idx.eqNullSafe(F.col("change_idx"))
     return (
         keyed.withColumn("valid_to_lsn", nxt_lsn)
         .withColumn("closed_by_delete", F.coalesce(nxt_op == "DELETE", F.lit(False)))
-        .filter(F.col("op") != "DELETE")
+        .withColumn("__replayed", replayed)
+        .filter((F.col("op") != "DELETE") & ~F.col("__replayed"))
         .withColumn("valid_from_lsn", F.col("__lsn"))
         .withColumn("is_current", F.col("valid_to_lsn").isNull())
-        .drop("__lsn", "__pk")
+        .drop("__lsn", "__pk", "__replayed")
     )
 
 

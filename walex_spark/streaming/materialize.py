@@ -30,6 +30,13 @@ hash-bucketed parquet and bucket-pruned rewrites:
     the buckets, is the highest ``wal_position`` merged; rows at or
     below it are replays and skipped. Exact, no horizon; it assumes the
     sink reads one slot's changes, whose positions rise in commit order.
+
+Spark jobs per microbatch: 4 under AQE, two for the changed-bucket
+pre-pass (its collect) and two for the merge and write (each a shuffle
+stage, then the result). Only a batch that holds a TRUNCATE adds the
+wipe's aggregate and broadcast join, 2 jobs more. For any other batch
+the pre-pass has already seen that there is none, and the merge input
+tells the optimizer so (``op != 'TRUNCATE'``), which prunes the wipe.
 """
 
 from __future__ import annotations
@@ -131,6 +138,11 @@ class ParquetStateSink:
             # passing it spares a schema-inference job
             existing = spark.read.schema(env.schema).parquet(*existing_dirs)
             merged_input = existing.unionByName(env)
+        if not agg.has_trunc:
+            # state holds no TRUNCATE row and the wipe drops NULL ops:
+            # with this filter the optimizer prunes the wipe's
+            # aggregate and broadcast join (two jobs)
+            merged_input = merged_input.filter(F.col("op") != "TRUNCATE")
         new_state = materialize_table_state(merged_input, self.key_cols).withColumn(
             "__bucket", self._bucket_col()
         )
