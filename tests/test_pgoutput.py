@@ -318,50 +318,121 @@ def _sequential_stamp(stream) -> list[tuple]:
     return out
 
 
-def test_decode_envelope_partitioning_equivalence(spark):
-    """The ordered pass stamps exactly like a sequential walk, however
-    the frames arrive partitioned and however the range partitions cut
-    the transactions: each seeded stream is shuffled into 1, 2, 3 and
-    8 input partitions and decoded with 3-row Arrow batches, so held
-    transactions cross batches as well as partitions."""
+def _stamped(env):
+    """decode_envelope's rows as _sequential_stamp's tuples, sorted."""
     from pyspark.sql import functions as F
-
-    from walex_spark.sources.pgoutput import collect_registry, decode_frames
 
     def rec(c):
         return F.when(F.col(c).isNotNull(), F.array_sort(F.map_entries(c)))
 
-    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(conf)
-    spark.conf.set(conf, "3")
+    got = env.select(
+        "op", "table", "xid",
+        (F.col("lsn_hi") * (1 << 32) + F.col("lsn_lo")).alias("lsn"),
+        F.unix_micros("commit_ts").alias("ts"), "change_idx",
+        rec("record"), rec("old_record"), rec("key_record"),
+    ).collect()
+    return sorted(
+        (tuple(tuple(map(tuple, v)) if isinstance(v, list) else v for v in r) for r in got),
+        key=repr,
+    )
+
+
+def test_decode_envelope_partitioning_equivalence(spark, tmp_path):
+    """The ordered pass stamps exactly like a sequential walk, however
+    the frames arrive partitioned and however the runs cut the
+    transactions, decoded with 3-row Arrow batches so that held
+    transactions cross batches as well as runs.
+
+    - Stored as runs: each seeded stream is written as 10 parquet files
+      of contiguous frame_idx ranges, cut without regard to transaction
+      boundaries, and read as 3 input partitions that each hold several
+      non-adjacent files. decode_frames walks each file as one run, no
+      exchange, and stamp_transactions accepts the runs as they are.
+    - Shuffled into 1, 2, 3 and 8 input partitions: the runs overlap,
+      stamp_transactions refuses them, and decode_envelope falls back
+      to the walk behind a range exchange."""
+    from functools import reduce
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from walex_spark.sources.pgoutput import (
+        _END,
+        collect_registry,
+        decode_frames,
+        stamp_transactions,
+    )
+
+    n_files, n_scans = 10, 3
+    conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": "3",
+            "spark.sql.files.minPartitionNum": "1"}  # one partition per scan below
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         for seed in range(2):
             stream, (lo, hi) = _random_stream(seed)
             expected = sorted(_sequential_stamp(stream), key=repr)
+
+            cut = [len(stream) * k // n_files for k in range(n_files + 1)]
+            paths = []
+            for k in range(n_files):
+                chunk = stream[cut[k]:cut[k + 1]]
+                paths.append(str(tmp_path / f"s{seed}-{k:02d}.parquet"))
+                pq.write_table(pa.table({
+                    "frame_idx": pa.array([i for i, _ in chunk], pa.int64()),
+                    "payload": pa.array([p for _, p in chunk], pa.binary()),
+                }), paths[-1])
+            scans = [
+                spark.read.schema("frame_idx long, payload binary").parquet(*paths[p::n_scans])
+                for p in range(n_scans)
+            ]
+            frames = reduce(DataFrame.unionByName, scans)
+            assert frames.rdd.getNumPartitions() == n_scans
+            decoded = decode_frames(frames, collect_registry(frames))
+            assert _stamped(stamp_transactions(decoded)) == expected, f"seed {seed}, files"
+            ends = decoded.filter(F.col("kind") == _END).select("run", "frame_idx").collect()
+            assert sorted((e.run, e.frame_idx) for e in ends) == [
+                (stream[cut[k]][0], stream[cut[k + 1] - 1][0]) for k in range(n_files)
+            ]
+            # the long transaction really crosses 3+ files
+            spans = decoded.filter(F.col("frame_idx").between(lo, hi)).select("run").distinct()
+            assert spans.count() >= 3
+
             shuffled = stream[:]
             random.Random(seed).shuffle(shuffled)
             for parts in (1, 2, 3, 8):
                 frames = spark.createDataFrame(
                     shuffled, "frame_idx long, payload binary"
                 ).repartition(parts)
-                got = decode_envelope(frames).select(
-                    "op", "table", "xid",
-                    (F.col("lsn_hi") * (1 << 32) + F.col("lsn_lo")).alias("lsn"),
-                    F.unix_micros("commit_ts").alias("ts"), "change_idx",
-                    rec("record"), rec("old_record"), rec("key_record"),
-                ).collect()
-                got = sorted(
-                    (tuple(tuple(map(tuple, v)) if isinstance(v, list) else v for v in r)
-                     for r in got),
-                    key=repr,
-                )
+                if parts > 1:
+                    with pytest.raises(ValueError, match="runs overlap"):
+                        stamp_transactions(decode_frames(frames, collect_registry(frames)))
+                got = _stamped(decode_envelope(frames))
                 assert got == expected, f"seed {seed}, {parts} input partitions"
-            # the long transaction really spans 3+ range partitions
-            decoded = decode_frames(frames, collect_registry(frames))
-            spans = decoded.filter(F.col("frame_idx").between(lo, hi)).select("part").distinct()
-            assert spans.count() >= min(3, spark.sparkContext.defaultParallelism)
+            # behind the range exchange, too, the long transaction crosses 3+ runs
+            n = spark.sparkContext.defaultParallelism
+            ranged = decode_frames(frames.repartitionByRange(n, "frame_idx"),
+                                   collect_registry(frames))
+            spans = ranged.filter(F.col("frame_idx").between(lo, hi)).select("run").distinct()
+            assert spans.count() >= min(3, n)
     finally:
-        spark.conf.set(conf, old)
+        for k, v in old.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+
+
+def test_decode_frames_joined_from_two_file_sources(spark, frames, tmp_path):
+    """Frames selected by a join with a second file source decode as
+    the same frames do alone: input_file_name() refuses a plan over two
+    file sources, so the walk takes each input partition as one run."""
+    frames.write.parquet(str(tmp_path / "frames"))
+    spark.range(100).withColumnRenamed("id", "frame_idx").write.parquet(str(tmp_path / "keep"))
+    joined = spark.read.parquet(str(tmp_path / "frames")).join(
+        spark.read.parquet(str(tmp_path / "keep")), "frame_idx"
+    )
+    assert _stamped(decode_envelope(joined)) == _stamped(decode_envelope(frames))
 
 
 def test_arity_mismatch_fails_loud(spark):

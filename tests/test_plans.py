@@ -172,8 +172,8 @@ def test_ann_ivf_candidate_join_is_equi(reports):
 
 def test_pgoutput_stamp_is_a_broadcast_carry(reports):
     """Transaction stamping has no window and no shuffle: the decoded
-    rows meet the per-partition carry (one row per partition) in a
-    broadcast equi-join on the partition id."""
+    rows meet the carry across runs (one row per run) in a broadcast
+    equi-join on the run."""
     r = reports("q_cdc_pgoutput_decode")
     tree = r.text.split("\n\n", 1)[0]
     assert "Window" not in r.text
@@ -182,18 +182,57 @@ def test_pgoutput_stamp_is_a_broadcast_carry(reports):
     assert r.shuffle_exchanges == 0
 
 
-def test_pgoutput_decode_single_range_exchange(spark):
-    """decode_frames' only exchange range-partitions the frames on
-    frame_idx, so each partition's ordered walk sees one contiguous
-    stretch of the stream."""
-    from walex_spark.sources.pgoutput import decode_frames, encode_begin
+def test_pgoutput_decode_runs_without_exchange(spark, tmp_path):
+    """A stream stored as files that each hold a contiguous frame_idx
+    range decodes with no exchange: decode_frames walks each file as
+    one run, and decode_envelope runs one Spark job (the END-row
+    collect that fills the decoded rows' checkpoint). The carry across
+    runs is a driver-local LocalRelation, not a Python RDD whose
+    broadcast would run Python tasks."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    frames = spark.createDataFrame(
-        [(0, encode_begin(1, 0, 7))], "frame_idx long, payload binary"
+    from walex_spark.sources.pgoutput import (
+        collect_registry,
+        decode_envelope,
+        decode_frames,
+        encode_begin,
+        encode_commit,
+        encode_insert,
+        encode_relation,
     )
-    r = audit(decode_frames(frames, {}))
-    assert r.shuffle_exchanges == 1
-    assert re.search(r"rangepartitioning\(frame_idx#\d+L ASC", r.text)
+
+    payloads = [encode_relation(1, "user", [("id", 23, True)])]
+    for t in range(6):
+        payloads += [encode_begin(100 + t, 0, 700 + t), encode_insert(1, [str(t)]),
+                     encode_insert(1, [str(10 + t)]), encode_commit(100 + t, 0)]
+    paths = []
+    for k in range(5):  # 5 frames per file: transactions cross files
+        chunk = list(enumerate(payloads))[5 * k:5 * k + 5]
+        paths.append(str(tmp_path / f"frames-{k}.parquet"))
+        pq.write_table(pa.table({
+            "frame_idx": pa.array([i for i, _ in chunk], pa.int64()),
+            "payload": pa.array([p for _, p in chunk], pa.binary()),
+        }), paths[-1])
+    frames = spark.read.schema("frame_idx long, payload binary").parquet(*paths)
+    registry = collect_registry(frames)
+
+    r = audit(decode_frames(frames, registry))
+    assert r.shuffle_exchanges == 0 and r.broadcast_exchanges == 0
+
+    sc = spark.sparkContext
+    group = "pgoutput-decode-jobs"
+    sc.setJobGroup(group, "decode_envelope job count")
+    try:
+        env = decode_envelope(frames, registry)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    plan = env._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan
+    assert plan.count("LogicalRDD") == 1  # the decoded rows' checkpoint
+    assert env.count() == 12
 
 
 def test_scd2_single_shuffle(reports):

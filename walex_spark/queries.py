@@ -1742,8 +1742,8 @@ def q_cdc_toast_resolve(spark, sf_dir):
 def q_cdc_pgoutput_decode(spark, sf_dir):
     """R1 at the wire level: events → binary pgoutput frames (one txn per
     event: Begin/Insert-or-Update-or-Delete/Commit) → decode (broadcast
-    relation registry + one ordered decode-and-stamp walk per range
-    partition + per-partition carry) → canonical envelope. The oracle
+    relation registry + one ordered decode-and-stamp walk per run +
+    the carry across runs) → canonical envelope. The oracle
     predicts the decoded rows straight from the source table, so the
     whole binary round trip is value-checked (decoder golden tests
     cover the per-message layouts: tests/test_pgoutput.py)."""
@@ -1753,18 +1753,19 @@ def q_cdc_pgoutput_decode(spark, sf_dir):
     # shuffle-before-fan-out (the partition_by_doc discipline): the
     # events parquet is a single-writer export that scans as ONE
     # partition, which would run the whole Python encode serially in
-    # one task (the decode range-partitions on its own). One narrow
-    # exchange of (event_id, user_id, event_type) buys full-cluster
-    # parallelism for the encode pass. The decoded rows are
-    # materialized once inside stamp_transactions (a local checkpoint
-    # filled by its collect of the per-partition summary rows), so the
-    # returned plan scans that checkpoint: the encode and decode
-    # subtrees, with their exchanges, run exactly once.
+    # one task. One narrow exchange of (event_id, user_id, event_type)
+    # buys full-cluster parallelism for the encode pass. It is a range
+    # exchange, so each partition encodes one contiguous stretch of
+    # frame_idx: the decode walks each partition as one run, with no
+    # exchange of its own. The decoded rows are materialized inside
+    # stamp_transactions (a local checkpoint filled by its collect of
+    # the per-run END rows), so the returned plan scans that checkpoint
+    # and runs neither subtree again.
     n_part = spark.sparkContext.defaultParallelism
     ev = (
         _events(spark, sf_dir)
         .select("event_id", "user_id", "event_type")
-        .repartition(n_part, F.col("event_id"))
+        .repartitionByRange(n_part, "event_id")
     )
 
     def enc(batches):

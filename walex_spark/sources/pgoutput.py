@@ -9,24 +9,29 @@ Truncate 'T', with TupleData cells 'n' (NULL) / 'u' (unchanged TOAST) /
 protocol, independent implementation).
 
 Spark-first decomposition — the reference decodes and assembles in one
-ordered pass (publisher.ex:57-77); here that pass runs once per range
-partition of the stream, and only its boundaries are serial:
+ordered pass (publisher.ex:57-77); here that pass runs once per run of
+the stream (an ordered stretch of one input file), and only the run
+boundaries are serial:
 
   1. ``collect_registry`` — Relation/Type entries, collected FIRST from
      the (tiny) 'R'/'Y' frames and broadcast into the decode closure —
      the "slowly-changing broadcast state" form of publisher.ex:79-95.
-  2. ``decode_frames`` — one range exchange on frame_idx, then an
-     Arrow-batched walk over each partition in frame order: each tag
-     is parsed by its one parser (the same ones ``decode_message``
-     uses), and each change is stamped with its transaction's xid,
-     commit_ts, lsn and change_idx as it goes. Changes of transactions
-     that never commit are dropped; one summary row per partition
-     records the transaction open at its end.
-  3. ``stamp_transactions`` — a driver-side prefix scan over those
-     summary rows (metadata-sized) finishes the rows a partition could
-     not: the head rows that continue the previous partition's open
+  2. ``decode_frames`` — no exchange: each input partition is sorted
+     on frame_idx, and one ``mapInArrow`` walk per run visits its
+     frames in order: each tag is parsed by its one parser (the same
+     ones ``decode_message`` uses), and each change is stamped with
+     its transaction's xid, commit_ts, lsn and change_idx as it goes.
+     Changes of transactions that never commit are dropped; one END row
+     per run records its first and last frame_idx and the transaction
+     open at its end.
+  3. ``stamp_transactions`` — a driver-side prefix scan over those END
+     rows (metadata-sized), in frame order, finishes the rows a run
+     could not: the head rows that continue the previous run's open
      transaction, and the tail rows whose COMMIT is in a later one. It
-     applies as a broadcast join on the partition id.
+     applies as a broadcast join of a driver-local table on the run.
+     Runs that overlap mean the input was not stored in order;
+     ``decode_envelope`` then walks once more behind a range exchange
+     on frame_idx, which makes each partition one run.
 
 Unknown relation ids are dropped, matching publisher.ex:124-126.
 """
@@ -36,11 +41,16 @@ from __future__ import annotations
 import struct
 from bisect import bisect_right
 from datetime import datetime, timedelta, timezone
+from itertools import chain, groupby
+from operator import itemgetter
 from typing import Any, Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.errors import AnalysisException
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from walex_spark.functions.pg_types import OID_TO_NAME
 from walex_spark.model import UNCHANGED_TOAST
@@ -342,6 +352,7 @@ def registry_lookup(registry: dict, rel_id: int, frame_idx: int) -> dict | None:
 
 # decode_frames' row kinds (column ``kind``); see decode_frames
 _HEAD, _DONE, _TAIL, _END = 0, 1, 2, 3
+_BATCH_ROWS = 10_000  # rows per RecordBatch decode_frames yields (Spark's default Arrow batch)
 
 _DECODED_SCHEMA = T.StructType(
     [
@@ -370,42 +381,63 @@ _DECODED_SCHEMA = T.StructType(
         T.StructField("lsn", T.LongType()),
         T.StructField("xid", T.LongType()),
         T.StructField("change_idx", T.IntegerType()),
+        T.StructField("run", T.LongType()),  # the first frame_idx of the row's run
         T.StructField("kind", T.IntegerType()),
     ]
 )
 
 
+def _arrow_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
+    """Row tuples → one RecordBatch of ``schema``, built column by column."""
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+
+
 def decode_frames(frames: DataFrame, registry: dict) -> DataFrame:
-    """Pass 2: decode and stamp the frames in one ordered walk per
-    partition, against the broadcast registry.
+    """Pass 2: decode and stamp the frames in one ordered walk per run,
+    against the broadcast registry. No exchange.
 
-    The one exchange range-partitions the frames on ``frame_idx``; each
-    partition is sorted, so it holds one contiguous stretch of the
-    stream. The walk is the reference's transaction loop
-    (publisher.ex:57-77): BEGIN opens a transaction, each change is
-    stamped with its xid, commit_ts, lsn and change_idx, and COMMIT
-    makes the changes final. A BEGIN while a transaction is open
-    discards it; a change outside any transaction is dropped. Only the
-    open transaction's changes are held across Arrow batches. Cells zip
-    against the relation version in effect at the change's own position
-    (registry_lookup, publisher.ex:247-279); changes of unknown
-    relations are skipped (publisher.ex:124-126).
+    Each input partition is sorted on ``frame_idx``. A run is a stretch
+    of it read from one input file (a change of ``input_file_name()``
+    starts the next run; frames from a non-file source form one run per
+    partition). A stream stored as files that each hold a contiguous
+    ``frame_idx`` range thus decodes as one ordered run per file, with
+    no exchange, however the files are packed into partitions.
+    stamp_transactions checks that the runs are disjoint ranges of the
+    stream; decode_envelope re-plans the walk behind a range exchange
+    when they are not.
 
-    The walk does not know the transaction open where its partition
-    starts, so ``kind`` says how far a row is stamped:
+    The walk is the reference's transaction loop (publisher.ex:57-77):
+    BEGIN opens a transaction, each change is stamped with its xid,
+    commit_ts, lsn and change_idx, and COMMIT makes the changes final.
+    A BEGIN while a transaction is open discards it; a change outside
+    any transaction is dropped. Only the open transaction's changes are
+    held, across Arrow batches. Cells zip against the relation version
+    in effect at the change's own position (registry_lookup,
+    publisher.ex:247-279); changes of unknown relations are skipped
+    (publisher.ex:124-126). Arrow batches in and out: the output is
+    built with ``_DECODED_SCHEMA``'s Arrow schema, no pandas.
 
-      - ``_HEAD``: a change before the partition's first BEGIN/COMMIT.
-        It continues the incoming transaction: xid, commit_ts and lsn
-        are null and change_idx counts from 0 in this partition.
-      - ``_DONE``: a change whose transaction committed here.
-      - ``_TAIL``: a change of the transaction open at the end; it
-        stands if that transaction commits in a later partition.
-      - ``_END``: one row per partition, its state at the end. ``op``
-        is what ended the incoming transaction ("BEGIN", "COMMIT", or
-        null if nothing did); xid, commit_ts and lsn are the open local
+    Every row carries ``run``, its run's first frame_idx. The walk does
+    not know the transaction open where its run starts, so ``kind``
+    says how far a row is stamped:
+
+      - ``_HEAD``: a change before the run's first BEGIN/COMMIT. It
+        continues the incoming transaction: xid, commit_ts and lsn are
+        null and change_idx counts from 0 in this run.
+      - ``_DONE``: a change whose transaction committed in this run.
+      - ``_TAIL``: a change of the transaction open at the run's end;
+        it stands if that transaction commits in a later run.
+      - ``_END``: one row per run, its state at the end. ``frame_idx``
+        is the run's last frame_idx (``run`` its first). ``op`` is what
+        ended the incoming transaction ("BEGIN", "COMMIT", or null if
+        nothing did); xid, commit_ts and lsn are the open local
         transaction and change_idx the open transaction's change count.
 
     stamp_transactions finishes the HEAD and TAIL rows from the END rows."""
+    schema = to_arrow_schema(_DECODED_SCHEMA)
 
     def zip_cells(rel: dict, cells: list | None):
         if cells is None:
@@ -423,100 +455,106 @@ def decode_frames(frames: DataFrame, registry: dict) -> DataFrame:
             )
         return {c["name"]: v for c, v in zip(cols, cells)}
 
-    names = [f.name for f in _DECODED_SCHEMA.fields]
-    ts_pos = names.index("commit_ts")
-
-    def to_pandas(rows: list[tuple], kinds: list[int]):
-        # Columnar: one transpose of the row tuples, not a dict per row.
-        # Object dtype on every nullable column: equal-length nested
-        # lists would collapse into a 2-D ndarray, and all-None columns
-        # would infer float64 NaN; both break Arrow conversion.
-        import pandas as pd
-
-        cols = [pd.Series(c, dtype="object") for c in zip(*rows)] or [
-            pd.Series([], dtype="object") for _ in range(len(names) - 1)
-        ]
-        cols[ts_pos] = pd.to_datetime(cols[ts_pos])
-        return pd.DataFrame(dict(zip(names, cols + [pd.Series(kinds, dtype="int32")])))
-
-    def decode_part(batches: Iterator) -> Iterator:
-        incoming = (None, None, None)  # the transaction open at the partition's start
+    def walk_run(run: Iterator[tuple]) -> Iterator[tuple]:
+        """One run's rows, ``kind`` last; ``run`` yields its (file,
+        frame_idx, payload) triples in frame order."""
+        head = next(run)
+        first = head[1]
+        incoming = (None, None, None)  # the transaction open at the run's start
         txn = incoming  # (commit_ts, lsn, xid) of the open transaction, or None
         n = 0  # changes of txn so far
         head_end = None  # "BEGIN" / "COMMIT": what ended the incoming transaction
         held: list[tuple] = []  # txn's changes, not final until its COMMIT
-        for pdf in batches:
-            out: list[tuple] = []
-            kinds: list[int] = []
-            for idx, payload in zip(pdf["frame_idx"].to_numpy(), pdf["payload"].to_numpy()):
-                buf = bytes(payload)
-                tag = buf[0:1]
-                if tag == b"B" or tag == b"C":
-                    if txn is incoming:
-                        head_end = "BEGIN" if tag == b"B" else "COMMIT"
-                    if tag == b"C" and txn is not None:
-                        out += held
-                        kinds += [_HEAD if txn is incoming else _DONE] * len(held)
-                    held, txn, n = [], None, 0
-                    if tag == b"B":
-                        m = _begin(buf)
-                        txn = (m["commit_ts"], m["final_lsn"], m["xid"])
+        for _, idx, buf in chain((head,), run):
+            tag = buf[0:1]
+            if tag == b"B" or tag == b"C":
+                if txn is incoming:
+                    head_end = "BEGIN" if tag == b"B" else "COMMIT"
+                if tag == b"C" and txn is not None:
+                    kind = _HEAD if txn is incoming else _DONE
+                    yield from ((*row, kind) for row in held)
+                held, txn, n = [], None, 0
+                if tag == b"B":
+                    m = _begin(buf)
+                    txn = (m["commit_ts"], m["final_lsn"], m["xid"])
+                continue
+            if txn is None or tag not in _CHANGES:
+                continue
+            m = _PARSERS[tag](buf)
+            if tag == b"T":  # one row per relation, at its sub_idx
+                targets = enumerate(m["relation_ids"])
+            else:
+                targets = ((0, m["relation_id"]),)
+            for sub, rel_id in targets:
+                rel = registry_lookup(registry, rel_id, idx)
+                if rel is None:
                     continue
-                if txn is None or tag not in _CHANGES:
-                    continue
-                m = _PARSERS[tag](buf)
-                if tag == b"T":  # one row per relation, at its sub_idx
-                    targets = enumerate(m["relation_ids"])
-                else:
-                    targets = ((0, m["relation_id"]),)
-                for sub, rel_id in targets:
-                    rel = registry_lookup(registry, rel_id, idx)
-                    if rel is None:
-                        continue
-                    held.append(
-                        (idx, sub, m["op"], rel["namespace"], rel["name"],
-                         None if tag == b"T" else rel["columns"],
-                         zip_cells(rel, m.get("new")), zip_cells(rel, m.get("old")),
-                         zip_cells(rel, m.get("key")), *txn, n)
-                    )
-                    n += 1
-            yield to_pandas(out, kinds)
+                held.append(
+                    (idx, sub, m["op"], rel["namespace"], rel["name"],
+                     None if tag == b"T" else rel["columns"],
+                     zip_cells(rel, m.get("new")), zip_cells(rel, m.get("old")),
+                     zip_cells(rel, m.get("key")), *txn, n, first)
+                )
+                n += 1
+        kind = _HEAD if txn is incoming else _TAIL
+        yield from ((*row, kind) for row in held)
         open_txn = (None,) * 4 if txn is None else (*txn, n)
-        end = (None, None, head_end) + (None,) * 6 + open_txn
-        kinds = [_HEAD if txn is incoming else _TAIL] * len(held) + [_END]
-        yield to_pandas(held + [end], kinds)
+        yield (idx, None, head_end, *(None,) * 6, *open_txn, first, _END)
 
-    n_part = frames.sparkSession.sparkContext.defaultParallelism
-    return (
-        frames.select("frame_idx", "payload")
-        .repartitionByRange(n_part, "frame_idx")
-        .sortWithinPartitions("frame_idx")
-        .mapInPandas(decode_part, _DECODED_SCHEMA)
-        .withColumn("part", F.spark_partition_id())
-    )
+    def walk(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        frames = chain.from_iterable(
+            zip(b["file"].to_pylist(), b["frame_idx"].to_pylist(), b["payload"].to_pylist())
+            for b in batches
+        )
+        rows: list[tuple] = []
+        for _, run in groupby(frames, key=itemgetter(0)):
+            for row in walk_run(run):
+                rows.append(row)
+                if len(rows) == _BATCH_ROWS:
+                    yield _arrow_batch(rows, schema)
+                    rows = []
+        yield _arrow_batch(rows, schema)
+
+    try:
+        runs = frames.select("frame_idx", "payload", F.hash(F.input_file_name()).alias("file"))
+    except AnalysisException as e:  # input_file_name() refuses a plan over two file sources
+        if e.getCondition() != "MULTI_SOURCES_UNSUPPORTED_FOR_EXPRESSION":
+            raise
+        runs = frames.select("frame_idx", "payload", F.lit(0).alias("file"))
+    return runs.sortWithinPartitions("frame_idx").mapInArrow(walk, _DECODED_SCHEMA)
 
 
-_CARRY_SCHEMA = (
-    "part int, carry_commit_us long, carry_lsn long, carry_xid long, "
-    "carry_n int, head_ok boolean, tail_ok boolean"
+_CARRY_SCHEMA = pa.schema(
+    [
+        ("run", pa.int64()),
+        ("carry_commit_us", pa.int64()),
+        ("carry_lsn", pa.int64()),
+        ("carry_xid", pa.int64()),
+        ("carry_n", pa.int32()),
+        ("head_ok", pa.bool_()),
+        ("tail_ok", pa.bool_()),
+    ]
 )
 
 
+class _RunsOverlap(ValueError):
+    """decode_frames' runs are not disjoint ranges of the stream."""
+
+
 def _carry(ends: list) -> list[tuple]:
-    """Prefix scan over decode_frames' END rows, in partition order:
-    per partition, the transaction its HEAD rows continue (commit_ts
-    µs, lsn, xid, change_idx offset) and whether its HEAD and TAIL
-    rows commit. A transaction may span any number of partitions; its
-    fate is known at the partition whose walk sees its COMMIT (or the
-    BEGIN that discards it)."""
+    """Prefix scan over decode_frames' END rows, in stream order: per
+    run, the transaction its HEAD rows continue (commit_ts µs, lsn,
+    xid, change_idx offset) and whether its HEAD and TAIL rows commit.
+    A transaction may span any number of runs; its fate is known at the
+    run whose walk sees its COMMIT (or the BEGIN that discards it)."""
     head_ok, tail_ok = 5, 6  # flag slots of an output row
     out = []
-    txn = None  # (commit_us, lsn, xid, n) open where the next partition starts
+    txn = None  # (commit_us, lsn, xid, n) open where the next run starts
     waiting: list[tuple[list, int]] = []  # (row, flag slot) that commit with txn
-    for e in sorted(ends, key=lambda e: e.part):
-        row = [e.part, *(txn or (None,) * 4), False, False]
+    for e in ends:
+        row = [e.run, *(txn or (None,) * 4), False, False]
         out.append(row)
-        if e.op is None:  # no BEGIN/COMMIT: the whole partition continues txn
+        if e.op is None:  # no BEGIN/COMMIT: the whole run continues txn
             if txn is not None:
                 waiting.append((row, head_ok))
                 txn = (*txn[:3], txn[3] + e.change_idx)
@@ -536,25 +574,39 @@ def stamp_transactions(decoded: DataFrame) -> DataFrame:
     commit_ts, lsn, change_idx), only changes of COMMITTED transactions
     (an unterminated tail is dropped, like the reference on restart).
 
-    The decoded rows are materialized once (a local checkpoint, filled
-    by the collect below: the one eager action here), because they are
-    read twice. The END rows, one per partition, are collected and
-    ``_carry`` scans them on the driver; the result joins back on the
-    partition id as a broadcast, which stamps the HEAD rows and keeps
-    the HEAD and TAIL rows whose transaction committed. No window and
-    no shuffle: the only serial step is the scan over one row per
-    partition."""
+    One Spark job. The decoded rows are materialized once (a local
+    checkpoint, filled by the collect below: the one eager action
+    here), because they are read twice. The END rows, one per run, are
+    collected and ordered by each run's first frame_idx. No two runs
+    may overlap, or the walk did not see the stream in order: that
+    raises ``_RunsOverlap``, on which decode_envelope re-plans the walk
+    behind a range exchange. ``_carry`` then scans the runs on the
+    driver; its result is a driver-local Arrow table (a
+    ``LocalRelation``, no Python tasks) that joins back on ``run`` as a
+    broadcast, which stamps the HEAD rows and keeps the HEAD and TAIL
+    rows whose transaction committed. No window and no shuffle: the
+    only serial step is the scan over one row per run."""
     decoded = decoded.localCheckpoint(eager=False)
     ends = (
         decoded.filter(F.col("kind") == _END)
-        .select("part", "op", F.unix_micros("commit_ts").alias("commit_us"),
+        .select("run", "frame_idx", "op", F.unix_micros("commit_ts").alias("commit_us"),
                 "lsn", "xid", "change_idx")
         .collect()
     )
-    carry = decoded.sparkSession.createDataFrame(_carry(ends), _CARRY_SCHEMA)
+    ends.sort(key=lambda e: e.run)
+    for prev, e in zip(ends, ends[1:]):
+        if e.run <= prev.frame_idx:
+            raise _RunsOverlap(
+                f"decode_frames' runs overlap: frame_idx {prev.run}..{prev.frame_idx} "
+                f"and {e.run}..{e.frame_idx}; its input partitions are not ordered "
+                "stretches of the stream (decode_envelope range-partitions them)"
+            )
+    carry = decoded.sparkSession.createDataFrame(
+        pa.Table.from_batches([_arrow_batch(_carry(ends), _CARRY_SCHEMA)])
+    )
     kind = F.col("kind")
     head = kind == _HEAD
-    rows = decoded.join(F.broadcast(carry), "part").filter(
+    rows = decoded.join(F.broadcast(carry), "run").filter(
         (kind == _DONE) | (head & F.col("head_ok")) | ((kind == _TAIL) & F.col("tail_ok"))
     )
     lsn = F.when(head, F.col("carry_lsn")).otherwise(F.col("lsn"))
@@ -583,12 +635,17 @@ def decode_envelope(
     registry: dict[int, tuple[list[int], list[dict]]] | None = None,
 ) -> DataFrame:
     """frames(frame_idx, payload) → canonical change envelope: registry
-    collect → one ordered decode-and-stamp pass per range partition
-    (decode_frames) → the per-partition carry (stamp_transactions).
+    collect → one ordered decode-and-stamp walk per run (decode_frames)
+    → the carry across runs (stamp_transactions).
 
-    Two eager actions: the registry collect (skipped when ``registry``
-    is given) and stamp_transactions' collect of the per-partition END
-    rows, which also materializes the decoded rows for the output.
+    One Spark job when the frames are stored as ordered runs, as a
+    stream written file by file is: stamp_transactions' collect of the
+    END rows, which also materializes the decoded rows for the output.
+    The registry collect adds one more unless ``registry`` is given.
+    When the runs overlap (frames that arrive shuffled, or synthesized
+    out of order), the same walk runs once more behind a range exchange
+    on frame_idx and a sort, so that each partition is one contiguous
+    run; that costs the exchange's sampling job and a shuffle.
 
     ``registry``: a pre-collected versioned relation registry, as
     ``collect_registry`` returns it (e.g. over just the Relation/Type
@@ -598,4 +655,9 @@ def decode_envelope(
     materialization."""
     if registry is None:
         registry = collect_registry(frames)
-    return stamp_transactions(decode_frames(frames, registry))
+    try:
+        return stamp_transactions(decode_frames(frames, registry))
+    except _RunsOverlap:
+        n_part = frames.sparkSession.sparkContext.defaultParallelism
+        ranged = frames.select("frame_idx", "payload").repartitionByRange(n_part, "frame_idx")
+        return stamp_transactions(decode_frames(ranged, registry))

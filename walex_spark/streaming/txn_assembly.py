@@ -6,11 +6,14 @@ into a %Transaction{} inside a single GenServer
 one owner: the ordered walk of ``sources.pgoutput.decode_frames``
 (finished by ``stamp_transactions``), which stamps each committed
 change with its xid, commit_ts, lsn and change_idx and drops the
-changes of transactions that never commit. On a stream that pass runs
-per microbatch inside ``foreachBatch``, whose checkpointed offsets are
-where the transaction state lives; there is no xid-keyed state store.
-The decoder keeps only transactions whose COMMIT is in the same input,
-so a transaction split across two microbatches is not yet carried over.
+changes of transactions that never commit. The walk runs once per run
+of the input (an ordered stretch of one frame file), with no exchange;
+a driver-side carry stitches transactions that cross runs. On a
+stream that pass runs per microbatch inside ``foreachBatch``, whose
+checkpointed offsets are where the transaction state lives; there is
+no xid-keyed state store. The decoder keeps only transactions whose
+COMMIT is in the same input, so a transaction split across two
+microbatches is not yet carried over.
 
 ``assemble_transactions`` then groups the stamped changes: one shuffle
 on xid, WAL order within the transaction restored by (lsn,
