@@ -75,14 +75,20 @@ def test_engine_streaming_attach_and_replay_dedup(spark, env_df, tmp_path):
     try:
         q.processAllAvailable()
         # a later file re-delivers one change of the first drop (a
-        # slot restart re-sends from the last confirmed LSN)
-        env_df.limit(1).coalesce(1).write.parquet(src, mode="append")
+        # slot restart re-sends from the last confirmed LSN), next to a
+        # new change past the 4 GiB WAL boundary: lsn_hi 1, a small lsn_lo
+        past_4gib = spark.createDataFrame(
+            [("INSERT", "public", "user", None, {"id": "3"}, None, None, TS, 1, 5, 702, 0)],
+            CHANGE_ENVELOPE_SCHEMA,
+        )
+        env_df.limit(1).unionByName(past_4gib).coalesce(1).write.parquet(src, mode="append")
         q.processAllAvailable()
     finally:
         q.stop()
     # R12: duplicates collapsed on (lsn, change_idx) before dispatch,
-    # within a microbatch and across microbatches
-    assert sum(counts) == 3
+    # within a microbatch and across microbatches; the change past
+    # 4 GiB is dispatched once
+    assert sum(counts) == 4
 
 
 def test_jdbc_polling_cursor(tmp_path):
@@ -107,6 +113,29 @@ def test_jdbc_polling_cursor(tmp_path):
     )
     assert resumed.cursor == 41_000
     assert json.load(open(ckpt))["cursor"] == 41_000
+
+
+def test_jdbc_commit_rejects_non_int_cursor(tmp_path):
+    """The cursor is rendered into the pushed-down SQL, so only an int
+    is valid; a rejected commit changes nothing: not the cursor, the
+    checkpoint file or the directory. A checkpoint holding another
+    value does not resume."""
+    ckpt = tmp_path / "c.json"
+    src = JdbcPollingSource(
+        url="jdbc:x", table="t", cursor_col="updated_at", checkpoint_path=str(ckpt)
+    )
+    src.commit(7)
+    listing = sorted(p.name for p in tmp_path.iterdir())
+    for bad in (TS, "o'brien", True, 7.5):
+        with pytest.raises(TypeError):
+            src.commit(bad)
+        assert src.cursor == 7
+        assert src.predicate() == "updated_at > 7"
+        assert json.loads(ckpt.read_text()) == {"cursor": 7}
+        assert sorted(p.name for p in tmp_path.iterdir()) == listing
+    ckpt.write_text(json.dumps({"cursor": "o'brien"}))
+    with pytest.raises(TypeError):
+        JdbcPollingSource(url="jdbc:x", table="t", cursor_col="c", checkpoint_path=str(ckpt))
 
 
 def test_jdbc_advance_from(spark, tmp_path):
@@ -194,6 +223,28 @@ def test_parquet_state_sink_merge(spark, tmp_path):
     sink.process_batch(spark.createDataFrame(b1[1:2], CHANGE_ENVELOPE_SCHEMA), 2)
     got3 = {r.record["id"]: r.record["age"] for r in sink.state(spark).collect()}
     assert got3 == got
+    # across the 4 GiB WAL boundary: (lsn_hi 1, lsn_lo 5) comes after
+    # (0, 4_100_000_000), so the applied mark must not skip it
+    near_4gib = [("INSERT", "public", "user", None, {"id": "9", "age": "90"},
+                  None, None, TS, 0, 4_100_000_000, 8, 0)]
+    past_4gib = [("UPDATE", "public", "user", None, {"id": "9", "age": "91"},
+                  {"id": "9", "age": "90"}, None, TS, 1, 5, 9, 0)]
+    sink.process_batch(spark.createDataFrame(near_4gib, CHANGE_ENVELOPE_SCHEMA), 3)
+    sink.process_batch(spark.createDataFrame(past_4gib, CHANGE_ENVELOPE_SCHEMA), 4)
+    got4 = {r.record["id"]: r.record["age"] for r in sink.state(spark).collect()}
+    assert got4 == {**got, "9": "91"}
+
+
+def test_parquet_state_sink_empty_state_is_local(spark, tmp_path):
+    """A fresh sink's state is an empty LocalRelation of the envelope
+    schema: reading it starts no Python tasks."""
+    from walex_spark.streaming.materialize import ParquetStateSink
+
+    state = ParquetStateSink(str(tmp_path / "state"), ["id"]).state(spark)
+    plan = state._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert state.schema == CHANGE_ENVELOPE_SCHEMA
+    assert state.count() == 0
 
 
 def test_parquet_state_sink_truncate_wipes_all_buckets(spark, tmp_path):

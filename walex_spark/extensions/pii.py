@@ -95,18 +95,3 @@ def redact_pii(
     for _, pat, sentinel in PII_PATTERNS:
         out = F.regexp_replace(out, pat, sentinel)
     return df.withColumn(out_col, out)
-
-
-def redaction_oracle_sql_exprs() -> tuple[list[str], str]:
-    """(per-class DuckDB count exprs, chained DuckDB replace expr) for
-    oracle construction — DuckDB's regexp_replace needs the explicit
-    'g' flag to match Spark's global default, and counting is
-    len(regexp_extract_all(...))."""
-    counts = [
-        f"CAST(len(regexp_extract_all(text, '{pat}')) AS BIGINT) AS n_{name}"
-        for name, pat, _ in PII_PATTERNS
-    ]
-    repl = "text"
-    for _, pat, sentinel in PII_PATTERNS:
-        repl = f"regexp_replace({repl}, '{pat}', '{sentinel}', 'g')"
-    return counts, repl

@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 from walex_spark.extensions import dedup as dd
 from walex_spark.extensions import similarity as sim
 from walex_spark.extensions import text as tx
+from walex_spark.session import empty_frame
 
 
 def _scratch_dir(prefix: str) -> str:
@@ -4760,7 +4761,7 @@ def q_doc_bpe_merges(spark, sf_dir):
     merges = train_bpe_merges(docs, _BPE_MERGES)
     schema = "step INT, pair STRING, merged STRING"
     if not merges:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     return spark.createDataFrame(merges, schema)
 
 

@@ -25,7 +25,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -66,11 +68,12 @@ def get_spark(
     return spark
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict:
-    """Load driver parquet tables and register them as temp views."""
-    out = {}
-    for name in names:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
+def empty_frame(spark: SparkSession, schema: T.StructType | str) -> DataFrame:
+    """An empty DataFrame of ``schema`` (a StructType or a DDL string).
+
+    Built from an empty Arrow table, it plans a ``LocalRelation``, whose
+    actions run no Python tasks; ``createDataFrame`` on an empty list
+    plans a ``LogicalRDD``, whose first action starts Python workers."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)

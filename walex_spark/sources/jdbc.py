@@ -4,9 +4,15 @@ Streaming + JDBC source").
 The reference holds a replication socket; with no replication protocol
 available to Spark, the idiomatic equivalent is cursor-keyed
 incremental JDBC polling: each poll reads only rows past the last
-cursor (LSN / xid / updated_at), partitioned on the cursor column for
-parallel pulls, and hands the batch to the same transform pipeline the
-file/Kafka envelope path uses.
+cursor, partitioned on the cursor column for parallel pulls, and hands
+the batch to the same transform pipeline the file/Kafka envelope path
+uses. The cursor is an integer column that grows with every change
+(an LSN or a sequence); any other cursor value raises TypeError.
+
+This is the one cursor poller. It runs on the driver, where Spark's
+JVM JDBC reader does the remote scan; a Python DataSource reader runs
+its methods in Python workers with no SparkSession, so it could not
+use that reader.
 
 Slot semantics mapping (server.ex:64-141):
   durable slot    → persisted cursor (checkpoint file) → resume + replay
@@ -14,10 +20,8 @@ Slot semantics mapping (server.ex:64-141):
   temporary slot  → in-memory cursor → at-most-once across restarts
   slot contention → single-writer cursor file lock
 
-No Postgres lives in this container, so this class is exercised by
-unit tests through its cursor/predicate logic with a parquet-backed
-fake; the JDBC reader call itself is one line and inert until given a
-real URL.
+tests/test_jdbc_live.py runs the real reader against embedded Apache
+Derby; tests/test_streaming.py covers the cursor, lock and retry logic.
 """
 
 from __future__ import annotations
@@ -38,23 +42,35 @@ class SlotInUseError(RuntimeError):
     slot (server.ex:17, retry/backoff there; here the caller decides)."""
 
 
+def _int_cursor(value: object) -> int:
+    """``value`` if it is an int (not a bool), else TypeError: the
+    cursor is rendered into the pushed-down SQL predicate with ``repr``,
+    which is valid SQL only for an integer."""
+    if type(value) is not int:
+        raise TypeError(
+            f"JdbcPollingSource cursor must be an int, got "
+            f"{type(value).__name__}: {value!r}"
+        )
+    return value
+
+
 @dataclass
 class JdbcPollingSource:
     url: str
     table: str
-    cursor_col: str
+    cursor_col: str  # an integer column that grows with every change
     user: str | None = None
     password: str | None = None
     driver: str | None = None  # JDBC driver class, e.g. org.postgresql.Driver
     fetch_size: int = 10_000
     num_partitions: int = 8
     checkpoint_path: str | None = None  # durable "slot"; None = temporary
-    _cursor: object | None = field(default=None, init=False)
+    _cursor: int | None = field(default=None, init=False)
 
     def __post_init__(self) -> None:
         if self.checkpoint_path and os.path.exists(self.checkpoint_path):
             with open(self.checkpoint_path) as f:
-                self._cursor = json.load(f)["cursor"]
+                self._cursor = _int_cursor(json.load(f)["cursor"])
 
     @property
     def cursor(self):
@@ -211,10 +227,11 @@ class JdbcPollingSource:
     def __exit__(self, *exc) -> None:
         self.release_lock()
 
-    def commit(self, new_cursor) -> None:
+    def commit(self, new_cursor: int) -> None:
         """Advance + persist the cursor (the standby-status-update ack,
-        server.ex:154-162)."""
-        self._cursor = new_cursor
+        server.ex:154-162). A non-integer cursor raises TypeError before
+        any state changes."""
+        self._cursor = _int_cursor(new_cursor)
         if self.checkpoint_path:
             tmp = f"{self.checkpoint_path}.tmp"
             with open(tmp, "w") as f:

@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from walex_spark.extensions import dedup as dd
+from walex_spark.session import empty_frame
 
 
 def _manifest_upto(root: str) -> int:
@@ -158,7 +159,7 @@ def _compact_root(
 def _read_union(spark: SparkSession, root: str, schema: str) -> DataFrame:
     dirs = _epoch_dirs(root)
     if not dirs:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     return spark.read.schema(schema).parquet(*dirs)
 
 
@@ -804,7 +805,7 @@ class IncrementalDespanIndex:
                     .groupBy("h").agg(F.sum("n").alias("n_old"))
                 )
             else:
-                tot_old = spark.createDataFrame([], "h BINARY, n_old BIGINT")
+                tot_old = empty_frame(spark, "h BINARY, n_old BIGINT")
         # the epoch's own partial folds in FROM MEMORY (same checkpoint
         # the index write materialized) — deterministic, so replay
         # recomputes identical rows; no read-back needed

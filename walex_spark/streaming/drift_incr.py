@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from walex_spark.session import empty_frame
 from walex_spark.streaming.dedup_incr import (
     _compact_root,
     _epoch_dirs,
@@ -108,7 +109,7 @@ class IncrementalDriftMonitor:
         part of the baseline."""
         dirs = _epoch_dirs(self._hist_root())
         if not dirs:
-            return spark.createDataFrame([], self.BASELINE_SCHEMA)
+            return empty_frame(spark, self.BASELINE_SCHEMA)
         hist = spark.read.schema(self.HIST_SCHEMA).parquet(*dirs)
         hist = hist.withColumn(
             "ep", F.coalesce(F.col("ep"), F.lit(-1).cast(T.LongType()))
@@ -184,7 +185,7 @@ class IncrementalDriftMonitor:
             "psi_num BIGINT, psi_half_bits DOUBLE"
         )
         if not had_baseline:
-            return spark.createDataFrame([], out_schema)
+            return empty_frame(spark, out_schema)
         ep = hist_new.select("bucket", F.col("n").alias("a"))
         base = self.baseline(spark, exclude_epoch=epoch_id).select(
             "bucket", F.col("n").alias("b")

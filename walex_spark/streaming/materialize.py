@@ -56,6 +56,7 @@ from walex_spark.operators.transforms import (
     split_key_changes,
     wal_position,
 )
+from walex_spark.session import empty_frame
 
 
 @dataclass
@@ -99,7 +100,7 @@ class ParquetStateSink:
         if not dirs:
             from walex_spark.model import CHANGE_ENVELOPE_SCHEMA
 
-            return spark.createDataFrame([], CHANGE_ENVELOPE_SCHEMA)
+            return empty_frame(spark, CHANGE_ENVELOPE_SCHEMA)
         return spark.read.parquet(*dirs)
 
     # -- merge -------------------------------------------------------------

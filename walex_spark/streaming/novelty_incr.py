@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from walex_spark.session import empty_frame
 from walex_spark.streaming.dedup_incr import (
     _compact_root,
     _epoch_dirs,
@@ -78,7 +79,7 @@ class IncrementalNoveltyIndex:
             or os.path.basename(d) != f"e-{exclude_epoch}"
         ]
         if not dirs:
-            return spark.createDataFrame([], self.GRAM_SCHEMA)
+            return empty_frame(spark, self.GRAM_SCHEMA)
         return spark.read.schema(self.GRAM_SCHEMA).parquet(*dirs)
 
     def compact(self, spark: SparkSession) -> bool:

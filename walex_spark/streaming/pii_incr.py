@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from walex_spark.session import empty_frame
 from walex_spark.streaming.dedup_incr import (
     _compact_root,
     _epoch_dirs,
@@ -85,7 +86,7 @@ class IncrementalPIIMonitor:
         epoch, excluding ``exclude_epoch`` BY VALUE on the ep stamp."""
         dirs = _epoch_dirs(self._hist_root())
         if not dirs:
-            return spark.createDataFrame([], self.BASELINE_SCHEMA)
+            return empty_frame(spark, self.BASELINE_SCHEMA)
         hist = spark.read.schema(self.HIST_SCHEMA).parquet(*dirs)
         hist = hist.withColumn(
             "ep", F.coalesce(F.col("ep"), F.lit(-1).cast(T.LongType()))
@@ -168,7 +169,7 @@ class IncrementalPIIMonitor:
         )
         _write_epoch(hist_new, self._hist_root(), epoch_id)
         if not had_baseline:
-            return spark.createDataFrame([], self.OUT_SCHEMA)
+            return empty_frame(spark, self.OUT_SCHEMA)
         ep = hist_new.select(
             "pii_class",
             F.col("hits").alias("epoch_hits"),

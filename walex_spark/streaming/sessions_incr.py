@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from walex_spark.session import empty_frame
 from walex_spark.streaming.dedup_incr import (
     _compact_root,
     _epoch_dirs,
@@ -114,7 +115,7 @@ class IncrementalSessionIndex:
             df = (
                 spark.read.schema(self.STATE_SCHEMA).parquet(*dirs)
                 if dirs
-                else spark.createDataFrame([], self.STATE_SCHEMA)
+                else empty_frame(spark, self.STATE_SCHEMA)
             )
         else:
             df = _read_union(spark, self._state_root(), self.STATE_SCHEMA)
