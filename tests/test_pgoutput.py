@@ -348,9 +348,11 @@ def test_decode_envelope_partitioning_equivalence(spark, tmp_path):
       boundaries, and read as 3 input partitions that each hold several
       non-adjacent files. decode_frames walks each file as one run, no
       exchange, and stamp_transactions accepts the runs as they are.
-    - Shuffled into 1, 2, 3 and 8 input partitions: the runs overlap,
-      stamp_transactions refuses them, and decode_envelope falls back
-      to the walk behind a range exchange."""
+    - Shuffled into 1, 2, 3 and 8 input partitions: one partition is
+      one run and decodes; more partitions overlap, and the decode
+      raises, naming the fix. Range-partitioned on frame_idx into as
+      many partitions (the fix), each partition is one run and the
+      decode is exact."""
     from functools import reduce
 
     import pyarrow as pa
@@ -408,10 +410,13 @@ def test_decode_envelope_partitioning_equivalence(spark, tmp_path):
                     shuffled, "frame_idx long, payload binary"
                 ).repartition(parts)
                 if parts > 1:
-                    with pytest.raises(ValueError, match="runs overlap"):
-                        stamp_transactions(decode_frames(frames, collect_registry(frames)))
-                got = _stamped(decode_envelope(frames))
-                assert got == expected, f"seed {seed}, {parts} input partitions"
+                    with pytest.raises(ValueError, match="runs overlap.*repartitionByRange"):
+                        decode_envelope(frames)
+                else:
+                    got = _stamped(decode_envelope(frames))
+                    assert got == expected, f"seed {seed}, 1 input partition"
+                got = _stamped(decode_envelope(frames.repartitionByRange(parts, "frame_idx")))
+                assert got == expected, f"seed {seed}, {parts} range partitions"
             # behind the range exchange, too, the long transaction crosses 3+ runs
             n = spark.sparkContext.defaultParallelism
             ranged = decode_frames(frames.repartitionByRange(n, "frame_idx"),
@@ -433,6 +438,78 @@ def test_decode_frames_joined_from_two_file_sources(spark, frames, tmp_path):
         spark.read.parquet(str(tmp_path / "keep")), "frame_idx"
     )
     assert _stamped(decode_envelope(joined)) == _stamped(decode_envelope(frames))
+
+
+def test_decode_frames_file_split_across_partitions(spark, tmp_path):
+    """One frame file that Spark splits by row group into several input
+    partitions decodes like the sequential walk: each split is an
+    ordered stretch of the file, so each non-empty partition is one run
+    and the runs are disjoint."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from walex_spark.sources.pgoutput import (
+        _END,
+        collect_registry,
+        decode_frames,
+        stamp_transactions,
+    )
+
+    stream, _ = _random_stream(0)
+    path = str(tmp_path / "frames.parquet")
+    pq.write_table(pa.table({
+        "frame_idx": pa.array([i for i, _ in stream], pa.int64()),
+        "payload": pa.array([p for _, p in stream], pa.binary()),
+    }), path, row_group_size=-(-len(stream) // 6))
+    assert pq.ParquetFile(path).num_row_groups == 6
+    conf = {"spark.sql.files.maxPartitionBytes": str(os.path.getsize(path) // 5),
+            "spark.sql.files.openCostInBytes": "0",
+            "spark.sql.files.minPartitionNum": "1"}
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        frames = spark.read.schema("frame_idx long, payload binary").parquet(path)
+        assert frames.rdd.getNumPartitions() == 6
+        filled = frames.select(F.spark_partition_id()).distinct().count()
+        decoded = decode_frames(frames, collect_registry(frames))
+        assert decoded.filter(F.col("kind") == _END).count() == filled > 1
+        assert _stamped(stamp_transactions(decoded)) == sorted(_sequential_stamp(stream), key=repr)
+    finally:
+        for k, v in old.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+
+
+def test_duplicate_frame_fails_loud(spark, tmp_path):
+    """A frame that arrives twice in one decode must fail it, whether
+    the copy lands in the same run or in another; decoding it would emit
+    the change twice, at two change_idx values, and dedup_replay's
+    (lsn, change_idx) key would keep both."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    payloads = [
+        frame_relation(rel_id=1, name="user"),
+        frame_begin(lsn=1000, xid=7),
+        frame_insert(rel_id=1, cells=("1", "alice")),
+        frame_commit(lsn=1000),
+    ]
+    schema = "frame_idx long, payload binary"
+    twice = spark.createDataFrame(list(enumerate(payloads)) * 2, schema).coalesce(1)
+    with pytest.raises(Exception, match="frame_idx 0 arrives twice"):
+        decode_envelope(twice)
+
+    copies = [str(tmp_path / f"copy{k}.parquet") for k in range(2)]
+    for path in copies:
+        pq.write_table(pa.table({
+            "frame_idx": pa.array(range(len(payloads)), pa.int64()),
+            "payload": pa.array(payloads, pa.binary()),
+        }), path)
+    with pytest.raises(ValueError, match="runs overlap"):
+        decode_envelope(spark.read.schema(schema).parquet(*copies))
 
 
 def test_arity_mismatch_fails_loud(spark):

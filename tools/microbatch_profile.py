@@ -6,11 +6,14 @@ store.
         [--reps R]
 
 Runs static microbatches of one trigger's worth of input files of the
-benchmark stream (seed ``SEED``) through ``perfbench/workloads.py::warm``,
-used as it is: ``WARM`` untimed passes, then ``--reps`` measured ones,
-all in one JVM. Each pass is one ``warm`` call, with a fresh workload
-object, so a ``stream_merge`` pass merges into a fresh sink directory
-and the sink's ``applied`` mark skips nothing.
+benchmark stream (seed ``SEED``) through the workload's ``process``, as
+``perfbench/workloads.py::warm`` does: ``WARM`` untimed passes, then
+``--reps`` measured ones, all in one JVM. Each pass has a fresh
+workload object, so a ``stream_merge`` pass merges into a fresh sink
+directory and the sink's ``applied`` mark skips nothing. A
+``stream_merge`` pass reads its files as one relation, as the
+streaming file source plans a microbatch (``StreamMerge.read_static``
+unions one read per file, which plans and runs slower).
 
 Each measured microbatch runs under its own Spark job group. Printed
 per microbatch: its wall time, its job count, the time inside jobs (the
@@ -99,7 +102,13 @@ def main(argv=None) -> int:
     in_dir, truth = gen.materialize(args.workload, SEED,
                                     os.path.join(bench.WORK, "inputs"), seconds=16)
     from perfbench import workloads as W
+    from walex_spark.model import CHANGE_ENVELOPE_SCHEMA
 
+    class OneRelationMerge(W.StreamMerge):
+        def read_static(self, paths):
+            return self.spark.read.schema(CHANGE_ENVELOPE_SCHEMA).parquet(*paths)
+
+    stream = OneRelationMerge if args.workload == "stream_merge" else W.WalStream
     n_files = gen.FILES_PER_TRIGGER
     work = os.path.join(bench.WORK, "profile")
     spark = W.session(bench.WORK)
@@ -110,7 +119,7 @@ def main(argv=None) -> int:
             group = f"microbatch-profile-{rep}"
             sc.setJobGroup(group, f"{args.workload} microbatch {rep}")
             try:
-                walls[group] = W.warm(spark, args.workload, in_dir, truth, work, 1, n_files)[0] * 1000
+                walls[group] = stream(spark, in_dir, truth, work).warm(1, n_files)[0] * 1000
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
         time.sleep(DRAIN_S)

@@ -9,9 +9,12 @@ surface required to run at 100 TB scale.
 Layout (mirrors SURVEY.md §7.1 build order):
   functions/   PG type casts, array-literal parsing, scalar helpers
   operators/   batch transforms: filters, diff, event projection,
-               table-state materialization, relational layer
-  sources/     change-envelope readers, incremental JDBC source
-  streaming/   transaction assembly, watermark dedup, dispatch registry
+               replay dedup, table-state materialization, relational
+               layer
+  sources/     change-envelope readers, pgoutput decode, incremental
+               JDBC source
+  streaming/   transaction assembly, dispatch engine, state sink,
+               incremental twins
   extensions/  dedup, similarity search, text analysis, multimodal
   plans/       plan inspection / explain utilities
 """

@@ -8998,8 +8998,10 @@ def q_doc_boilerplate_strip(spark, sf_dir):
 #            layout, PII-rate twin, cross-corpus decontam) + the
 #            complete 45-query r06-stale cohort (5 + 45 = 50;
 #            q_cdc_unwatched_filters and the four r10-touched queries
-#            yielded their slots — see _DRIVER_ORDER_R10's inner
-#            comment and test_driver_window.py).
+#            yielded their slots: the four were oracle-compared at
+#            sf0.01 after their change, and q_cdc_unwatched_filters'
+#            edge fixtures were value-checked through the entry path;
+#            see test_driver_window.py).
 #   r11:     (this round) q_doc_pii_scan / q_doc_pii_redact head the
 #            window — the ONLY two queries with no hard driver row in
 #            ANY round (their r10 rows were red on hash only: the
@@ -9092,284 +9094,6 @@ DRIVER_ORDER = [
     "q_doc_zipf", "q_doc_char_entropy", "q_doc_burstiness",
     "q_emb_ann_ivf", "q_multimodal_audio", "q_multimodal_meta",
     "q_doc_manifest", "q_doc_split",
-]
-
-_DRIVER_ORDER_R11 = [
-    # (a) zero-history queries — never a hard row in any round:
-    "q_doc_pii_scan", "q_doc_pii_redact",
-    # (a') r11-new queries, zero history by construction:
-    "q_doc_boilerplate", "q_doc_boilerplate_strip",
-    # (b) the r07-stale cohort (49 queries hold r07 witnesses; 46 fit;
-    # q_quantiles / q_emb_cosine_topk / q_emb_ann_lsh yield per the
-    # header note). q_cdc_unwatched_filters leads — its current
-    # fixtures have never been driver-hashed:
-    "q_cdc_unwatched_filters",
-    "q_approx_distinct", "q_array_funcs", "q_cdc_change_lag",
-    "q_cdc_changes_diff", "q_cdc_dedup_replay", "q_cdc_event_json",
-    "q_cdc_event_projection", "q_cdc_filter_events",
-    "q_cdc_latest_state", "q_cdc_pg_cast", "q_cdc_toast_resolve",
-    "q_cdc_tumbling_window", "q_cdc_txn_assembly", "q_cdc_txn_stats",
-    "q_doc_bpe_encode", "q_doc_chunks", "q_doc_decontaminate",
-    "q_doc_despan_incr", "q_doc_exact_dedup", "q_doc_fingerprint",
-    "q_doc_hash_embed", "q_doc_langid", "q_doc_pack_shards",
-    "q_doc_quality", "q_doc_redact", "q_doc_repetition",
-    "q_doc_sample", "q_doc_simhash", "q_doc_stratified_sample",
-    "q_doc_subword_tokens", "q_doc_term_scores", "q_doc_token_stats",
-    "q_doc_trigram_jaccard", "q_doc_vocab_topk",
-    "q_doc_weighted_sample", "q_doc_winnow_incr",
-    "q_emb_ann_multiprobe", "q_emb_near_dup",
-    "q_events_histogram", "q_json_funcs", "q_multimodal_frames",
-    "q_range_join_bands", "q_stats_covariance", "q_unpivot_lineitem",
-    "q_window_distinct",
-]
-
-_DRIVER_ORDER_R10 = [
-    # (a) zero-history queries (r10-new PII family + chunk layout +
-    # PII-rate incremental twin + cross-corpus decontam), head of the
-    # window — with the 45-query r06 cohort these fill all 50 slots:
-    "q_doc_pii_scan", "q_doc_pii_redact", "q_doc_chunk_manifest",
-    "q_doc_pii_incr", "q_doc_decontam_spans",
-    # Slot accounting for everything that yielded: the four r10-touched
-    # queries (source_psi/source_ks one-scan rework, drift_incr
-    # ep-stamped baseline, prefix_incr legacy-ep coalesce) each hold an
-    # r09 hard row and were oracle-compared at sf0.01 in-session after
-    # their change. q_cdc_unwatched_filters (r07 hard row, fixture
-    # gained the missing-key/NULL edge probes this round) also yields:
-    # its edge fixtures were exact-value-verified through the entry
-    # path in-session (197/197 run — strictly stronger than the
-    # driver's hash gate), and the r11 staleness rule makes its driver
-    # re-witness mandatory next round regardless.
-    # (c) the complete 45-query r06-stale cohort — after r10's files
-    # land, no registry query's last hard row is older than r07:
-    "q_bloom_semi_join", "q_cdc_incremental_agg",
-    "q_cdc_incremental_sums", "q_cdc_search_index", "q_doc_bm25",
-    "q_doc_bpe_merges", "q_doc_despan", "q_doc_dup_spans",
-    "q_doc_dup_triangles", "q_doc_edit_pairs", "q_doc_global_shuffle",
-    "q_doc_gopher", "q_doc_heavy_hitters", "q_doc_langid_eval",
-    "q_doc_leak_safe_split", "q_doc_minhash_pairs",
-    "q_doc_normalized_dedup", "q_doc_pack_sequences", "q_doc_pagerank",
-    "q_doc_quality_buckets", "q_doc_simhash_pairs", "q_doc_surprisal",
-    "q_doc_temp_mixture", "q_doc_winnow_pairs", "q_dq_expectations",
-    "q_emb_ann_recall", "q_emb_ann_recall_ivf", "q_emb_ann_sq8",
-    "q_events_cusum", "q_events_ewma", "q_events_funnel",
-    "q_events_outliers", "q_events_resample", "q_events_retention",
-    "q_events_rolling", "q_hybrid_rrf", "q_interval_overlap",
-    "q_kanon_suppress", "q_range_agg_twolevel", "q_skew_salted_agg",
-    "q_snapshot_diff", "q_stats_regression", "q_window_rank_funcs",
-    "q_window_value_funcs", "q_zorder_values",
-]
-
-_DRIVER_ORDER_R09 = [
-    "q_doc_token_ids",
-    "q01_pricing_summary", "q02_top_revenue_orders",
-    "q03_shipping_priority", "q04_order_priority", "q05_region_volume",
-    "q06_forecast_revenue", "q07_nation_volume", "q08_market_share",
-    "q09_profit_by_nation", "q10_returned_items", "q11_important_parts",
-    "q12_ship_priority_lag", "q13_order_distribution", "q14_promo_share",
-    "q15_top_supplier", "q16_supplier_counts",
-    "q17_small_quantity_revenue", "q18_large_orders",
-    "q19_disjunctive_revenue", "q20_part_stock_suppliers",
-    "q21_sole_late_supplier", "q22_idle_customers",
-    "q_anti_join", "q_case_having", "q_cdc_apply_deltas",
-    "q_cdc_sessionize", "q_cube_orders", "q_date_funcs",
-    "q_distinct_agg", "q_doc_cluster_survivors", "q_doc_normalize",
-    "q_grouping_sets", "q_pivot_status_priority", "q_profile_orders",
-    "q_rollup_lineitem", "q_scalar_funcs", "q_semi_join", "q_set_ops",
-    "q_window_lag_lead", "q_window_running_total",
-    "q_window_topn_per_group",
-    "q_doc_prefix_jaccard", "q_doc_minhash_est", "q_doc_pipeline_e2e",
-    "q_emb_ann_pq", "q_emb_ann_ivfpq",
-    "q_doc_source_ks",
-    "q_doc_source_psi", "q_doc_drift_incr",
-]
-
-_DRIVER_ORDER_R08 = [
-    # (a) zero-hard-history queries (rule below), head of the window —
-    # the eight mid-r08 additions (bigram-LM surprisal, DSIR selection,
-    # trigram novelty, JL random-projection ANN, hard-negative mining,
-    # approx-quantile bounds verdict, incremental sessionization,
-    # nDCG ranking eval) plus the two r08-start entries:
-    "q_doc_bigram_surprisal", "q_doc_dsir", "q_doc_novelty",
-    "q_emb_ann_rp", "q_emb_hard_negatives",
-    "q_approx_quantiles", "q_cdc_sessionize_incr", "q_doc_ndcg",
-    "q_doc_novelty_incr", "q_doc_wordpiece", "q_emb_label_margin",
-    "q_multimodal_features", "q_doc_prefix_incr",
-    # third-session additions, zero history:
-    "q_doc_tfidf_cosine", "q_emb_knn_eval", "q_doc_nb_classifier",
-    "q_doc_minhash_incr", "q_snm_blocking", "q_doc_diversity",
-    "q_doc_countmin", "q_doc_token_budget",
-    "q_doc_exact_dedup_incr", "q_doc_split", "q_doc_decontam_jaccard",
-    "q_emb_hamming_topk", "q_doc_token_ids", "q_doc_simhash_incr",
-    "q_multimodal_audio", "q_doc_curriculum",
-    # fourth-session additions, zero history:
-    "q_doc_zipf", "q_doc_char_entropy", "q_doc_source_overlap",
-    "q_doc_manifest", "q_doc_tok_fertility", "q_doc_burstiness",
-    "q_doc_mmr", "q_doc_manifest_incr", "q_doc_heaps",
-    "q_doc_junk_fuse", "q_doc_prf", "q_doc_dataset_card",
-    # (b) 37 of the 48 stalest queries — last hard driver row r05,
-    # three rounds of code drift (incl. this round's incremental-dedup
-    # and oracle changes) since their last witness. Seven r05 queries
-    # gave up their slots to the new zero-history entries (the rule
-    # below ranks zero-history above every repeat witness); the seven
-    # evictees, with reasons, all pure built-in Catalyst compositions
-    # with no repo operator code, hard-green in r02 AND r05, and the
-    # same rationale as r08's q_scalar_funcs eviction: q_date_funcs,
-    # q_case_having, q_distinct_agg, q_semi_join, q_set_ops,
-    # q_cube_orders, q_grouping_sets, q_pivot_status_priority,
-    # q_window_lag_lead, q_window_running_total, q_window_topn_per_group
-    # (eleventh evictee, same class). All become stale-flagged when
-    # r09's files land, so they head the r09 window.
-    # q02_top_revenue_orders / q03_shipping_priority /
-    # q04_order_priority / q05_region_volume / q06_forecast_revenue
-    # / q07_nation_volume / q08_market_share / q09_profit_by_nation
-    # / q10_returned_items / q11_important_parts /
-    # q12_ship_priority_lag gave up their slots to the eleven
-    # zero-history fourth-session additions (q_doc_zipf,
-    # q_doc_char_entropy, q_doc_source_overlap, q_doc_manifest,
-    # q_doc_tok_fertility, q_doc_burstiness, q_doc_mmr,
-    # q_doc_manifest_incr, q_doc_heaps, q_doc_junk_fuse, q_doc_prf):
-    # pure built-in TPC-H join-aggregate compositions, no repo
-    # operator code, hard-green r02 AND r05 — same evictee class as
-    # the eleven relational evictions above. Stale-flagged for the
-    # r09 window the moment r09's files land.
-    # q13_order_distribution gave up its slot to the zero-history
-    # q_doc_diversity: pure built-in join+groupBy composition, no repo
-    # operator code, hard-green r02 AND r05 — same evictee class as
-    # the eleven relational evictions above.
-    # q14_promo_share and q15_top_supplier gave up their slots to the
-    # zero-history q_doc_exact_dedup_incr / q_doc_split: pure built-in
-    # join-aggregate compositions, no repo operator code, hard-green
-    # r02 AND r05 — same evictee class as q13/q16/q19.
-    # q16_supplier_counts gave up its slot to the zero-history
-    # q_doc_countmin: pure built-in join+count-distinct composition,
-    # no repo operator code, hard-green r02 AND r05 — same evictee
-    # class as q13 above.
-    # q17_small_quantity_revenue gave up its slot to the zero-history
-    # q_doc_decontam_jaccard: pure built-in correlated-scalar-subquery
-    # join, no repo operator code, hard-green r02 AND r05.
-    # q18_large_orders gave up its slot to the zero-history
-    # q_doc_dataset_card (twelfth fourth-session addition): pure
-    # built-in join-aggregate composition, no repo operator code,
-    # hard-green r02 AND r05 — same evictee class.
-    # q19_disjunctive_revenue gave up its slot to the zero-history
-    # q_doc_token_budget: pure built-in disjunctive-filter join, no
-    # repo operator code, hard-green r02 AND r05 — same evictee class.
-    # q20_part_stock_suppliers gave up its slot to the zero-history
-    # q_emb_hamming_topk: pure built-in nested-subquery join, no repo
-    # operator code, hard-green r02 AND r05 — same evictee class.
-    # q21_sole_late_supplier gave up its slot to the zero-history
-    # q_doc_token_ids: pure built-in multi-anti/semi-join composition,
-    # no repo operator code, hard-green r02 AND r05.
-    # q22_idle_customers gave up its slot to the zero-history
-    # q_doc_simhash_incr: pure built-in NOT-EXISTS/avg-subquery
-    # composition, no repo operator code, hard-green r02 AND r05.
-    # q_anti_join gave up its slot to the zero-history q_emb_knn_eval:
-    # pure built-in LEFT ANTI join, no repo operator code, hard-green
-    # r02 AND r05 — same evictee class as the twelve others this round.
-    # q_cdc_apply_deltas gave up its slot to the zero-history
-    # q_multimodal_audio: apply_cdc_snapshot is a two-window/SMJ
-    # composition hard-green r02 AND r05 with its own unit suite
-    # (tests/test_scd.py); the audio query is brand-new mapInPandas
-    # plumbing — zero-history outranks every repeat witness.
-    # q_cdc_sessionize gave up its slot to the zero-history
-    # q_doc_curriculum: the gap-sessionization operator path also has
-    # the r08-new q_cdc_sessionize_incr twin witnessed THIS round plus
-    # its own fold-equals-batch suite; hard-green r02 AND r05.
-    "q_cdc_asof_state", "q_cdc_pgoutput_decode", "q_cdc_scd2",
-    "q_cdc_time_travel",
-    # q_doc_cluster_survivors gave up its slot to the zero-history
-    # q_doc_nb_classifier: its operator path (duplicate_clusters +
-    # survivor pick) is ALSO exercised by q_doc_dup_clusters, which
-    # keeps its slot below — no operator loses coverage.
-    # q_doc_normalize gave up its slot to the zero-history
-    # q_doc_minhash_incr: normalize_text is ALSO on the
-    # q_doc_normalized_dedup path (hard row r06) — no operator loses
-    # coverage; hard-green r02 AND r05.
-    "q_doc_dup_clusters", "q_emb_ann_ivf",
-    # q_profile_orders gave up its slot to the zero-history
-    # q_snm_blocking: the profiler also holds a hand-replica unit
-    # suite (tests/test_profile_text.py) and its r05 hard row; same
-    # evictee class as the others this round.
-    "q_emb_ann_ivf_trained", "q_emb_semantic_dedup",
-    "q_multimodal_meta",
-    # q_rollup_lineitem gave up its slot to the zero-history
-    # q_doc_tfidf_cosine (third-session addition): pure built-in
-    # ROLLUP over lineitem, no repo operator code, hard-green r02 AND
-    # r05 — same evictee class as the eleven above. Stale-flagged for
-    # the r09 window the moment r09's files land.
-]
-
-_DRIVER_ORDER_R07 = [
-    # (a) zero-driver-history queries — never in any round's window;
-    # entered the registry in r05's second session, swapped out in
-    # r06 by mistake. Head of the window, non-negotiable.
-    "q_window_distinct", "q_unpivot_lineitem", "q_array_funcs",
-    "q_json_funcs", "q_stats_covariance", "q_events_histogram",
-    "q_doc_weighted_sample",
-    # (b) r07-new queries: the incremental dedup twins + the BPE
-    # encoder (zero history beats any repeat witness).
-    "q_doc_winnow_incr", "q_doc_despan_incr", "q_doc_bpe_encode",
-    # (c) the 40 stalest queries: last hard row r04 — two rounds of
-    # code drift (incl. this round's IVF decimal-fold fix and the
-    # q_approx_distinct oracle upgrade) since their last witness.
-    "q_cdc_filter_events", "q_cdc_event_projection", "q_cdc_latest_state",
-    "q_cdc_dedup_replay", "q_cdc_changes_diff", "q_cdc_unwatched_filters",
-    "q_cdc_pg_cast", "q_cdc_txn_stats", "q_cdc_tumbling_window",
-    "q_cdc_txn_assembly", "q_cdc_toast_resolve", "q_cdc_event_json",
-    "q_doc_exact_dedup", "q_doc_trigram_jaccard", "q_doc_simhash",
-    "q_doc_token_stats", "q_doc_quality", "q_doc_langid",
-    "q_doc_fingerprint", "q_doc_subword_tokens", "q_emb_cosine_topk",
-    "q_emb_ann_lsh", "q_emb_ann_multiprobe", "q_emb_near_dup",
-    "q_multimodal_frames", "q_approx_distinct", "q_multimodal_features",
-    "q_doc_sample", "q_doc_stratified_sample", "q_doc_pack_shards",
-    "q_doc_vocab_topk", "q_cdc_change_lag", "q_doc_repetition",
-    "q_doc_decontaminate", "q_doc_chunks", "q_doc_term_scores",
-    "q_doc_redact", "q_quantiles", "q_range_join_bands",
-    "q_doc_hash_embed",
-]
-
-_DRIVER_ORDER_R06 = [
-    # (a) round-5 second-session + late additions: never had a hard
-    # driver row in ANY round.
-    "q_events_funnel", "q_events_retention", "q_window_rank_funcs",
-    "q_skew_salted_agg", "q_doc_simhash_pairs", "q_doc_normalized_dedup",
-    "q_cdc_incremental_agg", "q_emb_ann_pq", "q_emb_ann_ivfpq",
-    "q_doc_gopher", "q_doc_temp_mixture", "q_events_outliers",
-    "q_dq_expectations", "q_snapshot_diff", "q_events_rolling",
-    "q_doc_edit_pairs", "q_doc_heavy_hitters", "q_interval_overlap",
-    "q_zorder_values", "q_events_resample", "q_cdc_incremental_sums",
-    "q_bloom_semi_join",
-    "q_doc_dup_triangles", "q_doc_pagerank", "q_doc_bpe_merges",
-    # (q_window_distinct / q_unpivot_lineitem / q_array_funcs /
-    #  q_json_funcs / q_stats_covariance / q_events_histogram swapped
-    #  out for the six newest queries below: all six evictees are
-    #  single-shuffle compositions of long-stable primitives,
-    #  local-green in every session since they landed — the six
-    #  swap-ins carry the newest code and the highest drift risk)
-    # (b) round-6 new queries are appended here as they land (zero
-    # driver history beats any repeat witness).
-    "q_doc_bm25", "q_doc_surprisal", "q_doc_dup_spans",
-    "q_doc_global_shuffle", "q_doc_pack_sequences",
-    "q_emb_ann_sq8", "q_emb_ann_recall", "q_hybrid_rrf",
-    "q_doc_leak_safe_split", "q_doc_minhash_est", "q_doc_pipeline_e2e",
-    "q_window_value_funcs", "q_cdc_search_index", "q_events_ewma",
-    "q_events_cusum",
-    # (c) drift-sensitive representatives: flagship + queries whose
-    # oracles or operators were touched this round (minhash banding
-    # refactor, bench-outlier adjudication, wire codec, sessionize).
-    # (q_cdc_sessionize dropped: hard-green in BOTH r04 and r05;
-    # q01_pricing_summary dropped: entry() smoke-checks it every round;
-    # q_quantiles dropped: oracle unchanged, outlier adjudicated by
-    # qprof — zero-history queries outrank repeat witnesses)
-    # (q_range_join_bands swapped for its zero-history two-level twin)
-    # (q_cdc_pgoutput_decode swapped out: hard-green r04 AND r05)
-    "q_range_agg_twolevel", "q_emb_ann_recall_ivf", "q_doc_minhash_pairs",
-    # (d) round-6 third/fourth-pass queries — zero driver history
-    # (q_doc_weighted_sample gave up its slot too — its overflow guard
-    # is unit-pinned and the sampler maths unchanged since r05):
-    "q_doc_langid_eval", "q_doc_quality_buckets", "q_kanon_suppress",
-    "q_doc_winnow_pairs", "q_doc_prefix_jaccard", "q_stats_regression",
-    "q_doc_despan",
 ]
 
 

@@ -11,7 +11,11 @@ protocol, independent implementation).
 Spark-first decomposition — the reference decodes and assembles in one
 ordered pass (publisher.ex:57-77); here that pass runs once per run of
 the stream (an ordered stretch of one input file), and only the run
-boundaries are serial:
+boundaries are serial. The input contract: the runs are disjoint
+ranges of the stream, and each frame arrives once. A stream written
+file by file, each file a contiguous frame_idx range, meets it as
+stored; frames that arrive in another order must be range-partitioned
+on frame_idx first. Input that breaks it fails the decode:
 
   1. ``collect_registry`` — Relation/Type entries, collected FIRST from
      the (tiny) 'R'/'Y' frames and broadcast into the decode closure —
@@ -29,9 +33,8 @@ boundaries are serial:
      could not: the head rows that continue the previous run's open
      transaction, and the tail rows whose COMMIT is in a later one. It
      applies as a broadcast join of a driver-local table on the run.
-     Runs that overlap mean the input was not stored in order;
-     ``decode_envelope`` then walks once more behind a range exchange
-     on frame_idx, which makes each partition one run.
+     Runs that overlap raise: the input was not stored in order, or it
+     holds a frame twice.
 
 Unknown relation ids are dropped, matching publisher.ex:124-126.
 """
@@ -404,10 +407,10 @@ def decode_frames(frames: DataFrame, registry: dict) -> DataFrame:
     starts the next run; frames from a non-file source form one run per
     partition). A stream stored as files that each hold a contiguous
     ``frame_idx`` range thus decodes as one ordered run per file, with
-    no exchange, however the files are packed into partitions.
-    stamp_transactions checks that the runs are disjoint ranges of the
-    stream; decode_envelope re-plans the walk behind a range exchange
-    when they are not.
+    no exchange, however the files are packed into partitions. A frame
+    whose frame_idx does not rise past the one before it in its run
+    arrived twice, and raises; stamp_transactions checks that the runs
+    are disjoint ranges of the stream.
 
     The walk is the reference's transaction loop (publisher.ex:57-77):
     BEGIN opens a transaction, each change is stamped with its xid,
@@ -460,12 +463,19 @@ def decode_frames(frames: DataFrame, registry: dict) -> DataFrame:
         frame_idx, payload) triples in frame order."""
         head = next(run)
         first = head[1]
+        last = first - 1  # the previous frame's frame_idx
         incoming = (None, None, None)  # the transaction open at the run's start
         txn = incoming  # (commit_ts, lsn, xid) of the open transaction, or None
         n = 0  # changes of txn so far
         head_end = None  # "BEGIN" / "COMMIT": what ended the incoming transaction
         held: list[tuple] = []  # txn's changes, not final until its COMMIT
         for _, idx, buf in chain((head,), run):
+            if idx <= last:  # sorted, so a repeat of the previous frame
+                raise ValueError(
+                    f"pgoutput frame_idx {idx} arrives twice in one decode;"
+                    " each frame must arrive once"
+                )
+            last = idx
             tag = buf[0:1]
             if tag == b"B" or tag == b"C":
                 if txn is incoming:
@@ -516,7 +526,7 @@ def decode_frames(frames: DataFrame, registry: dict) -> DataFrame:
         yield _arrow_batch(rows, schema)
 
     try:
-        runs = frames.select("frame_idx", "payload", F.hash(F.input_file_name()).alias("file"))
+        runs = frames.select("frame_idx", "payload", F.xxhash64(F.input_file_name()).alias("file"))
     except AnalysisException as e:  # input_file_name() refuses a plan over two file sources
         if e.getCondition() != "MULTI_SOURCES_UNSUPPORTED_FOR_EXPRESSION":
             raise
@@ -535,10 +545,6 @@ _CARRY_SCHEMA = pa.schema(
         ("tail_ok", pa.bool_()),
     ]
 )
-
-
-class _RunsOverlap(ValueError):
-    """decode_frames' runs are not disjoint ranges of the stream."""
 
 
 def _carry(ends: list) -> list[tuple]:
@@ -578,10 +584,9 @@ def stamp_transactions(decoded: DataFrame) -> DataFrame:
     checkpoint, filled by the collect below: the one eager action
     here), because they are read twice. The END rows, one per run, are
     collected and ordered by each run's first frame_idx. No two runs
-    may overlap, or the walk did not see the stream in order: that
-    raises ``_RunsOverlap``, on which decode_envelope re-plans the walk
-    behind a range exchange. ``_carry`` then scans the runs on the
-    driver; its result is a driver-local Arrow table (a
+    may overlap, or the walk did not see the stream in order, or saw a
+    frame twice: that raises ``ValueError``. ``_carry`` then scans the
+    runs on the driver; its result is a driver-local Arrow table (a
     ``LocalRelation``, no Python tasks) that joins back on ``run`` as a
     broadcast, which stamps the HEAD rows and keeps the HEAD and TAIL
     rows whose transaction committed. No window and no shuffle: the
@@ -596,10 +601,11 @@ def stamp_transactions(decoded: DataFrame) -> DataFrame:
     ends.sort(key=lambda e: e.run)
     for prev, e in zip(ends, ends[1:]):
         if e.run <= prev.frame_idx:
-            raise _RunsOverlap(
+            raise ValueError(
                 f"decode_frames' runs overlap: frame_idx {prev.run}..{prev.frame_idx} "
-                f"and {e.run}..{e.frame_idx}; its input partitions are not ordered "
-                "stretches of the stream (decode_envelope range-partitions them)"
+                f"and {e.run}..{e.frame_idx}; the input holds a frame twice, or its "
+                "partitions are not ordered stretches of the stream: range-partition "
+                'it on frame_idx first, frames.repartitionByRange(n, "frame_idx")'
             )
     carry = decoded.sparkSession.createDataFrame(
         pa.Table.from_batches([_arrow_batch(_carry(ends), _CARRY_SCHEMA)])
@@ -638,14 +644,11 @@ def decode_envelope(
     collect → one ordered decode-and-stamp walk per run (decode_frames)
     → the carry across runs (stamp_transactions).
 
-    One Spark job when the frames are stored as ordered runs, as a
-    stream written file by file is: stamp_transactions' collect of the
-    END rows, which also materializes the decoded rows for the output.
-    The registry collect adds one more unless ``registry`` is given.
-    When the runs overlap (frames that arrive shuffled, or synthesized
-    out of order), the same walk runs once more behind a range exchange
-    on frame_idx and a sort, so that each partition is one contiguous
-    run; that costs the exchange's sampling job and a shuffle.
+    One Spark job: stamp_transactions' collect of the END rows, which
+    also materializes the decoded rows for the output. The registry
+    collect adds one more unless ``registry`` is given. Frames that
+    break the module doc's input contract (shuffled, or one arriving
+    twice) raise ``ValueError`` instead of decoding.
 
     ``registry``: a pre-collected versioned relation registry, as
     ``collect_registry`` returns it (e.g. over just the Relation/Type
@@ -655,9 +658,4 @@ def decode_envelope(
     materialization."""
     if registry is None:
         registry = collect_registry(frames)
-    try:
-        return stamp_transactions(decode_frames(frames, registry))
-    except _RunsOverlap:
-        n_part = frames.sparkSession.sparkContext.defaultParallelism
-        ranged = frames.select("frame_idx", "payload").repartitionByRange(n_part, "frame_idx")
-        return stamp_transactions(decode_frames(ranged, registry))
+    return stamp_transactions(decode_frames(frames, registry))
